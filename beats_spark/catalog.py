@@ -7,8 +7,12 @@ The fallback reproduces the Iceberg mechanics the pipeline depends on:
 
 - **snapshots**: every commit writes an immutable directory
   ``<root>/<name>/snap-<id>/`` and appends a manifest line (id, parent,
-  operation, row count, wall time) — the parquet analog of Iceberg's
-  snapshot log (metadata.json / snapshot list).
+  operation, row count, wall time, and the written frame's schema as
+  ``StructType`` JSON) — the parquet analog of Iceberg's snapshot log
+  (metadata.json / snapshot list). The row count is observed on the
+  write itself; the recorded schema lets every read skip parquet schema
+  inference (a Spark job per read). Manifest lines written before the
+  schema field existed have none, and reads that touch them infer.
 - **incremental reads**: ``read_incremental(processed_ids)`` returns
   only unprocessed snapshots — what Iceberg incremental scan /
   ``VERSION AS OF`` increments give, and exactly the primitive the
@@ -38,7 +42,8 @@ import uuid
 from dataclasses import dataclass
 from typing import List, Optional, Sequence, Set, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -59,6 +64,7 @@ class Snapshot:
     operation: str           # append | overwrite | compact | delete
     rows: int
     wall_time: float
+    schema: Optional[str] = None     # StructType JSON; absent in old lines
 
 
 # operations whose snapshot materializes the FULL table state, so the
@@ -125,11 +131,13 @@ class Table:
                 partition_by: Sequence[str] = ()) -> str:
         sid = uuid.uuid4().hex[:16]
         path = self._snap_dir(sid)
-        w = df.write.mode("errorifexists")
+        obs = Observation()
+        w = df.observe(obs, F.count(F.lit(1)).alias("rows")) \
+            .write.mode("errorifexists")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
-        rows = df.sparkSession.read.parquet(path).count()
+        rows = obs.get["rows"]
         # serialize concurrent local committers: take the lock FIRST,
         # then read the parent, so two writers can't both observe the
         # same current_snapshot and record duplicate parent ids
@@ -140,7 +148,8 @@ class Table:
                 snap = Snapshot(snapshot_id=sid,
                                 parent_id=self.current_snapshot(),
                                 operation=operation, rows=rows,
-                                wall_time=time.time())
+                                wall_time=time.time(),
+                                schema=df.schema.json())
                 f.write(json.dumps(snap.__dict__) + "\n")
                 f.flush()
             finally:
@@ -179,7 +188,6 @@ class Table:
         with :func:`~beats_spark.dataops.governance.purge_ids` +
         :meth:`expire_snapshots` for an RTBF purge that actually
         removes bytes."""
-        from pyspark.sql import functions as F
         kept = self.read(spark).filter(
             ~F.coalesce(F.expr(condition), F.lit(False)))
         return self._commit(kept, "delete", partition_by)
@@ -210,25 +218,58 @@ class Table:
         chain = self._live_chain(as_of)
         if not chain:
             raise ValueError(f"table {self.name!r} has no snapshots")
-        paths = [self._snap_dir(s.snapshot_id) for s in chain]
-        # additive schema evolution (Iceberg semantics): a later
-        # append may add columns; mergeSchema unions the per-snapshot
-        # schemas and older rows surface NULL for the new columns.
-        # Without it Spark takes one file's schema and silently drops
-        # the rest. Cost is one footer read per file at planning time.
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+        return self._read(spark, chain)
+
+    def pending(self, processed: Set[str]) -> List[str]:
+        """Ids of the live snapshots not in ``processed``, oldest first:
+        what a resume still has to process. Reads only the manifest."""
+        return [s.snapshot_id for s in self._live_chain()
+                if s.snapshot_id not in processed]
+
+    def read_snapshots(self, spark: SparkSession,
+                       snapshot_ids: Sequence[str]) -> DataFrame:
+        """Rows of exactly these snapshots."""
+        by_id = {s.snapshot_id: s for s in self.snapshots()}
+        return self._read(spark, [by_id[i] for i in snapshot_ids])
 
     def read_incremental(
         self, spark: SparkSession, processed: Set[str],
     ) -> Tuple[Optional[DataFrame], List[str]]:
         """(rows of unprocessed snapshots, their ids) — the resume
         scan. None when everything is processed."""
-        todo = [s for s in self._live_chain() if s.snapshot_id not in processed]
+        todo = self.pending(processed)
         if not todo:
             return None, []
-        paths = [self._snap_dir(s.snapshot_id) for s in todo]
-        return (spark.read.option("mergeSchema", "true").parquet(*paths),
-                [s.snapshot_id for s in todo])
+        return self.read_snapshots(spark, todo), todo
+
+    def _read(self, spark: SparkSession,
+              snaps: Sequence[Snapshot]) -> DataFrame:
+        paths = [self._snap_dir(s.snapshot_id) for s in snaps]
+        schema = _union_schema(snaps)
+        if schema is not None:
+            return spark.read.schema(schema).parquet(*paths)
+        # additive schema evolution (Iceberg semantics): a later
+        # append may add columns; mergeSchema unions the per-snapshot
+        # schemas and older rows surface NULL for the new columns.
+        # Without it Spark takes one file's schema and silently drops
+        # the rest. Cost is a Spark job reading every file's footer.
+        return spark.read.option("mergeSchema", "true").parquet(*paths)
+
+
+def _union_schema(snaps: Sequence[Snapshot]) -> Optional[StructType]:
+    """The additive union of the snapshots' recorded schemas, columns in
+    first-seen order; older rows read NULL for columns added later.
+    None when a snapshot has no recorded schema or two snapshots give a
+    column different types: the read then infers, as mergeSchema
+    decides those cases."""
+    fields = {}
+    for s in snaps:
+        if s.schema is None:
+            return None
+        for f in StructType.fromJson(json.loads(s.schema)).fields:
+            if fields.setdefault(f.name, f).dataType != f.dataType:
+                return None
+    return StructType(list(fields.values()))
 
 
 class Catalog:

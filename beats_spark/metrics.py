@@ -8,16 +8,30 @@ per pipeline client (``libbeat/publisher/pipeline/monitoring.go:87-113``,
 Here counters ride the single write action via ``DataFrame.observe`` —
 zero extra scans at any scale. Per-sink acked counts are conditional
 sums over the routed ``sink`` column.
+
+The run's counter and lineage rows are a few dozen values the driver
+already holds, so the driver writes them itself: one parquet file per
+run with pyarrow, written to a dot-prefixed temporary name (which Spark
+readers skip) and renamed into place. No Spark job is spent on them, and
+the files read with ``spark.read.parquet`` next to the parts older runs
+wrote through Spark. The directories must be on the local filesystem,
+as the watermark log already is.
 """
 
 from __future__ import annotations
 
+import os
+import unicodedata
 from typing import Dict, List, Tuple
+from urllib.parse import quote, unquote
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import Observation
 
-__all__ = ["attach_observation", "metrics_rows", "write_metrics"]
+__all__ = ["attach_observation", "metrics_rows", "write_metrics",
+           "write_lineage"]
 
 
 def attach_observation(
@@ -57,7 +71,64 @@ def metrics_rows(obs: Observation, extra: Dict[str, int] | None = None
 
 def write_metrics(spark: SparkSession, rows: List[Tuple[str, int]],
                   path: str, run_id: str) -> None:
-    df = spark.createDataFrame(
-        [(run_id, k, v) for k, v in rows],
-        "run_id string, name string, value bigint")
-    df.coalesce(1).write.mode("append").parquet(path)
+    """Write the run's ``(run_id, name, value)`` counter rows under
+    ``path`` as one driver-written file. ``spark`` is not used; it stays
+    in the signature for existing callers. Rewriting a run id replaces
+    that run's counters instead of adding a second copy."""
+    _write_run_file(pa.table({
+        "run_id": pa.array([run_id] * len(rows), pa.string()),
+        "name": pa.array([k for k, _ in rows], pa.string()),
+        "value": pa.array([v for _, v in rows], pa.int64()),
+    }), path, run_id)
+
+
+def write_lineage(routed_path: str, path: str, run_id: str) -> None:
+    """Write one ``(sink, file, count, run_id)`` row per non-empty file
+    of the committed ``routed_path/sink=<name>/`` output, counted from
+    the parquet footers. ``file`` is the string Spark's
+    ``input_file_name()`` gives for that file."""
+    rows = []
+    for part in sorted(os.listdir(routed_path)):
+        if not part.startswith("sink="):
+            continue
+        value = part[len("sink="):]
+        sink = None if value == "__HIVE_DEFAULT_PARTITION__" else unquote(value)
+        part_dir = os.path.join(routed_path, part)
+        for name in sorted(os.listdir(part_dir)):
+            if name.startswith((".", "_")) or not name.endswith(".parquet"):
+                continue
+            f = os.path.join(part_dir, name)
+            n = pq.read_metadata(f).num_rows
+            if n:
+                rows.append((sink, _file_uri(f), n, run_id))
+    sinks, files, counts, run_ids = zip(*rows) if rows else ([],) * 4
+    _write_run_file(pa.table({
+        "sink": pa.array(sinks, pa.string()),
+        "file": pa.array(files, pa.string()),
+        "count": pa.array(counts, pa.int64()),
+        "run_id": pa.array(run_ids, pa.string()),
+    }), path, run_id)
+
+
+# characters java.net.URI leaves unquoted in a path, besides letters and
+# digits; Hadoop builds the file URIs Spark reports with it
+_URI_SAFE = "-_.!~*'(),;:$&+=/@"
+
+
+def _file_uri(path: str) -> str:
+    """``file://`` URI of a local path, quoted as Spark quotes it: ``=``
+    and the other URI punctuation stay as they are, and non-ASCII
+    letters are kept (``pathlib.Path.as_uri`` would quote both)."""
+    def q(c: str) -> str:
+        if c.isascii() or unicodedata.category(c) in ("Zs", "Zl", "Zp", "Cc"):
+            return quote(c, safe=_URI_SAFE)
+        return c
+    return "file://" + "".join(q(c) for c in os.path.abspath(path))
+
+
+def _write_run_file(table: pa.Table, path: str, run_id: str) -> None:
+    os.makedirs(path, exist_ok=True)
+    final = os.path.join(path, f"part-{run_id}.parquet")
+    tmp = os.path.join(path, f".part-{run_id}.parquet.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, final)

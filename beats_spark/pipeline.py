@@ -12,17 +12,22 @@ Stage → reference mapping:
    (``dissect/processor.go``); parse failures → dead-letter route.
 4. timestamp: layout parse of the extracted ts
    (``timestamp/timestamp.go:87``).
-5. enrich: broadcast joins on host and lang — add_fields/geoip/dns
-   emulation (SURVEY.md §2.5).
+5. enrich: lookups on host and lang — add_fields/geoip/dns emulation
+   (SURVEY.md §2.5). A small lookup is collected once per lookup frame
+   and folded into the plan as a ``key → struct`` map literal, so a run
+   spends no job on it; a larger one is a broadcast join
+   (``broadcast_enrich``).
 6. route: outil first-match-wins selector → ``sink`` column
    (``outil/select.go:209``).
 7. output: ONE pass, ``partitionBy(sink)`` — all sinks written in a
    single action with counters observed on it (vs. the reference's
    queue + per-output workers; Spark's shuffle-free dynamic partition
-   write is the batch analog).
+   write is the batch analog). That write is the only Spark job a run
+   issues: the driver writes the counters and the lineage (from the
+   committed files' parquet footers) and the watermark itself.
 
 Scale notes: the only shuffle in the whole plan is none at all — parse
-and enrich are map-side (broadcast), the routed write is
+and enrich are map-side (map literal or broadcast), the routed write is
 partition-local. Hot-host skew therefore costs nothing here; it matters
 only for host-keyed aggregations (see mlops/bench), where AQE +
 salting handle it.
@@ -30,20 +35,26 @@ salting handle it.
 
 from __future__ import annotations
 
+import json
 import os
+import weakref
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional
+from typing import Dict, List, Mapping, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import (
+    ArrayType, BooleanType, DoubleType, FloatType, IntegralType, StringType,
+    StructField, StructType)
 
 from .checkpoint import Watermarks, new_run_id, snapshot_id_of
 from .parse import parse_pages
-from .metrics import attach_observation, metrics_rows, write_metrics
-from .processors.enrich import broadcast_enrich
+from .metrics import (attach_observation, metrics_rows, write_lineage,
+                      write_metrics)
+from .processors.enrich import broadcast_enrich, enrich_assigns
 from .routing import route
 
 __all__ = ["build_events", "build_routed", "run_pipeline", "SINKS",
-           "TOKENIZER"]
+           "TOKENIZER", "FOLD_MAX_ROWS"]
 
 TOKENIZER = 'ts=%{ts} level=%{level} host=%{host} bytes=%{bytes|long} msg="%{msg}"'
 SINKS = ["sink_es", "sink_ls", "sink_dropped", "sink_deadletter"]
@@ -62,23 +73,110 @@ def build_events(pages: DataFrame) -> DataFrame:
     return events.drop("ts")
 
 
+# Lookups of at most this many rows are folded into the plan; larger
+# ones are broadcast joins. Spark looks a key up in a map literal by a
+# linear scan. Measured on a 4-vCPU VM (local[4], pyspark 4.1, 2M string
+# keys, 3 looked-up columns): the folded lookup costs ~0.1 µs per row at
+# 16 keys, ~0.4 µs at 512 and ~0.9 µs at 1024, against ~0.1 µs for a
+# broadcast probe, but every broadcast join costs its run ~0.3 s of
+# jobs. At 1024 keys the fold is still cheaper for runs of up to ~400k
+# events (a snapshot run here is 1k–32k); at 2048 keys (~1.3 µs) the
+# break-even falls to ~240k.
+FOLD_MAX_ROWS = 1024
+
+# lookup frame → {(key, source columns): map literal, or None when the
+# lookup cannot be folded}. Weakly keyed, so an entry lives exactly as
+# long as its frame; two threads planning over a new frame at once both
+# build the same literal, and either may be kept.
+_folded: "weakref.WeakKeyDictionary[DataFrame, dict]" = \
+    weakref.WeakKeyDictionary()
+
+
+def _json_typed(dt) -> bool:
+    """Whether values of this type survive the JSON round trip exactly."""
+    return dt == StringType() or isinstance(
+        dt, (IntegralType, BooleanType, FloatType, DoubleType))
+
+
+def _folded_lookup(lookup: DataFrame, key: str,
+                   fields: Mapping[str, str]) -> Optional[Column]:
+    """``lookup`` as a ``key → struct(v0, v1, ...)`` map literal over its
+    ``fields`` source columns, or None when it has more than
+    ``FOLD_MAX_ROWS`` rows or a type the literal cannot carry. Collected
+    once per lookup frame object; the first row of a duplicated key
+    wins and null keys are dropped, as no join matches them."""
+    cache = _folded.setdefault(lookup, {})
+    ck = (key, tuple(fields))
+    if ck in cache:
+        return cache[ck]
+    sel = lookup.select(key, *fields)
+    types = [f.dataType for f in sel.schema.fields]
+    folded = None
+    if ((types[0] == StringType() or isinstance(types[0], IntegralType))
+            and all(_json_typed(t) for t in types[1:])):
+        rows = sel.limit(FOLD_MAX_ROWS + 1).collect()
+        if len(rows) <= FOLD_MAX_ROWS:
+            entries: Dict = {}
+            for r in rows:
+                if r[0] is not None:
+                    entries.setdefault(r[0], r[1:])
+            value_type = StructType([StructField(f"v{i}", t)
+                                     for i, t in enumerate(types[1:])])
+            payload = json.dumps([
+                {"k": k, "v": {f"v{i}": x for i, x in enumerate(v)}}
+                for k, v in entries.items()])
+            # one string literal: the optimizer folds the parse into a
+            # map literal, so the plan carries no per-row JSON work
+            folded = F.map_from_entries(F.from_json(F.lit(payload), ArrayType(
+                StructType([StructField("k", types[0]),
+                            StructField("v", value_type)]))))
+    cache[ck] = folded
+    return folded
+
+
+def _enrich(events: DataFrame, lookup: DataFrame, on: str,
+            fields: Mapping[str, str],
+            tag_on_failure: Optional[str] = None) -> DataFrame:
+    """``broadcast_enrich(action="append")`` keyed on the ``on`` column
+    of both frames, with the lookup folded into the plan when it is
+    small. A miss (no key, or a null key) leaves the fields null and
+    tags ``tag_on_failure``; column order and values match the join.
+
+    The folded data is the lookup frame's content when first seen: a
+    caller who wants fresh lookup data passes a new frame."""
+    folded = _folded_lookup(lookup, on, fields)
+    if (folded is None
+            or events.schema[on].dataType != lookup.schema[on].dataType):
+        return broadcast_enrich(events, lookup, on=on, lookup_key=on,
+                                fields=fields, action="append",
+                                tag_on_failure=tag_on_failure)
+    hit = folded[F.col(on)]
+    return events.withColumns(enrich_assigns(
+        events.columns, [hit.getField(f"v{i}") for i in range(len(fields))],
+        hit.isNull(), fields, "append", tag_on_failure))
+
+
 def build_routed(pages: DataFrame, host_meta: DataFrame,
                  lang_meta: DataFrame) -> DataFrame:
-    """Full parse → enrich → route plan (lazy)."""
+    """Full parse → enrich → route plan (lazy).
+
+    Lookups of at most ``FOLD_MAX_ROWS`` rows are collected the first
+    time this sees the lookup frame and become map literals in the
+    plan; later plans reuse them without a Spark job. A caller who
+    wants fresh lookup data passes a new frame."""
     events = build_events(pages)
 
     # enrich: geo/dns-ish lookup on host (dns/dns.go:80 append semantics,
     # tag_on_failure), label lookup on lang
-    events = broadcast_enrich(
-        events, host_meta, on="host", lookup_key="host",
+    events = _enrich(
+        events, host_meta, on="host",
         fields={"geo_country": "geo_country", "geo_city": "geo_city",
                 "asn": "asn", "resolved_ip": "resolved_ip",
                 "registered_domain": "registered_domain"},
-        action="append", tag_on_failure="host_meta_miss")
-    events = broadcast_enrich(
-        events, lang_meta, on="lang", lookup_key="lang",
-        fields={"lang_label": "lang_label", "sink_hint": "sink_hint"},
-        action="append")
+        tag_on_failure="host_meta_miss")
+    events = _enrich(
+        events, lang_meta, on="lang",
+        fields={"lang_label": "lang_label", "sink_hint": "sink_hint"})
 
     # deterministic event id (fingerprint/fingerprint.go:72)
     events = events.withColumn(
@@ -121,9 +219,12 @@ def run_pipeline(
     Output layout::
 
         out_dir/runs/<run_id>/routed/sink=<name>/*.parquet
-        out_dir/metrics/            (run_id, name, value)
-        out_dir/lineage/            (run_id, sink, src partition, count)
+        out_dir/metrics/part-<run_id>.parquet   (run_id, name, value)
+        out_dir/lineage/part-<run_id>.parquet   (sink, file, count, run_id)
         out_dir/_watermarks/<run_id>.json
+
+    The routed write is the run's only Spark job; the counters, lineage
+    and watermark are written by the driver after it.
     """
     run_id = run_id or new_run_id()
     if snapshot_id is None:
@@ -152,15 +253,9 @@ def run_pipeline(
     result.metrics = dict(rows)
 
     if lineage:
-        # read back the written files: column-pruned count per output
-        # partition — cheap parquet-footer work, no recompute of the plan
-        written = spark.read.parquet(routed_path)
-        lin = (written
-               .groupBy("sink", F.input_file_name().alias("file"))
-               .count()
-               .withColumn("run_id", F.lit(run_id)))
-        lin.coalesce(1).write.mode("append").parquet(
-            os.path.join(out_dir, "lineage"))
+        # per committed output file: its sink and its row count from the
+        # parquet footer — driver work, no Spark job
+        write_lineage(routed_path, os.path.join(out_dir, "lineage"), run_id)
 
     wm.record(snapshot_id, run_id, result.metrics.get("events.total", 0))
     return result
@@ -194,26 +289,23 @@ def run_pipeline_incremental(
     cost of one write job per snapshot. Returns the last run, with the
     per-run list in ``.sub_runs``."""
     wm = Watermarks(out_dir)
-    processed = set(wm.processed_snapshots())
-    pages, todo_ids = pages_table.read_incremental(spark, processed)
-    if pages is None:
-        r = PipelineRun(run_id=new_run_id(), out_dir=out_dir, skipped=True)
-        return r
+    todo_ids = pages_table.pending(set(wm.processed_snapshots()))
+    if not todo_ids:
+        return PipelineRun(run_id=new_run_id(), out_dir=out_dir, skipped=True)
 
     if per_snapshot:
         runs = []
         for sid in todo_ids:
-            snap = spark.read.parquet(pages_table._snap_dir(sid))
             runs.append(run_pipeline(
-                spark, snap, host_meta, lang_meta, out_dir,
-                snapshot_id=sid, resume=False))
+                spark, pages_table.read_snapshots(spark, [sid]), host_meta,
+                lang_meta, out_dir, snapshot_id=sid, resume=False))
         result = runs[-1]
         result.sub_runs = runs
         return result
 
     result = run_pipeline(
-        spark, pages, host_meta, lang_meta, out_dir,
-        snapshot_id=todo_ids[0], resume=False)
+        spark, pages_table.read_snapshots(spark, todo_ids), host_meta,
+        lang_meta, out_dir, snapshot_id=todo_ids[0], resume=False)
     for sid in todo_ids[1:]:
         # count 0: the combined batch total is already recorded against
         # todo_ids[0]; repeating it per snapshot would inflate sums

@@ -17,7 +17,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from . import ProcResult, register
 
-__all__ = ["broadcast_enrich", "cidr_enrich", "registered_domain_col", "url_host"]
+__all__ = ["broadcast_enrich", "cidr_enrich", "enrich_assigns",
+           "registered_domain_col", "url_host"]
 
 
 def url_host(col: Column) -> Column:
@@ -45,23 +46,37 @@ def broadcast_enrich(
         F.col(src).alias(f"__v_{i}") for i, src in enumerate(fields)]
     right = lookup.select(*sel).dropDuplicates(["__k"])
     joined = df.join(F.broadcast(right), df[on] == F.col("__k"), "left")
+    out = joined.withColumns(enrich_assigns(
+        df.columns, [F.col(f"__v_{i}") for i in range(len(fields))],
+        F.col("__k").isNull(), fields, action, tag_on_failure))
+    return out.drop("__k", *[f"__v_{i}" for i in range(len(fields))])
 
+
+def enrich_assigns(
+    columns: Sequence[str],
+    values: Sequence[Column],
+    miss: Column,
+    fields: Mapping[str, str],
+    action: str = "append",
+    tag_on_failure: str | None = None,
+) -> dict:
+    """The output columns of an enrich, whatever the lookup mechanism:
+    ``values[i]`` is the looked-up value of the i-th entry of ``fields``
+    and ``miss`` is true on rows without a lookup match. ``columns`` are
+    the input frame's columns."""
     assigns = {}
-    for i, (src, dst) in enumerate(fields.items()):
-        new = F.col(f"__v_{i}")
-        if action == "append" and dst in df.columns:
+    for new, dst in zip(values, fields.values()):
+        if action == "append" and dst in columns:
             assigns[dst] = F.coalesce(F.col(dst), new)
         else:
             assigns[dst] = new
     if tag_on_failure:
-        miss = F.col("__k").isNull()
         prev = (F.coalesce(F.col("log_flags"), F.array().cast("array<string>"))
-                if "log_flags" in df.columns else F.array().cast("array<string>"))
+                if "log_flags" in columns else F.array().cast("array<string>"))
         assigns["log_flags"] = F.when(
             miss, F.array_union(prev, F.array(F.lit(tag_on_failure)))
         ).otherwise(prev)
-    out = joined.withColumns(assigns)
-    return out.drop("__k", *[f"__v_{i}" for i in range(len(fields))])
+    return assigns
 
 
 @register("dns")

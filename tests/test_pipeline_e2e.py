@@ -140,12 +140,13 @@ def test_lineage_written(spark, run):
 def test_single_python_stage_in_plan(spark, frames):
     """Scale guard: the whole parse stage must collapse into ONE
     ArrowEvalPython node (multiline + dissect are two UDFs but must not
-    multiply), and the enrich joins must be broadcasts."""
+    multiply), and the fixture lookups must be folded into the plan: no
+    join and no exchange of any kind."""
     pages, hm, lm = frames
     plan = build_routed(pages, hm, lm)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") + plan.count("MapInPandas") == 1
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    for node in ("Exchange", "SortMergeJoin", "BroadcastHashJoin"):
+        assert node not in plan, node
 
 
 def test_gzip_source_chain_parity(spark, tmp_path):
