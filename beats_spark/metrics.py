@@ -7,7 +7,9 @@ per pipeline client (``libbeat/publisher/pipeline/monitoring.go:87-113``,
 
 Here counters ride the single write action via ``DataFrame.observe`` —
 zero extra scans at any scale. Per-sink acked counts are conditional
-sums over the routed ``sink`` column.
+sums over the routed ``sink`` column. These are the only counter names:
+batch runs, snapshot runs and streaming micro-batches all record them
+through ``beats_spark.pipeline.commit``.
 
 The run's counter and lineage rows are a few dozen values the driver
 already holds, so the driver writes them itself: one parquet file per
@@ -22,7 +24,7 @@ from __future__ import annotations
 
 import os
 import unicodedata
-from typing import Dict, List, Tuple
+from typing import List, Tuple
 from urllib.parse import quote, unquote
 
 import pyarrow as pa
@@ -34,37 +36,31 @@ __all__ = ["attach_observation", "metrics_rows", "write_metrics",
            "write_lineage"]
 
 
-def attach_observation(
-    df: DataFrame,
-    sinks: List[str],
-    sink_col: str = "sink",
-    failed_flag: str = "dissect_parsing_error",
-) -> Tuple[DataFrame, Observation]:
-    """Attach Beats-named counters to the frame; read them after the
-    write action completes."""
+def attach_observation(df: DataFrame, sinks: List[str]
+                       ) -> Tuple[DataFrame, Observation]:
+    """Attach Beats-named counters to the routed frame; read them after
+    the write action completes."""
     obs = Observation("pipeline")
     flags = (F.col("log_flags") if "log_flags" in df.columns
              else F.array().cast("array<string>"))
     exprs = [
         F.count(F.lit(1)).alias("events.total"),
-        F.sum(F.when(F.array_contains(flags, failed_flag), 1).otherwise(0))
+        F.sum(F.when(F.array_contains(flags, "dissect_parsing_error"), 1)
+               .otherwise(0))
          .alias("events.failed"),
     ]
     for s in sinks:
         exprs.append(
-            F.sum(F.when(F.col(sink_col) == s, 1).otherwise(0))
+            F.sum(F.when(F.col("sink") == s, 1).otherwise(0))
              .alias(f"output.{s}.events.acked"))
     return df.observe(obs, *exprs), obs
 
 
-def metrics_rows(obs: Observation, extra: Dict[str, int] | None = None
-                 ) -> List[Tuple[str, int]]:
+def metrics_rows(obs: Observation) -> List[Tuple[str, int]]:
     got = dict(obs.get)
     # events.published = total - dropped-by-filter happens upstream;
     # within the routed frame everything observed was published to a sink
     got["events.published"] = got.get("events.total", 0)
-    if extra:
-        got.update(extra)
     # sum() over zero rows observes null — an empty input is 0 events
     return sorted((k, int(v or 0)) for k, v in got.items())
 

@@ -19,12 +19,14 @@ Stage → reference mapping:
    (``broadcast_enrich``).
 6. route: outil first-match-wins selector → ``sink`` column
    (``outil/select.go:209``).
-7. output: ONE pass, ``partitionBy(sink)`` — all sinks written in a
-   single action with counters observed on it (vs. the reference's
-   queue + per-output workers; Spark's shuffle-free dynamic partition
-   write is the batch analog). That write is the only Spark job a run
-   issues: the driver writes the counters and the lineage (from the
-   committed files' parquet footers) and the watermark itself.
+7. output: ``commit`` — ONE pass, ``partitionBy(sink)``, all sinks
+   written in a single action with counters observed on it (vs. the
+   reference's queue + per-output workers; Spark's shuffle-free dynamic
+   partition write is the batch analog). That write is the only Spark
+   job: the driver writes the counters and the lineage (from the
+   committed files' parquet footers), and a batch run its watermark.
+   Batch runs, snapshot runs and streaming micro-batches all commit
+   through it, as every Beats input publishes through one output path.
 
 Scale notes: the only shuffle in the whole plan is none at all — parse
 and enrich are map-side (map literal or broadcast), the routed write is
@@ -53,7 +55,7 @@ from .metrics import (attach_observation, metrics_rows, write_lineage,
 from .processors.enrich import broadcast_enrich, enrich_assigns
 from .routing import route
 
-__all__ = ["build_events", "build_routed", "run_pipeline", "SINKS",
+__all__ = ["build_events", "build_routed", "commit", "run_pipeline", "SINKS",
            "TOKENIZER", "FOLD_MAX_ROWS"]
 
 TOKENIZER = 'ts=%{ts} level=%{level} host=%{host} bytes=%{bytes|long} msg="%{msg}"'
@@ -203,6 +205,32 @@ class PipelineRun:
     sub_runs: Optional[list] = None
 
 
+def commit(routed: DataFrame, routed_path: str, out_dir: str, run_id: str,
+           lineage: bool = True) -> Dict[str, int]:
+    """Land a routed frame and return its counters: the one sink-commit
+    routine of batch runs, snapshot runs and streaming micro-batches.
+
+    One ``partitionBy(sink)`` overwrite of ``routed_path`` (rewriting
+    the same path replaces it) with the counters observed on it; then
+    the driver writes them to ``out_dir/metrics/part-<run_id>.parquet``
+    and, with ``lineage``, the committed files' row counts to
+    ``out_dir/lineage/part-<run_id>.parquet``. The write is the only
+    Spark job, and rerunning a ``run_id`` leaves one copy of each.
+
+    ``output.<sink>.events.acked`` covers the four ``SINKS``. Rows a
+    ``sink_hint`` routes elsewhere are written, appear in lineage and
+    in ``events.total``, but have no acked counter.
+    """
+    routed, obs = attach_observation(routed, SINKS)
+    routed.write.mode("overwrite").partitionBy("sink").parquet(routed_path)
+    rows = metrics_rows(obs)
+    write_metrics(routed.sparkSession, rows, os.path.join(out_dir, "metrics"),
+                  run_id)
+    if lineage:
+        write_lineage(routed_path, os.path.join(out_dir, "lineage"), run_id)
+    return dict(rows)
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -240,23 +268,10 @@ def run_pipeline(
         result.skipped = True
         return result
 
-    routed = build_routed(pages, host_meta, lang_meta)
-    routed, obs = attach_observation(routed, SINKS)
-
-    routed_path = os.path.join(out_dir, "runs", run_id, "routed")
-    (routed.write.mode("overwrite")          # idempotent per-run prefix
-           .partitionBy("sink")
-           .parquet(routed_path))
-
-    rows = metrics_rows(obs)
-    write_metrics(spark, rows, os.path.join(out_dir, "metrics"), run_id)
-    result.metrics = dict(rows)
-
-    if lineage:
-        # per committed output file: its sink and its row count from the
-        # parquet footer — driver work, no Spark job
-        write_lineage(routed_path, os.path.join(out_dir, "lineage"), run_id)
-
+    result.metrics = commit(
+        build_routed(pages, host_meta, lang_meta),
+        os.path.join(out_dir, "runs", run_id, "routed"), out_dir, run_id,
+        lineage=lineage)
     wm.record(snapshot_id, run_id, result.metrics.get("events.total", 0))
     return result
 

@@ -16,10 +16,14 @@ The reference's streaming semantics map as:
   processingTime for tailing).
 
 The same parse → enrich → route expression pipeline from
-``beats_spark.pipeline`` is reused verbatim — mapInPandas, broadcast
-joins and the when-chain router are all streaming-safe, so batch and
-streaming share one implementation (the design goal the reference gets
-by running the same processor chain under every input).
+``beats_spark.pipeline`` is reused verbatim — mapInPandas, lookups
+folded into the plan (or broadcast joins for large ones) and the
+when-chain router are all streaming-safe — and each micro-batch lands
+through the batch run's ``commit``: one routed write with its counters
+observed on it, then driver-written counters and lineage. Batch and
+streaming therefore share one implementation end to end, the design
+goal the reference gets by running the same processor chain and
+output path under every input.
 """
 
 from __future__ import annotations
@@ -32,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..pipeline import build_routed
+from ..pipeline import build_routed, commit
 
 __all__ = ["PAGES_SCHEMA", "stream_routed", "run_stream_pipeline",
            "windowed_counters", "stateful_rate_limit",
@@ -91,15 +95,11 @@ def _nullable_ints(series):
 
 
 def stream_routed(spark: SparkSession, input_path: str,
-                  host_meta: DataFrame, lang_meta: DataFrame,
-                  max_files_per_trigger: Optional[int] = None) -> DataFrame:
+                  host_meta: DataFrame, lang_meta: DataFrame) -> DataFrame:
     """Streaming pages source → routed event stream (lazy). The file
     source is the harvester: each discovered file ≈ one harvested log,
     offsets tracked in the checkpoint instead of the registry."""
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pages = reader.parquet(input_path)
+    pages = spark.readStream.schema(PAGES_SCHEMA).parquet(input_path)
     return build_routed(pages, host_meta, lang_meta)
 
 
@@ -114,43 +114,24 @@ def run_stream_pipeline(
 ):
     """Start (and for availableNow: drain) the streaming pipeline.
 
-    Per micro-batch: one ``partitionBy(sink)`` parquet write plus a
-    metrics row per sink — the foreachBatch body is idempotent per
-    ``batch_id`` (overwrite of the batch's own output prefix), which
-    with the checkpoint offset log gives effectively-once delivery.
+    Each micro-batch is committed by ``beats_spark.pipeline.commit``,
+    as a batch run is, under run id ``batch-<id>``::
+
+        out_dir/routed/batch=<id>/sink=<name>/*.parquet
+        out_dir/metrics/part-batch-<id>.parquet   (run_id, name, value)
+        out_dir/lineage/part-batch-<id>.parquet   (sink, file, count, run_id)
+
+    The routed write is the micro-batch's only Spark job. A replayed
+    batch id rewrites its own three outputs, which with the checkpoint
+    offset log gives effectively-once delivery.
     Returns the StreamingQuery (already awaited when available_now).
     """
     checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
     routed = stream_routed(spark, input_path, host_meta, lang_meta)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # both actions (routed write + metrics agg) read this frame:
-        # unpersisted, the whole parse->enrich->route plan (incl. the
-        # Python parse stage) would execute twice per micro-batch;
-        # unpersist in finally so a failed write doesn't pin the
-        # cached batch for the session lifetime
-        batch_df.persist()
-        try:
-            _write_batch_inner(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    def _write_batch_inner(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.write.mode("overwrite")
-                 .partitionBy("sink")
-                 .parquet(os.path.join(out_dir, "routed",
-                                       f"batch={batch_id}")))
-        counts = (batch_df.groupBy("sink")
-                  .agg(F.count(F.lit(1)).alias("value"))
-                  .withColumn("batch_id", F.lit(batch_id))
-                  .withColumn("metric", F.concat(F.lit("events.acked."),
-                                                 F.col("sink"))))
-        # per-batch overwrite prefix — a replayed batch rewrites its own
-        # metrics instead of appending duplicates (effectively-once)
-        (counts.select("batch_id", "metric", "value")
-               .coalesce(1).write.mode("overwrite")
-               .parquet(os.path.join(out_dir, "metrics",
-                                     f"batch={batch_id}")))
+        commit(batch_df, os.path.join(out_dir, "routed", f"batch={batch_id}"),
+               out_dir, f"batch-{batch_id}")
 
     writer = (routed.writeStream
               .foreachBatch(write_batch)

@@ -5,11 +5,12 @@ rate limit bounds per-key-per-second output."""
 import glob
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from beats_spark.fixtures import pages, host_meta, lang_meta
-from beats_spark.pipeline import build_routed
+from beats_spark.pipeline import SINKS, build_routed
 from beats_spark.streaming import (
     run_stream_pipeline, stream_routed, windowed_counters,
     stateful_rate_limit,
@@ -37,15 +38,60 @@ def test_stream_matches_batch_and_resumes(spark, pages_dir, tmp_path):
               .groupBy("sink").count().collect()}
     assert got == expect
 
-    metrics = spark.read.parquet(os.path.join(out, "metrics"))
-    acked = {r["metric"]: r["value"] for r in metrics.collect()}
-    assert acked[f"events.acked.sink_es"] == expect["sink_es"]
+    counters = {r["name"]: r["total"] for r in
+                spark.read.parquet(os.path.join(out, "metrics"))
+                .groupBy("name").agg(F.sum("value").alias("total")).collect()}
+    for s in SINKS:
+        assert counters[f"output.{s}.events.acked"] == expect.get(s, 0)
+    assert counters["events.total"] == routed.count()
 
     # resume: same checkpoint, no new files → no new batches written
     before = set(glob.glob(os.path.join(out, "routed", "batch=*")))
     run_stream_pipeline(spark, pages_dir, hm, lm, out)
     after = set(glob.glob(os.path.join(out, "routed", "batch=*")))
     assert before == after
+
+
+def test_stream_commit_is_one_job_and_replays_once(spark, pages_dir,
+                                                   tmp_path):
+    """A micro-batch commits like a batch run: the routed write is its
+    only Spark job, and a replayed batch id leaves one copy of its
+    counters and lineage."""
+    out = str(tmp_path / "out")
+    hm, lm = host_meta(spark), lang_meta(spark)
+    metrics_file = os.path.join(out, "metrics", "part-batch-0.parquet")
+
+    def drain_jobs() -> int:
+        q = run_stream_pipeline(spark, pages_dir, hm, lm, out)
+        # the stream thread runs its jobs under the query's runId group
+        return len(spark.sparkContext.statusTracker()
+                   .getJobIdsForGroup(str(q.runId)))
+
+    assert drain_jobs() == 1
+    first = pq.read_table(metrics_file).to_pylist()
+
+    # drop batch 0's commit marker: the restarted query replays batch 0
+    commits = os.path.join(out, "_checkpoint", "commits")
+    os.remove(os.path.join(commits, "0"))
+    os.remove(os.path.join(commits, ".0.crc"))
+    assert drain_jobs() == 1
+    assert os.path.exists(os.path.join(commits, "0"))
+
+    for d in ("metrics", "lineage"):
+        assert os.listdir(os.path.join(out, d)) == ["part-batch-0.parquet"]
+    assert pq.read_table(metrics_file).to_pylist() == first
+    counters = {r["name"]: r["value"] for r in first}
+
+    routed = {r["sink"]: r["count"] for r in
+              spark.read.parquet(os.path.join(out, "routed", "batch=0"))
+              .groupBy("sink").count().collect()}
+    lineage = {r["sink"]: r["n"] for r in
+               spark.read.parquet(os.path.join(out, "lineage"))
+               .groupBy("sink").agg(F.sum("count").alias("n")).collect()}
+    assert lineage == routed
+    for s in SINKS:
+        assert counters[f"output.{s}.events.acked"] == routed.get(s, 0)
+    assert counters["events.total"] == sum(routed.values())
 
 
 def test_windowed_counters_plan_is_streaming(spark, pages_dir):
