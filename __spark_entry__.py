@@ -3,9 +3,8 @@
 ``entry(spark)`` runs the flagship north_star pipeline (pages →
 multiline+dissect parse → broadcast enrich → outil route) over the
 sf0.001 tables. ``queries()`` / ``oracle_sql()`` expose the operator
-catalog from ``beats_spark.queries`` — every SURVEY.md §2 family plus
-the dataops (dedup / similarity / text-analysis) layer — with DuckDB
-oracle SQL for each SQL-expressible entry.
+catalog from ``beats_spark.queries`` — every SURVEY.md §2 family of
+the shipper — with DuckDB oracle SQL for each SQL-expressible entry.
 """
 
 from __future__ import annotations

@@ -1,14 +1,19 @@
-"""Training-data pipeline operators over web-scale document/embedding
-tables: deduplication, similarity search, text analysis, multimodal
-column plumbing.
+"""Training-data and analytics operators over web-scale document,
+embedding and event tables: deduplication, similarity search, text
+analysis, multimodal column plumbing, event analytics and graphs.
 
-These are not in the reference (Beats ships events; it does not dedup
-or embed them) — they are the large-scale data-curation layer the
-north_star's 10^12-page table needs before training use. Everything is
-expressed as JVM-side DataFrame ops (hash/groupBy/join/higher-order
-array functions) so Catalyst plans them; Python appears only in the
-clearly-marked multimodal decode stubs and the n-gram language-ID
-profile UDF.
+This package sits outside the shipper. Beats ships events; it does not
+dedup, embed or score them, and ``beats_spark`` (inputs → processors →
+routed outputs) neither imports nor ships anything from here. The
+layer builds on the shipper instead: :mod:`beats_analytics.queries`
+extends the shipper's query catalog with an entry per operator, and
+:mod:`beats_analytics.streaming` holds the streaming forms of the
+event operators over the shipper's streams.
+
+Everything is expressed as JVM-side DataFrame ops (hash/groupBy/join/
+higher-order array functions) so Catalyst plans them; Python appears
+only in the clearly-marked multimodal decode stubs and the n-gram
+language-ID profile UDF.
 """
 
 from .dedup import (

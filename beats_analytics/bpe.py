@@ -54,12 +54,12 @@ def bpe_merges(
     """Learn ``n_merges`` BPE merges from the corpus → one row per
     learned merge: ``(merge_round, left_sym, right_sym, pair_count)``.
 
-    Words are lowercased whitespace tokens (:func:`~beats_spark
-    .dataops.dedup.tokens`); each word starts as its characters plus
+    Words are lowercased whitespace tokens (:func:`~beats_analytics
+    .dedup.tokens`); each word starts as its characters plus
     the ``end_mark`` word-boundary symbol (so merges can learn
     suffixes, per the paper). Fixed round count, no early stop: a
     deterministic budget replays bit-identically anywhere (same
-    policy as :func:`~beats_spark.dataops.graph.pagerank`). Rounds
+    policy as :func:`~beats_analytics.graph.pagerank`). Rounds
     where every pair has vanished (vocab of 1-symbol words) emit no
     row — the output can be shorter than ``n_merges``.
     """

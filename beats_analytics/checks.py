@@ -174,7 +174,7 @@ def profile_columns(
     Spark's Expand node (each input row fans to K+1 grouping rows
     before the partial agg combines them) — still one SCAN, but the
     map-side work is O(K·rows); swap the distincts for
-    :func:`~beats_spark.dataops.sketch.hll_registers` when K is
+    :func:`~beats_analytics.sketch.hll_registers` when K is
     large and exactness is negotiable.
     """
     if not columns:
@@ -229,7 +229,7 @@ def corpus_report(
     n_tokens, avg_doc_tokens, en_share_micro, dup_rate_micro,
     empty_share_micro, quality_share_micro)`` — NULL text counts as
     empty, and its docs form one dup group via the digest sentinel
-    (same convention as :func:`~beats_spark.dataops.dedup
+    (same convention as :func:`~beats_analytics.dedup
     .dedup_exact`)."""
     from .dedup import tokens
     t = F.col(text_col)

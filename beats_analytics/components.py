@@ -3,7 +3,7 @@ step of near-duplicate dedup.
 
 The pairwise MinHash/SimHash stages emit edges (id_a, id_b). Dropping
 "any doc that loses one pairing" (the simple rule in
-:func:`beats_spark.dataops.curate.curate`) over-drops on chains
+:func:`beats_analytics.curate.curate`) over-drops on chains
 (a~b, b~c ⇒ c dropped even though a≁c); FineWeb/Gopher-style pipelines
 resolve the CLUSTER first — one survivor per connected component.
 

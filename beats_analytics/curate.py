@@ -80,20 +80,20 @@ def curate(
       ONE doc — the min id — per cluster (the FineWeb-style rule).
 
     ``max_dup_line_frac`` / ``max_top2_char_frac`` add the Gopher
-    repetition gates (dataops.textstats.repetition_stats_arrow) to the
+    repetition gates (textstats.repetition_stats_arrow) to the
     map-side filter stage — still before anything shuffles.
 
     ``near_dup_jaccard=None`` skips the near-dedup stage entirely
     (quality → lang → exact dedup only) — the configuration for
     callers that RETAIN near-duplicates but confine them, e.g. the
-    cluster-keyed split in :mod:`beats_spark.dataops.export`.
+    cluster-keyed split in :mod:`beats_analytics.export`.
 
     ``min_lm_micro`` adds the CCNet-style LM fluency gate
-    (:mod:`beats_spark.dataops.lm`) AFTER exact dedup: documents whose
+    (:mod:`beats_analytics.lm`) AFTER exact dedup: documents whose
     mean bigram log-probability (integer micro-nats) falls below the
     threshold drop. The model trains on the exact-dedup survivors
-    themselves unless a frozen ``lm_model`` (a :func:`~beats_spark
-    .dataops.lm.bigram_model` tuple) is given. This is the one gate
+    themselves unless a frozen ``lm_model`` (a :func:`~beats_analytics
+    .lm.bigram_model` tuple) is given. This is the one gate
     with corpus statistics behind it, so it runs after the cheap
     map-side filters and the digest dedup have thinned the data —
     and docs too short to score (< 2 tokens, NULL average) fail it,

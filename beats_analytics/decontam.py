@@ -7,7 +7,7 @@ an n-gram that also appears in a held-out benchmark is contaminated —
 evaluating on that benchmark would partly measure memorization. The
 usual n is 8–13 tokens; the match unit here is the same lowercased
 whitespace token stream the dedup operators use
-(:func:`beats_spark.dataops.dedup.tokens`), so one tokenizer rules
+(:func:`beats_analytics.dedup.tokens`), so one tokenizer rules
 the whole corpus-hygiene surface.
 
 Scale design (100 TB training side, ~thousands-of-docs eval side):

@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
+from beats_spark.processors.decode import _spread
+
 __all__ = [
     "banded_hamming_pairs",
     "tokens", "shingles", "word_ngrams", "containment_pairs", "dedup_exact",
@@ -45,31 +47,6 @@ __all__ = [
     "ngram_jaccard_pairs", "ngram_jaccard_prefix_pairs", "simhash", "simhash_col", "simhash_pairs",
     "winnow_fingerprints", "winnow_pairs",
 ]
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition up to the session default parallelism when the
-    input arrives in fewer splits (a single small parquet file would
-    otherwise serialize the whole op on one core). No-op at scale
-    where the scan already has enough splits.
-
-    Connect-safe: uses only DataFrame metadata (``inputFiles``) and
-    confs — never an RDD handle. ``inputFiles`` undercounts partitions
-    for few-but-huge files (each file is >=1 split), so the worst case
-    is one redundant round-robin shuffle, never lost parallelism."""
-    spark = df.sparkSession
-    try:
-        target = spark.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect has no sparkContext
-        target = int(spark.conf.get("spark.sql.shuffle.partitions",
-                                    "200"))
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:
-        n_files = 0
-    if n_files >= target:
-        return df
-    return df.repartition(target)
 
 
 # ------------------------------------------------------------------ shingles
@@ -660,7 +637,7 @@ def winnow_fingerprints(
 
     Normalization is ``lower`` then strip non-``[a-z0-9]``; grams are
     hashed with the repo's portable 60-bit md5-prefix trick
-    (:func:`~beats_spark.dataops.sample._priority60` spelling), so an
+    (:func:`~beats_analytics.sample._priority60` spelling), so an
     external SQL engine replays the exact fingerprint set with list
     lambdas. Positions are 1-based over the normalized string.
 
@@ -763,7 +740,7 @@ def cdc_chunks(
     length is ~``divisor`` chars. This is the storage-dedup /
     delta-crawl primitive: re-crawled pages share every chunk except
     the ones an edit actually touched (contrast
-    :func:`~beats_spark.dataops.packing.chunk_tokens`, whose fixed
+    :func:`~beats_analytics.packing.chunk_tokens`, whose fixed
     stride re-aligns everything after an edit).
 
     Emits ``(id, chunk_id, start, n_chars, digest)`` — the chunk TEXT

@@ -14,7 +14,7 @@ The pipeline:
    (its log importance weight ``ln ŵ``);
 4. resample via deterministic Gumbel top-k on the weights.
 
-Exactness: like :mod:`beats_spark.dataops.lm`, the ONE float step per
+Exactness: like :mod:`beats_analytics.lm`, the ONE float step per
 distinct bucket (``ln``) is quantized to integer micro-nats before
 any cross-row aggregation, so document scores are integer sums an
 external SQL engine reproduces bit-for-bit. The Gumbel noise is a

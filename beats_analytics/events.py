@@ -229,7 +229,7 @@ def interval_join(
     event stream; a pathological hot key is a salting candidate
     (:mod:`beats_spark.skew`), not a planner problem, because the
     join never goes nested-loop (equi-key present). The streaming
-    form is :func:`beats_spark.streaming.pipeline.stream_event_join`
+    form is :func:`beats_analytics.streaming.stream_event_join`
     — same condition plus the two watermarks that bound join state;
     this batch spelling is its replay/backfill twin (identical pairs
     on identical data, asserted in tests), so an attribution window
@@ -1585,7 +1585,7 @@ def weighted_percentiles(
 
     All integer: weights must be non-negative BIGINTs; the rank
     threshold is ``(q_micro·W + 999999) div 10^6`` — the same
-    ceil-rank rule as :func:`beats_spark.dataops.sketch
+    ceil-rank rule as :func:`beats_analytics.sketch
     .hdr_percentiles`, but exact over raw values instead of bucketed.
     Zero-weight rows cannot be selected (they add nothing to the
     cumulative weight and the threshold is ≥ 1 whenever W ≥ 1).
@@ -1746,7 +1746,7 @@ def rolling_active_users(
     Report days past the last observed day are clipped (a trailing
     window must not invent future days). The fan-out is the price of
     EXACT rolling distinct; the sketch path for 100 TB dashboards is
-    :func:`beats_spark.dataops.sketch.hll_registers` merged over a
+    :func:`beats_analytics.sketch.hll_registers` merged over a
     window (see ``hll_windowed``), which replaces the ×W explode
     with register unions.
 

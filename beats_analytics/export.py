@@ -1,5 +1,5 @@
 """End-to-end training-set export: the composition the individual
-dataops operators exist for.
+analytics operators exist for.
 
 Two near-duplicate policies decide what the split key means:
 

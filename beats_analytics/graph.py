@@ -208,7 +208,7 @@ def kcore(
     ids), then two LEFT SEMI joins filtering the edge list to
     surviving endpoints — the exchanges only ever carry (a, b) long
     pairs, never payload, the same 16-byte-key discipline as
-    :func:`~beats_spark.dataops.components.connected_components`.
+    :func:`~beats_analytics.components.connected_components`.
     The shrinking edge frame is ``localCheckpoint``-ed per round so
     lineage stays flat (the :func:`pagerank` lesson); since the
     frame only ever SHRINKS, per-round cost is monotonically
@@ -526,7 +526,7 @@ def resolve_pointers(
 
     Input rows with duplicate ``src`` would make the map ambiguous:
     deduped up front with ``min(dst)`` (deterministic), matching the
-    keep-first discipline of :func:`~beats_spark.dataops.dedup
+    keep-first discipline of :func:`~beats_analytics.dedup
     .dedup_exact`.
     """
     if rounds < 1:

@@ -15,7 +15,7 @@ Every step is a (pattern, replacement) pair from one shared table
 RE2 ∩ java.util.regex common subset (whitespace via the explicit
 class [ \\t\\n\\x0B\\f\\r] — Java's \\s includes \\x0B, RE2's does
 not; [\\s\\S] stays, since class-plus-complement is any-char in both) — the same cross-engine
-discipline as the PII table in :mod:`beats_spark.dataops.scrub` — so
+discipline as the PII table in :mod:`beats_analytics.scrub` — so
 an external SQL engine replays the identical chain bit-for-bit
 (:func:`html_strip_sql` emits it for DuckDB).
 
@@ -321,10 +321,10 @@ def extract_meta(df: DataFrame, html_col: str = "html",
     ``description``, ``canonical`` (rel=canonical href), ``og_title``,
     and the **indexing gate** ``noindex`` / ``nofollow`` from the
     robots meta tag: the per-page half of crawl politeness that
-    robots.txt (:mod:`beats_spark.dataops.robots`) can't express — a
+    robots.txt (:mod:`beats_analytics.robots`) can't express — a
     corpus builder that ignores ``noindex`` republishes pages their
     owners excluded, so this column belongs in every ingest filter
-    chain next to :func:`~beats_spark.dataops.robots.robots_allowed`.
+    chain next to :func:`~beats_analytics.robots.robots_allowed`.
 
     First matching tag wins (document order, regexp_extract
     semantics); attribute order is handled by paired alternates (no

@@ -194,7 +194,7 @@ def global_rank(
 
     Reference anchor: no beats analogue (rank is an analytics-side
     op); this is the rank-shaped sibling of
-    :func:`beats_spark.dataops.sample.token_budget_sample`'s
+    :func:`beats_analytics.sample.token_budget_sample`'s
     bucketed global prefix.
     """
     from typing import Iterator

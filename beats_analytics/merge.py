@@ -252,7 +252,7 @@ def change_rate(
     repo's integer micro-units (bit-exact across engines), and keys
     tier into ``hot`` (≥ 2/3 of intervals changed), ``warm`` (≥ 1/3),
     ``cold`` — the priority classes a frontier feeds back into
-    :func:`~beats_spark.dataops.sample.priority_cap`-style politeness
+    :func:`~beats_analytics.sample.priority_cap`-style politeness
     scheduling. Single-observation keys have no interval: rate NULL,
     tier ``unknown``.
 

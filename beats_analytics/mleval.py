@@ -116,7 +116,7 @@ def auc_roc(
     1. one partial-combining groupBy on the score collapses the data
        to ``(score, n_pos_g, n_neg_g)`` — at most |score domain| rows
        (micro scores: ≤ 10^6 + 1) no matter the input size;
-    2. :func:`beats_spark.dataops.layout.global_prefix_sum` gives each
+    2. :func:`beats_analytics.layout.global_prefix_sum` gives each
        score group the EXCLUSIVE count of negatives below it (range
        exchange + Arrow running sum over the tall-skinny group table —
        the same machinery as ``global_rank``, no single-task window);

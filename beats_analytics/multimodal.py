@@ -330,7 +330,7 @@ def media_phash_pairs(df: DataFrame, binary_col: str = "payload",
                       chunks: int = 6) -> DataFrame:
     """Near-duplicate media pairs: fingerprint map-side, then the same
     pigeonhole banding as the text SimHash path
-    (:func:`beats_spark.dataops.dedup.banded_hamming_pairs`) — the
+    (:func:`beats_analytics.dedup.banded_hamming_pairs`) — the
     candidate join is equality on (chunk index, 10-bit chunk value), so
     no O(n²) scan and no payload bytes ever shuffle. Rows with NULL
     payloads (NULL fingerprints) are excluded."""
@@ -345,7 +345,7 @@ def bmp_color_stats(df: DataFrame, binary_col: str = "payload",
                     id_col: str = "media_id") -> DataFrame:
     """REAL image decode → per-image color statistics, no codec
     library required: uncompressed BMP payloads
-    (:mod:`beats_spark.dataops.codecs`, pure numpy) decode to actual
+    (:mod:`beats_analytics.codecs`, pure numpy) decode to actual
     pixel arrays and reduce to exact integer stats — ``(id, width,
     height, mean_r_milli, mean_g_milli, mean_b_milli, luma_milli)``
     with ``mean_c_milli = 1000·Σc // n_pixels`` and ITU-R BT.601

@@ -171,7 +171,7 @@ def passage_chunks(
     """Sentence-aware passage chunking — the retrieval/RAG prep step
     that :func:`chunk_tokens` (fixed stride) can't do: passages never
     cut a sentence in half. Sentences (via
-    :data:`~beats_spark.dataops.textstats.SENTENCE_RE`) are assigned
+    :data:`~beats_analytics.textstats.SENTENCE_RE`) are assigned
     to passages by cumulative-length bucketing: sentence ``i`` joins
     bucket ``floor(chars_before_i / target_chars)`` where
     ``chars_before_i`` counts earlier sentences plus joining spaces.

@@ -200,7 +200,7 @@ def parse_sitemap(xml: Column) -> Column:
     timestamp forms both occur in the wild; the caller picks the
     parse), ``priority`` a double (protocol default 0.5 when absent).
 
-    Same recipe as :func:`~beats_spark.dataops.htmltext.extract_links`:
+    Same recipe as :func:`~beats_analytics.htmltext.extract_links`:
     one codegen regexp pass over the blob, per-entry tag extraction in
     a transform — zero shuffle, zero Python, RE2 ∩ Java patterns so a
     SQL oracle replays it. Sitemap INDEX files (``<sitemapindex>``)

@@ -4,7 +4,7 @@ Web crawls are power-law skewed by host: a handful of domains
 contribute most pages, and training mixes routinely cap or
 down-weight them. Spark's ``sample()`` is NOT reproducible across
 runs/partitionings (per-partition RNG seeded by partition id — the
-same hazard :mod:`beats_spark.dataops.splits` documents for
+same hazard :mod:`beats_analytics.splits` documents for
 ``randomSplit``), so both operators here are pure functions of row
 keys:
 
@@ -15,7 +15,7 @@ keys:
   cap-bounded per key, so downstream stages see a flattened
   distribution.
 - :func:`hash_sample` — Bernoulli(p) by md5-bucket of the key
-  (:func:`~beats_spark.dataops.splits.split_bucket`): zero shuffle,
+  (:func:`~beats_analytics.splits.split_bucket`): zero shuffle,
   map-side, pushdown-safe, stable under repartitioning and engine
   changes, and consistent — the same key always samples the same way,
   so sampling documents by cluster/domain key keeps or drops whole
@@ -258,7 +258,7 @@ def quantile_buckets(
 
 def _priority60(key_col: str, seed: str, op: str) -> Column:
     """60-bit md5 priority of the '#'-salted key — the unreduced form
-    of :func:`~beats_spark.dataops.splits.split_bucket`'s portable
+    of :func:`~beats_analytics.splits.split_bucket`'s portable
     hex trick, so any SQL engine reproduces the same total order.
     NULL keys fail loudly (same contract as :func:`hash_sample`)."""
     key = F.col(key_col)

@@ -338,7 +338,7 @@ def blocklist_filter(
     Scale: the term array rides the plan as a literal (broadcast with
     the task binary — fine for the ~400-entry public lists; a
     million-term lexicon wants the broadcast-join spelling of
-    :func:`beats_spark.dataops.decontam.decontaminate` instead, also
+    :func:`beats_analytics.decontam.decontaminate` instead, also
     validated loudly). Zero exchanges, zero Python, whole-stage
     codegen end to end; composes with scan pushdown on other columns.
     NULL text = empty page = zero hits.
@@ -356,7 +356,7 @@ def blocklist_filter(
         raise ValueError(
             f"blocklist_filter: {len(terms)} terms is past the "
             "plan-literal design point; use a broadcast semi-join "
-            "(see dataops.decontam) for lexicon-sized lists")
+            "(see beats_analytics.decontam) for lexicon-sized lists")
     if int(max_hits) < 0:
         raise ValueError("blocklist_filter: max_hits must be >= 0")
     toks = F.array_distinct(F.filter(

@@ -3,7 +3,7 @@ signal of Lee et al., "Deduplicating Training Data Makes Language
 Models Better" (2022), at token-n-gram granularity.
 
 Document-level dedup (exact / MinHash / SimHash in
-:mod:`beats_spark.dataops.dedup`) misses PARTIAL duplication:
+:mod:`beats_analytics.dedup`) misses PARTIAL duplication:
 boilerplate paragraphs, licence blocks, and templated passages that
 repeat across otherwise-distinct pages. The suffix-array approach of
 the paper does not distribute naturally; the standard scalable

@@ -12,7 +12,7 @@ pure functions of the ROW KEY:
   adding rows later never reassigns existing ones.
 - leakage control: split on the DEDUP CLUSTER key (e.g. the
   ``component`` from
-  :func:`beats_spark.dataops.components.connected_components`, or a
+  :func:`beats_analytics.components.connected_components`, or a
   registered domain) instead of the doc id, and whole clusters land on
   one side of the boundary.
 - :func:`split_fractions` — the realized per-split (and optionally

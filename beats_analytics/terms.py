@@ -275,7 +275,7 @@ def with_percolator(
     tokenize once, then pure array HOFs — which makes it legal in a
     Structured Streaming projection with no watermark and no
     stateful operator (see
-    :func:`beats_spark.streaming.pipeline.stream_percolate`).
+    :func:`beats_analytics.streaming.stream_percolate`).
     """
     from .dedup import tokens
     if not stored:
@@ -673,7 +673,7 @@ def sparse_cosine_pairs(
     the terms to word-n-grams).
 
     The sparse complement to the dense-embedding
-    :func:`~beats_spark.dataops.similarity.cosine_topk`: no model, no
+    :func:`~beats_analytics.similarity.cosine_topk`: no model, no
     vectors to store — the inverted index IS the similarity
     structure. Dot products accumulate per shared term
     (``Σ tf_a·tf_b``, integer-exact); norms are ``sqrt(Σ tf²)`` —

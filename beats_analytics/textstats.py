@@ -197,7 +197,7 @@ def readability(text: Column) -> Column:
     11.8, 15.59) are scaled by 1000 and every division floors a
     non-negative integer ratio, so both scores are deterministic
     BIGINTs that reproduce bit-for-bit in any SQL engine — the same
-    integer-first trick as :mod:`beats_spark.dataops.lm` (micro-nats).
+    integer-first trick as :mod:`beats_analytics.lm` (micro-nats).
     Floor-of-double is safe here: numerators stay < 2^53 and a true
     quotient is never within one double ulp of a wrong integer
     boundary (denominators are small integers).
@@ -578,7 +578,7 @@ def entropy_stats_arrow(text_col: str = "text") -> Column:
     - ``char_ent_per_cp_micro`` — ``char_ent_micro // n_cp``, the mean
       per-character entropy (what a threshold filter actually uses);
     - ``n_tokens`` / ``distinct_tokens`` — whitespace-token counts
-      (same tokenization as :func:`beats_spark.dataops.dedup.tokens`);
+      (same tokenization as :func:`beats_analytics.dedup.tokens`);
     - ``tok_ent_micro`` — token-distribution entropy (vocabulary
       diversity; boilerplate listings score low);
     - ``ttr_micro`` — type-token ratio ``floor(1e6·distinct/n_tokens)``.
@@ -587,7 +587,7 @@ def entropy_stats_arrow(text_col: str = "text") -> Column:
     integer micro-nats (half-away-from-zero, the Spark/DuckDB round
     contract) BEFORE the per-document weighted sum, so every output is
     a bigint an external SQL engine reproduces bit-for-bit — the same
-    cents trick as :mod:`beats_spark.dataops.lm`. ``math.log`` (libm)
+    cents trick as :mod:`beats_analytics.lm`. ``math.log`` (libm)
     is used per DISTINCT value rather than a vectorized np.log so the
     double bits match DuckDB's ``ln`` exactly.
 
@@ -778,7 +778,7 @@ def split_sentences(df: DataFrame, text_col: str = "text",
     ``(id, sent_idx, sentence)``, 0-indexed in document order. The
     chunking primitive for context-window packing and per-sentence
     dedup/quality scoring (pairs with
-    :func:`~beats_spark.dataops.packing.pack_greedy`).
+    :func:`~beats_analytics.packing.pack_greedy`).
 
     Pure codegen: one ``regexp_extract_all`` + ``posexplode`` +
     whitespace-trim — no Python, no exchange; segmentation happens at

@@ -118,7 +118,7 @@ def url_dedup(
     the survivors (downstream stages key on it).
 
     One shuffle (hash on the canonical URL); the row_number window
-    streams each group (it IS :func:`beats_spark.dataops.sample
+    streams each group (it IS :func:`beats_analytics.sample
     .cap_per_key` with k=1).
 
     NULL URLs fail the job loudly (the same guard as the samplers):
@@ -250,7 +250,7 @@ def lang_url_pairs(
     fan-out is bounded by |langs|² no matter how many pages share it
     (the hot-template guard); exchanges carry (skeleton, lang, id)
     triples, never text. Downstream, feed the pairs to
-    :func:`~beats_spark.dataops.similarity.bitext_margin` for
+    :func:`~beats_analytics.similarity.bitext_margin` for
     embedding-margin verification — URL alignment proposes,
     similarity disposes.
     """

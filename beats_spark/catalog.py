@@ -184,9 +184,8 @@ class Table:
         new snapshot. Rows where ``condition`` is NULL are KEPT (a
         delete predicate must affirmatively match — ``NOT (x)`` alone
         would silently drop NULL-predicate rows). Time travel to the
-        pre-delete snapshot still shows the deleted rows; combine
-        with :func:`~beats_spark.dataops.governance.purge_ids` +
-        :meth:`expire_snapshots` for an RTBF purge that actually
+        pre-delete snapshot still shows the deleted rows; follow it
+        with :meth:`expire_snapshots` for a purge that actually
         removes bytes."""
         kept = self.read(spark).filter(
             ~F.coalesce(F.expr(condition), F.lit(False)))

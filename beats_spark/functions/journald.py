@@ -33,7 +33,7 @@ higher-order-function spelling of the same semantics.
 Binary-safe export fields (a line WITHOUT ``=``, followed by a length-
 prefixed raw blob) cannot survive a utf-8 string column; they fail
 loudly rather than silently misparse — ship binary journals as typed
-binary columns instead (dataops/multimodal.py plumbing).
+binary columns instead.
 """
 
 from __future__ import annotations

@@ -29,7 +29,7 @@ warcio reader's behavior):
   ``streaming/sources.py``);
 - a payload cut that lands mid-rune (a non-utf-8 payload) also fails
   loudly: JVM strings cannot carry raw bytes — ship binary payloads
-  in ``binary`` columns via the multimodal plumbing instead.
+  in ``binary`` columns instead.
 
 Shape: one Arrow kernel (blob → ``array<struct>``) then JVM
 ``posexplode`` — the fused-kernel pattern of the parse stage; the
@@ -37,8 +37,8 @@ optional HTTP response split (status / headers / body) is pure codegen
 AFTER the kernel, so only the record walk itself pays Python.
 
 Reference scope: Beats does not read WARC (its inputs are logs); this
-is the web-corpus ingest edge SURVEY §2's curation layer feeds on,
-kept to the same parser-contract standards as syslog/journald.
+is the web-archive input edge of the pages the pipeline parses, kept
+to the same parser-contract standards as syslog/journald.
 """
 
 from __future__ import annotations

@@ -23,8 +23,8 @@ and reports the patterns that break 100 TB jobs:
                        known wide text/payload column (``text``,
                        ``message``, ``html``, …) as a PASSENGER — the
                        column is not itself the (bare) partitioning
-                       key. The dedup_exact class of bug: full
-                       document bodies riding a keyed shuffle that
+                       key. The classic case: full document
+                       bodies riding an exact-dedup shuffle that
                        only needed (digest, id). Keyed-BY-the-column
                        exchanges are exempt (the key must cross), as
                        are round-robin rebalances (payload movement

@@ -566,6 +566,31 @@ def detect_mime_type(cfg: Mapping[str, Any]):
     return make
 
 
+def _spread(df: DataFrame) -> DataFrame:
+    """Repartition up to the session default parallelism when the
+    input arrives in fewer splits (a single small parquet file would
+    otherwise serialize the whole op on one core). No-op at scale
+    where the scan already has enough splits.
+
+    Connect-safe: uses only DataFrame metadata (``inputFiles``) and
+    confs — never an RDD handle. ``inputFiles`` undercounts partitions
+    for few-but-huge files (each file is >=1 split), so the worst case
+    is one redundant round-robin shuffle, never lost parallelism."""
+    spark = df.sparkSession
+    try:
+        target = spark.sparkContext.defaultParallelism
+    except Exception:  # Spark Connect has no sparkContext
+        target = int(spark.conf.get("spark.sql.shuffle.partitions",
+                                    "200"))
+    try:
+        n_files = len(df.inputFiles())
+    except Exception:
+        n_files = 0
+    if n_files >= target:
+        return df
+    return df.repartition(target)
+
+
 def json_schema_profile(df: DataFrame, field: str = "message",
                         max_depth: int = 2) -> DataFrame:
     """Schema profile of a JSON corpus: ``(path, jtype, n)`` — how
@@ -591,8 +616,6 @@ def json_schema_profile(df: DataFrame, field: str = "message",
     ``decode_json_fields`` caps ``max_depth``.
     """
     import json as _json
-
-    from ..dataops.dedup import _spread
 
     def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         def jtype(v):

@@ -6,18 +6,6 @@ from .pipeline import (
     stateful_rate_limit,
     stateful_multiline,
     stateful_container_partial,
-    stateful_counter_rates,
-    stateful_heavy_hitters,
-    stateful_url_dedup,
-    stream_dedup_against,
-    stream_sessions,
-    stream_count_anomalies,
-    stream_countmin,
-    stream_hll,
-    stream_event_join,
-    stream_ewma,
-    stream_percolate,
-    stream_dns_alerts,
 )
 from .sources import (
     datagram_events,
@@ -33,9 +21,5 @@ __all__ = [
     "socket_lines", "socket_pipeline",
     "PAGES_SCHEMA", "stream_routed", "run_stream_pipeline",
     "windowed_counters", "stateful_rate_limit",
-    "stateful_counter_rates", "stateful_heavy_hitters", "stateful_multiline", "stateful_container_partial",
-    "stateful_url_dedup", "stream_dedup_against",
-    "stream_sessions", "stream_count_anomalies", "stream_countmin",
-    "stream_hll", "stream_event_join",
-    "stream_ewma", "stream_percolate", "stream_dns_alerts",
+    "stateful_multiline", "stateful_container_partial",
 ]

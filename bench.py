@@ -12,7 +12,8 @@ The headline metric is the north_star's end-to-end parse→enrich→route
 throughput in pages/sec over the deterministic synthetic pages table
 (``beats_spark.fixtures.pages`` — same generator at any scale; the
 sf dir sizes the page count). Catalog queries from
-``beats_spark.queries`` are timed individually at the sf dir.
+``beats_analytics.queries`` (the shipper's catalog plus the analytics
+entries) are timed individually at the sf dir.
 
 ``--scaling`` mode: run the SAME flagship job at two parallelism
 levels (local[8] and local[32] by default) in separate JVMs on
@@ -196,7 +197,7 @@ def flagship_throughput(spark, n_pages: int, cpus: int) -> dict:
 
 def run_default() -> dict:
     spark = _session(CPUS)
-    from beats_spark.queries import QUERIES
+    from beats_analytics.queries import QUERIES
 
     fl = flagship_throughput(spark, N_PAGES, CPUS)
 

@@ -42,7 +42,7 @@ def main():
              .config("spark.driver.memory", "24g")
              .config("spark.ui.enabled", "false").getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
-    from beats_spark.queries import QUERIES
+    from beats_analytics.queries import QUERIES
 
     for _, d in SFS:
         if not os.path.isdir(d):

@@ -1,10 +1,10 @@
-"""Data-quality constraint checker (dataops/checks.py): verdict
+"""Data-quality constraint checker (beats_analytics/checks.py): verdict
 semantics, NULL handling, the one-pass plan shape, and guards."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from beats_spark.dataops.checks import check_constraints
+from beats_analytics.checks import check_constraints
 
 
 def test_verdicts_and_null_semantics(spark):
@@ -58,7 +58,7 @@ def test_one_pass_plan_and_guards(spark, sf_dir):
 
 
 def test_profile_columns_stats_and_one_scan(spark, sf_dir):
-    from beats_spark.dataops.checks import profile_columns
+    from beats_analytics.checks import profile_columns
     df = spark.createDataFrame(
         [(1, "a"), (2, None), (None, "b"), (2, "a")],
         "uid long, cat string")
@@ -82,7 +82,7 @@ def test_profile_columns_stats_and_one_scan(spark, sf_dir):
 
 def test_corpus_report_one_pass_and_values(spark):
     from pyspark.sql import functions as F
-    from beats_spark.dataops import corpus_report
+    from beats_analytics import corpus_report
     rows = [
         (0, "a b c", "en", "h1"), (1, "a b c", "en", "h1"),   # dup pair
         (2, "x y", "fr", "h1"), (3, None, "en", "h1"),        # null text
@@ -109,7 +109,7 @@ def test_corpus_report_one_pass_and_values(spark):
 
 
 def test_gini_concentration_known_values(spark):
-    from beats_spark.dataops.checks import gini_concentration
+    from beats_analytics.checks import gini_concentration
     from pyspark.sql import functions as F
 
     def gini_of(weights):

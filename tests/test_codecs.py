@@ -1,4 +1,4 @@
-"""Pure-numpy media codecs (dataops/codecs.py): BMP and WAV
+"""Pure-numpy media codecs (beats_analytics/codecs.py): BMP and WAV
 round-trips, format edge cases (stride padding, top-down rows, 32bpp,
 chunk walking, truncation), the Spark stats kernels over REAL decoded
 pixels/samples, and the multimodal-seam installation."""
@@ -6,7 +6,7 @@ pixels/samples, and the multimodal-seam installation."""
 import numpy as np
 import pytest
 
-from beats_spark.dataops.codecs import (
+from beats_analytics.codecs import (
     bmp_pixels, decode_bmp_meta, decode_wav_meta, encode_bmp,
     encode_wav, install_builtin_codecs, sniff_mime, wav_samples)
 
@@ -83,7 +83,7 @@ def test_sniff_mime():
 
 
 def test_bmp_color_stats_kernel(spark):
-    from beats_spark.dataops.multimodal import bmp_color_stats
+    from beats_analytics.multimodal import bmp_color_stats
     solid = encode_bmp(np.full((4, 6, 3), 100, np.uint8))
     banded = np.zeros((4, 4, 3), np.uint8)
     banded[:2] = 40
@@ -101,7 +101,7 @@ def test_bmp_color_stats_kernel(spark):
 
 
 def test_wav_audio_stats_kernel(spark):
-    from beats_spark.dataops.multimodal import wav_audio_stats
+    from beats_analytics.multimodal import wav_audio_stats
     a = 1200
     sq = np.tile(np.array([a, -a], np.int16), 50)     # 100 samples
     rows = [(1, bytearray(encode_wav(sq, 10_000))), (2, None)]
@@ -117,7 +117,7 @@ def test_wav_audio_stats_kernel(spark):
 
 
 def test_builtin_codecs_install_on_seam(spark):
-    from beats_spark.dataops.multimodal import attach_media_meta
+    from beats_analytics.multimodal import attach_media_meta
     install_builtin_codecs()
     try:
         px = np.zeros((2, 3, 3), np.uint8)
@@ -132,6 +132,6 @@ def test_builtin_codecs_install_on_seam(spark):
         # real-decoder semantics: unknown payload → NULL, never fake
         assert out[2]["mime"] is None
     finally:
-        from beats_spark.dataops import multimodal as mm
+        from beats_analytics import multimodal as mm
         mm._BATCH_DECODERS.pop("image", None)
         mm._BATCH_DECODERS.pop("audio", None)

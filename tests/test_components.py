@@ -1,11 +1,11 @@
-"""Connected components (dataops/components.py): min-label
+"""Connected components (beats_analytics/components.py): min-label
 propagation correctness on known graphs, singleton handling,
 determinism under partitioning, survivor selection."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from beats_spark.dataops.components import (connected_components,
+from beats_analytics.components import (connected_components,
                                             keep_min_per_component)
 
 

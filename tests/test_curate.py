@@ -1,6 +1,6 @@
 """Curation funnel: metrics funnel consistency + determinism."""
 
-from beats_spark.dataops.curate import curate
+from beats_analytics.curate import curate
 
 
 def test_curation_metrics_funnel(spark, sf_dir):
@@ -30,7 +30,7 @@ def test_fused_lang_matches_jvm_stopword_path(spark, sf_dir):
     # the Arrow kernel's lang field == the JVM lang_id_stopword column
     # (same marker argmax + lexicographic tie-break + 'und' at zero)
     from pyspark.sql import functions as F
-    from beats_spark.dataops.textstats import (lang_id_stopword,
+    from beats_analytics.textstats import (lang_id_stopword,
                                                text_stats_arrow)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     st = text_stats_arrow("text", with_lang=True)
@@ -44,8 +44,8 @@ def test_fused_lang_matches_jvm_stopword_path(spark, sf_dir):
 
 
 def test_component_resolution_keeps_one_per_cluster(spark, sf_dir):
-    from beats_spark.dataops.components import connected_components
-    from beats_spark.dataops.dedup import minhash_lsh_pairs
+    from beats_analytics.components import connected_components
+    from beats_analytics.dedup import minhash_lsh_pairs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     clustered = curate(docs, with_metrics=False,
@@ -73,7 +73,7 @@ def test_component_resolution_keeps_one_per_cluster(spark, sf_dir):
 
 
 def test_repetition_stats_known_values(spark):
-    from beats_spark.dataops.textstats import repetition_stats_arrow
+    from beats_analytics.textstats import repetition_stats_arrow
     text = "aa bb\naa bb\ncc dd ee\n\naa bb cc aa bb cc aa bb cc"
     # lines (non-empty): 'aa bb' x2, 'cc dd ee', 'aa bb cc...' -> 4
     df = spark.createDataFrame([(text,), (None,)], "text string")
@@ -110,7 +110,7 @@ def test_repetition_gates_in_funnel(spark, sf_dir):
 def test_curate_lm_gate(spark):
     """The opt-in LM fluency gate drops gibberish that passes the
     surface-quality filter."""
-    from beats_spark.dataops import curate
+    from beats_analytics import curate
     fluent = "the quick brown fox jumps over the lazy dog."
     rows = [(i, fluent + f" take {i} of the story.", "en")
             for i in range(10)]
@@ -123,7 +123,7 @@ def test_curate_lm_gate(spark):
     base_ids = {r.doc_id for r in base.kept.select("doc_id").collect()}
     assert {100, 101} <= base_ids          # no LM gate: gibberish passes
 
-    from beats_spark.dataops import lm_score
+    from beats_analytics import lm_score
     cut = lm_score(docs).agg(
         __import__("pyspark.sql.functions", fromlist=["expr"])
         .expr("percentile(avg_lp_micro, 0.15)")).first()[0]
@@ -140,7 +140,7 @@ def test_curate_lm_gate(spark):
 def test_prefix_jaccard_identical_to_full_join(spark, sf_dir):
     """The prefix filter is lossless: output equals the full
     inverted-index join at every threshold (prefix-filtering lemma)."""
-    from beats_spark.dataops.dedup import (
+    from beats_analytics.dedup import (
         ngram_jaccard_pairs, ngram_jaccard_prefix_pairs)
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     for t in (0.2, 0.5, 0.8):
@@ -159,7 +159,7 @@ def test_prefix_jaccard_antiskew_on_stop_shingles(spark):
     to the END of the (df, shingle) order, so only documents whose
     prefix spans their whole shingle set ever index it."""
     from pyspark.sql import functions as F
-    from beats_spark.dataops.dedup import (
+    from beats_analytics.dedup import (
         _shingle_frame, ngram_jaccard_prefix_pairs)
     rows = [(i, "common stop phrase unique%d word%d tail%d extra%d "
                 "pad%d fill%d more%d" % (i, i, i, i, i, i, i))
@@ -190,7 +190,7 @@ def test_containment_catches_embedding_jaccard_misses(spark):
     """A short doc fully quoted inside a long one: containment 1.0,
     Jaccard near zero — the case the directional join exists for.
     Directionality: only the short->long edge crosses the bar."""
-    from beats_spark.dataops.dedup import (
+    from beats_analytics.dedup import (
         containment_pairs, ngram_jaccard_pairs)
     short = "alpha beta gamma delta epsilon"
     longd = short + " " + " ".join(f"w{i}" for i in range(100))
@@ -209,7 +209,7 @@ def test_prefix_jaccard_float_ceil_boundary(spark):
     which shortened the prefix by one shingle and dropped pairs whose
     Jaccard sits exactly on the threshold. The integer micro-unit
     ceil must keep the J == t pair."""
-    from beats_spark.dataops.dedup import (
+    from beats_analytics.dedup import (
         ngram_jaccard_pairs, ngram_jaccard_prefix_pairs)
     a = " ".join(f"w{i}" for i in range(57))    # 55 distinct 3-grams
     b = a + " " + " ".join(f"x{i}" for i in range(45))  # 100 total
@@ -225,7 +225,7 @@ def test_prefix_jaccard_float_ceil_boundary(spark):
 
 
 def test_readability_known_values(spark):
-    from beats_spark.dataops.textstats import readability
+    from beats_analytics.textstats import readability
     from pyspark.sql import functions as F
     df = spark.createDataFrame(
         [("a", "The cat sat. It ran!"),
@@ -256,7 +256,7 @@ def test_readability_known_values(spark):
 
 def test_entropy_known_values(spark):
     import math
-    from beats_spark.dataops.textstats import entropy_stats_arrow
+    from beats_analytics.textstats import entropy_stats_arrow
 
     df = spark.createDataFrame(
         [(0, "aaaa"), (1, "abab"), (2, ""), (3, None),
@@ -288,7 +288,7 @@ def test_entropy_known_values(spark):
 
 
 def test_dns_tunnel_flags_hand_case(spark):
-    from beats_spark.dataops.textstats import dns_tunnel_flags
+    from beats_analytics.textstats import dns_tunnel_flags
 
     rows = [(0, "www.example.com"),                     # short label
             (1, "a" * 40 + ".t.example.com"),           # long, zero ent
@@ -304,7 +304,7 @@ def test_dns_tunnel_flags_hand_case(spark):
 
 
 def test_oov_rate_hand_case(spark):
-    from beats_spark.dataops.textstats import oov_rate
+    from beats_analytics.textstats import oov_rate
 
     docs = spark.createDataFrame(
         [(0, "the cat sat on the mat"),   # zebra/quark not in vocab
@@ -327,7 +327,7 @@ def test_bpe_merges_sennrich_example(spark):
     """The canonical BPE walkthrough: {low x3, lower, lowest,
     newest x3, widest} learns es, est, est</w> first (freq 5 beats
     everything), with deterministic lexicographic tie-breaks."""
-    from beats_spark.dataops import bpe_merges
+    from beats_analytics import bpe_merges
 
     df = spark.createDataFrame(
         [("low low low lower lowest",), ("newest newest newest widest",)],
@@ -345,7 +345,7 @@ def test_bpe_merges_greedy_overlap_and_edge_cases(spark):
     """Back-to-back pair occurrences merge left-to-right
     non-overlapping ('aaaa' with merge (a,a) yields 2 pairs consumed,
     not 3); empty corpus yields no merges; n_merges=0 is legal."""
-    from beats_spark.dataops import bpe_merges
+    from beats_analytics import bpe_merges
 
     df = spark.createDataFrame([("aaaa aaaa",)], "text string")
     got = [(r["merge_round"], r["left_sym"], r["right_sym"],
@@ -367,7 +367,7 @@ def test_bpe_encode_roundtrip_and_boundaries(spark):
     """Encoding applies merges in round order with greedy semantics;
     concatenating a doc's BPE tokens and dropping markers recovers the
     original words (lossless); empty docs encode to 0 tokens."""
-    from beats_spark.dataops import bpe_encode, bpe_merges
+    from beats_analytics import bpe_encode, bpe_merges
 
     df = spark.createDataFrame(
         [(0, "low low low lower lowest"),
@@ -390,7 +390,7 @@ def test_bpe_encode_roundtrip_and_boundaries(spark):
 
 def test_mirror_hosts_detects_cross_host_near_dups(spark):
     from pyspark.sql import functions as F
-    from beats_spark.dataops import mirror_hosts
+    from beats_analytics import mirror_hosts
     base = ("the quick brown fox jumps over the lazy dog and then "
             "runs far away into the deep dark quiet forest tonight")
     rows = []

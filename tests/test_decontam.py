@@ -1,10 +1,10 @@
-"""Benchmark decontamination (dataops/decontam.py): n-gram overlap
+"""Benchmark decontamination (beats_analytics/decontam.py): n-gram overlap
 flagging, min_matches threshold, filtering form, broadcast-only plan."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from beats_spark.dataops.decontam import (contamination_flags,
+from beats_analytics.decontam import (contamination_flags,
                                           decontaminate)
 
 

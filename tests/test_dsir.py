@@ -4,7 +4,7 @@ new batches, determinism, and the broadcast/top-k plan contract."""
 import pytest
 from pyspark.sql import functions as F
 
-from beats_spark.dataops import (
+from beats_analytics import (
     dsir_model, dsir_resample, dsir_score, hashed_ngram_buckets,
 )
 
@@ -152,7 +152,7 @@ def test_dsir_oracle_parity_null_text_empty_target(spark, tmp_path):
     both engines must produce finite ratios, not NULL-poison)."""
     import os
     import duckdb
-    from beats_spark.queries import QUERIES, ORACLES
+    from beats_analytics.queries import QUERIES, ORACLES
 
     for tag, rows in {
         "nulls": [(1, "aa bb cc", "en", "s", 8),

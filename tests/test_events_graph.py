@@ -1,12 +1,12 @@
-"""Unit tests for dataops.events (sessionize / asof_join /
-percentile_rollup) and dataops.graph (pagerank)."""
+"""Unit tests for beats_analytics.events (sessionize / asof_join /
+percentile_rollup) and beats_analytics.graph (pagerank)."""
 
 import datetime as dt
 
 import pytest
 from pyspark.sql import Row
 
-from beats_spark.dataops import (
+from beats_analytics import (
     asof_join, funnel_steps, inverted_index, pagerank,
     percentile_rollup, retention_cohorts, session_rollup, sessionize,
 )
@@ -221,7 +221,7 @@ class TestRetention:
 
 class TestTemplates:
     def test_masking_precedence(self, spark):
-        from beats_spark.dataops import log_templates
+        from beats_analytics import log_templates
         rows = [
             Row(message="req 550e8400-e29b-41d4-a716-446655440000 "
                         "from 10.1.2.3 took 42 ms"),
@@ -238,7 +238,7 @@ class TestTemplates:
         assert "ptr <hex> shifted <num>" in out
 
     def test_min_count(self, spark):
-        from beats_spark.dataops import log_templates
+        from beats_analytics import log_templates
         df = spark.createDataFrame(
             [Row(message="a 1"), Row(message="a 2"), Row(message="b")])
         assert log_templates(df, text_col="message",
@@ -251,7 +251,7 @@ class TestCountAnomalies:
             [Row(g="x", b=i, c=v) for i, v in enumerate(vals)])
 
     def test_spike_flagged_warmup_null(self, spark):
-        from beats_spark.dataops import count_anomalies
+        from beats_analytics import count_anomalies
         # 10 steady buckets then a 10x spike
         vals = [100, 101, 99, 100, 102, 98, 100, 101, 99, 100, 1000]
         out = {r.b: r for r in count_anomalies(
@@ -265,7 +265,7 @@ class TestCountAnomalies:
         assert out[0].n_prior == 0
 
     def test_zero_variance_flags_any_deviation(self, spark):
-        from beats_spark.dataops import count_anomalies
+        from beats_analytics import count_anomalies
         vals = [50] * 8 + [51]
         out = {r.b: r.is_anomaly for r in count_anomalies(
             self._counts(spark, vals), "g", "b", "c",
@@ -274,7 +274,7 @@ class TestCountAnomalies:
         assert out[7] is False
 
     def test_exact_boundary_matches_python(self, spark):
-        from beats_spark.dataops import count_anomalies
+        from beats_analytics import count_anomalies
         import statistics
         vals = [10, 12, 11, 13, 9, 11, 10, 12, 18]
         out = {r.b: r.is_anomaly for r in count_anomalies(
@@ -286,7 +286,7 @@ class TestCountAnomalies:
         assert out[8] == (zscore > 3)
 
     def test_min_points_guard(self, spark):
-        from beats_spark.dataops import count_anomalies
+        from beats_analytics import count_anomalies
         with pytest.raises(ValueError, match="min_points"):
             count_anomalies(self._counts(spark, [1]), "g", "b", "c",
                             min_points=1)
@@ -294,7 +294,7 @@ class TestCountAnomalies:
 
 class TestScd2Join:
     def test_interval_containment_gap_and_current(self, spark):
-        from beats_spark.dataops import scd2_join
+        from beats_analytics import scd2_join
         dim = spark.createDataFrame(
             [Row(k=1, valid_from=_ts(0), valid_to=_ts(10), cfg="v1"),
              Row(k=1, valid_from=_ts(20), valid_to=None, cfg="v2")])
@@ -311,7 +311,7 @@ class TestScd2Join:
                        5: "v2", 6: None}
 
     def test_no_join_node(self, spark):
-        from beats_spark.dataops import scd2_join
+        from beats_analytics import scd2_join
         dim = spark.createDataFrame(
             [(1, _ts(0), None, "v1")],
             "k long, valid_from timestamp, valid_to timestamp, "
@@ -324,7 +324,7 @@ class TestScd2Join:
 
 class TestStratifiedSample:
     def test_exact_counts_and_nesting(self, spark):
-        from beats_spark.dataops import stratified_sample
+        from beats_analytics import stratified_sample
         df = spark.createDataFrame(
             [Row(g="a", k=i) for i in range(50)]
             + [Row(g="b", k=i + 100) for i in range(3)])
@@ -338,7 +338,7 @@ class TestStratifiedSample:
         assert k5 < k10
 
     def test_seed_independence_and_guard(self, spark):
-        from beats_spark.dataops import stratified_sample
+        from beats_analytics import stratified_sample
         df = spark.createDataFrame([Row(g="a", k=i) for i in range(40)])
         s1 = {r.k for r in
               stratified_sample(df, "g", "k", 10, seed="s1").collect()}
@@ -365,7 +365,7 @@ class TestReviewRegressions3:
     def test_scd2_same_valid_from_longest_lived_wins(self, spark):
         """Two versions sharing a valid_from resolve deterministically
         to the longest-lived one (NULL = current wins outright)."""
-        from beats_spark.dataops import scd2_join
+        from beats_analytics import scd2_join
         left = spark.createDataFrame([Row(k=1, ts=_ts(5), lid=1)])
         dim = spark.createDataFrame(
             [(1, _ts(0), _ts(0), "zero_len"),
@@ -396,7 +396,7 @@ class TestReviewRegressions3:
         division misrounds (scaled offset > 2^53): epoch-millis-wide
         domain, value sitting exactly one unit below a bucket edge."""
         from pyspark.sql import functions as F
-        from beats_spark.dataops import zorder_key
+        from beats_analytics import zorder_key
         lo, hi, bits = 0, (1 << 41) - 1, 16   # span 2^41, pos ~2^57
         span = hi - lo + 1
         # exact integer bucketing for a value 1 below the k=7 edge
@@ -423,7 +423,7 @@ class TestReviewRegressions3b:
         pos/span = 1 - 1/span, which a HALF_UP decimal quotient
         rounds to 1 before the floor; the exact floor is 0."""
         from pyspark.sql import functions as F
-        from beats_spark.dataops import zorder_key
+        from beats_analytics import zorder_key
         span = (1 << 41) + 1
         df = spark.createDataFrame([(1 << 25, 0)], "x long, y long")
         z = df.select(zorder_key([F.col("x"), F.col("y")],
@@ -438,7 +438,7 @@ class TestReviewRegressions3b:
         """At the guard's maximum span (10^17), values exactly one
         below and at a bucket edge floor exactly."""
         from pyspark.sql import functions as F
-        from beats_spark.dataops import zorder_key
+        from beats_analytics import zorder_key
         span, bits = 10 ** 17, 16
         edge = (7 * span) // (1 << bits)  # first value in bucket 7
         rows = [(edge - 1, 0), (edge + 1, 0)]
@@ -457,14 +457,14 @@ class TestReviewRegressions3b:
         assert bucket(out[edge + 1]) == ((edge + 1) * 65536) // span
 
     def test_doc_frequency_duplicate_rows(self, spark):
-        from beats_spark.dataops import doc_frequency
+        from beats_analytics import doc_frequency
         df = spark.createDataFrame(
             [Row(doc_id=1, text="a b"), Row(doc_id=1, text="a c")])
         out = {r.term: r.doc_freq for r in doc_frequency(df).collect()}
         assert out["a"] == 1
 
     def test_stratified_guards(self, spark):
-        from beats_spark.dataops import stratified_sample
+        from beats_analytics import stratified_sample
         df = spark.createDataFrame([Row(g="a", k=1, rank_in_key=9)])
         with pytest.raises(ValueError, match="rank_in_key"):
             stratified_sample(df, "g", "k", 1)
@@ -481,7 +481,7 @@ class TestReviewRegressions3b:
 # ---------------------------------------------------------- triangles
 
 def test_triangle_count_known_graphs(spark):
-    from beats_spark.dataops.graph import triangle_count
+    from beats_analytics.graph import triangle_count
 
     def tc(edges):
         df = spark.createDataFrame(edges, "src long, dst long")
@@ -504,7 +504,7 @@ def test_triangle_orientation_bounds_hot_vertex_wedges(spark):
     toward the hot center, so the 10^12-wedge celebrity blowup the
     naive self-join suffers cannot happen."""
     from pyspark.sql import functions as F
-    from beats_spark.dataops.graph import triangle_count
+    from beats_analytics.graph import triangle_count
     star = [(0, i) for i in range(1, 40)]
     df = spark.createDataFrame(star, "src long, dst long")
     assert tuple(triangle_count(df).collect()[0]) == (40, 39, 0)
@@ -529,7 +529,7 @@ def test_triangle_orientation_bounds_hot_vertex_wedges(spark):
 
 def test_event_transitions_hand_case_and_tiebreak(spark):
     import datetime as dt
-    from beats_spark.dataops.events import event_transitions
+    from beats_analytics.events import event_transitions
     t0 = dt.datetime(2024, 1, 1)
 
     def ts(s):
@@ -581,7 +581,7 @@ def test_pivot_daily_dense_zeros_and_single_distinct_free_plan(
 
 def test_ewma_smooth_known_values(spark):
     from datetime import datetime
-    from beats_spark.dataops.events import ewma_smooth
+    from beats_analytics.events import ewma_smooth
 
     rows = [("a", i, datetime(2024, 1, 1, 0, i), x)
             for i, x in enumerate([10, 20, 10, 100])]
@@ -608,7 +608,7 @@ def test_mad_outliers_known_values_and_masking(spark):
     """Hand-checked median/MAD flags, including the case a z-test
     masks: one huge value inflates mean+stddev enough to hide itself,
     while the median/MAD test still flags it."""
-    from beats_spark.dataops.templates import mad_outliers
+    from beats_analytics.templates import mad_outliers
     xs = [10, 11, 9, 10, 12, 10, 11, 1000]
     df = spark.createDataFrame(
         [(i, "k", v) for i, v in enumerate(xs)], ["id", "k", "x"])
@@ -629,7 +629,7 @@ def test_mad_outliers_known_values_and_masking(spark):
 
 
 def test_merge_intervals_known_values(spark):
-    from beats_spark.dataops.events import merge_intervals
+    from beats_analytics.events import merge_intervals
     rows = [
         ("a", 0, 10), ("a", 5, 8),      # contained: long swallows short
         ("a", 10, 12),                  # touching (start == max end): merges
@@ -651,7 +651,7 @@ def test_merge_intervals_known_values(spark):
 def test_hits_known_values_hub_authority_split(spark):
     """Star graph: one directory node links to three pages, one page
     links back to one. Replay the integer recurrence by hand."""
-    from beats_spark.dataops.graph import hits
+    from beats_analytics.graph import hits
     edges = spark.createDataFrame(
         [(0, 1), (0, 2), (0, 3), (1, 2), (3, 0)],
         "src long, dst long")
@@ -681,7 +681,7 @@ def test_hits_known_values_hub_authority_split(spark):
 
 def test_hits_guards(spark):
     import pytest
-    from beats_spark.dataops.graph import hits
+    from beats_analytics.graph import hits
     e = spark.createDataFrame([(0, 1)], "src long, dst long")
     with pytest.raises(ValueError):
         hits(e, iters=0)
@@ -691,7 +691,7 @@ def test_hits_guards(spark):
 
 def test_decayed_counts_bucket_weights_and_clamps(spark):
     from pyspark.sql import functions as F
-    from beats_spark.dataops.events import decayed_counts
+    from beats_analytics.events import decayed_counts
     rows = [
         ("k", "2024-01-31 00:00:00"),   # age 0       -> 1000000
         ("k", "2024-01-30 00:00:00"),   # exactly 1hl -> 500000
@@ -713,7 +713,7 @@ def test_decayed_counts_bucket_weights_and_clamps(spark):
 
 def test_seasonal_anomaly_flags_same_hour_baseline(spark):
     from pyspark.sql import functions as F
-    from beats_spark.dataops.events import seasonal_anomaly
+    from beats_analytics.events import seasonal_anomaly
     rows = []
     # 5 quiet days at 03:00 with 2 events, then a spike day with 10
     for d in range(1, 6):
@@ -731,7 +731,7 @@ def test_seasonal_anomaly_flags_same_hour_baseline(spark):
 
 def test_slo_burn_known_rates_and_gap_safe_horizon(spark):
     from pyspark.sql import functions as F
-    from beats_spark.dataops.events import slo_burn
+    from beats_analytics.events import slo_burn
     rows = []
     # hour 0: 10 events, 1 error -> burn 10x budget (1%)
     rows += [("2024-01-01 00:00:30", e < 1) for e in range(10)]
@@ -757,7 +757,7 @@ def test_slo_burn_known_rates_and_gap_safe_horizon(spark):
 
 def test_rolling_quantile_nearest_rank_and_frame(spark):
     from pyspark.sql import functions as F
-    from beats_spark.dataops.events import rolling_quantile
+    from beats_analytics.events import rolling_quantile
     rows = [("k", i, f"2024-01-01 00:{i:02d}:00", v)
             for i, v in enumerate([10, 20, 30, 40, 50])]
     df = spark.createDataFrame(
@@ -776,7 +776,7 @@ def test_label_propagation_two_cliques_and_determinism(spark):
     """Two 3-cliques joined by one bridge edge: LPA should settle
     each clique on its own minimum label; replay the deterministic
     recurrence by hand for the bridge nodes."""
-    from beats_spark.dataops.graph import label_propagation
+    from beats_analytics.graph import label_propagation
     edges = [(0, 1), (0, 2), (1, 2),        # clique A
              (10, 11), (10, 12), (11, 12),  # clique B
              (2, 10)]                       # bridge
@@ -794,7 +794,7 @@ def test_label_propagation_two_cliques_and_determinism(spark):
 
 def test_winsorize_clips_and_preserves_interior(spark):
     from pyspark.sql import functions as F
-    from beats_spark.dataops.events import winsorize
+    from beats_analytics.events import winsorize
 
     vals = list(range(1, 100)) + [10_000]   # one wild outlier
     df = spark.createDataFrame([(i, float(v)) for i, v in
@@ -816,7 +816,7 @@ def test_winsorize_clips_and_preserves_interior(spark):
 
 
 def test_winsorize_per_group_bounds_differ(spark):
-    from beats_spark.dataops.events import winsorize
+    from beats_analytics.events import winsorize
 
     rows = ([(i, "a", float(i % 10)) for i in range(100)]
             + [(200 + i, "b", 100.0 + i % 10) for i in range(100)])
@@ -831,7 +831,7 @@ def test_trustrank_spam_mass_hand_case(spark):
     """Trust flows only out of the seed set: an isolated mutual-link
     farm earns PageRank (teleport base + self-reinforcement) but zero
     TrustRank, so its spam mass is exactly 1.0."""
-    from beats_spark.dataops.graph import pagerank, spam_mass, trustrank
+    from beats_analytics.graph import pagerank, spam_mass, trustrank
 
     #  seed 1 -> 2 -> 3 ; farm 5 <-> 6 (unreachable from 1)
     edges = spark.createDataFrame(
@@ -859,7 +859,7 @@ def test_resolve_pointers_chains_cycles_and_cap(spark):
     come back resolved=False at the 2^rounds cap, duplicate sources
     dedup to min(dst), and a chain longer than the cap stays
     unresolved at exactly cap hops."""
-    from beats_spark.dataops.graph import resolve_pointers
+    from beats_analytics.graph import resolve_pointers
     # chain 5->4->3->2->1->0 (0 terminal), cycle 10<->11, dup src 20
     edges = spark.createDataFrame(
         [(5, 4), (4, 3), (3, 2), (2, 1), (1, 0),
@@ -893,7 +893,7 @@ def test_bot_cadence_metronome_vs_bursty(spark):
     does not; below min_gaps never flags; zero-median with nonzero
     spread doesn't crash or flag."""
     import datetime as dt
-    from beats_spark.dataops.events import bot_cadence
+    from beats_analytics.events import bot_cadence
     t0 = dt.datetime(2024, 1, 1)
     rows = []
     for i in range(12):  # bot: exact 30s ticks
@@ -920,7 +920,7 @@ def test_kcore_hand_case_peels_recursively(spark):
     exactly the triangle — the tail peels in cascading rounds, which
     raw-degree filtering would get wrong (the first tail node starts
     at degree 2)."""
-    from beats_spark.dataops.graph import kcore
+    from beats_analytics.graph import kcore
     # triangle 1-2-3; tail 3-4, 4-5 (node 4 has degree 2 initially!)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)], ["src", "dst"])
@@ -930,7 +930,7 @@ def test_kcore_hand_case_peels_recursively(spark):
 
 
 def test_kcore_idempotent_past_convergence_and_guards(spark):
-    from beats_spark.dataops.graph import kcore
+    from beats_analytics.graph import kcore
     import pytest as _pt
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5), (5, 3),
@@ -951,7 +951,7 @@ def test_kcore_idempotent_past_convergence_and_guards(spark):
 
 def test_interval_join_known_pairs_and_left_outer(spark):
     import datetime as _dt
-    from beats_spark.dataops.events import interval_join
+    from beats_analytics.events import interval_join
     t0 = _dt.datetime(2024, 1, 1)
 
     def ts(s):
@@ -992,7 +992,7 @@ def test_km_survival_hand_computed(spark):
     """Product-limit estimate on a hand-worked cohort: events at t=1
     (2 of 5 at risk) and t=3 (1 of 2 at risk), censoring at t=2 and
     t=5; S = 3/5 then (3/5)·(1/2) with per-step integer rounding."""
-    from beats_spark.dataops.events import km_survival
+    from beats_analytics.events import km_survival
     df = spark.createDataFrame(
         [("c", 1, True), ("c", 1, True), ("c", 2, False),
          ("c", 3, True), ("c", 5, False),
@@ -1012,7 +1012,7 @@ def test_km_survival_hand_computed(spark):
 def test_cusum_alarms_hand_computed(spark):
     """Alarm + reset on a hand-worked drift: k=1, h=5 (micro scale
     1:1 for readability); values drift up by 3/step from t=4."""
-    from beats_spark.dataops.events import cusum_alarms
+    from beats_analytics.events import cusum_alarms
     vals = [0, 0, 0, 3, 3, 3, 3, -9, -9, -9]
     df = spark.createDataFrame(
         [("k", i, v) for i, v in enumerate(vals)],
@@ -1044,7 +1044,7 @@ def test_cusum_alarms_hand_computed(spark):
 def test_position_attribution_credit_spec(spark):
     """Hand-worked U-shape: 4 touches -> 400k/100k+/100k/400k with the
     remainder rule; credits per conversion sum to exactly 1e6."""
-    from beats_spark.dataops.events import position_attribution
+    from beats_analytics.events import position_attribution
     rows = [
         # user 1: touches c1,c2,c3,c4 then converts
         (1, 1, "c1", False), (1, 2, "c2", False), (1, 3, "c3", False),
@@ -1095,7 +1095,7 @@ def test_position_attribution_credit_spec(spark):
 
 def test_counter_rates_reset_and_rate(spark):
     from pyspark.sql import functions as F
-    from beats_spark.dataops.events import counter_rates
+    from beats_analytics.events import counter_rates
     df = spark.createDataFrame(
         [("h", "2024-01-01 00:00:00", 100),
          ("h", "2024-01-01 00:00:10", 160),   # +60 over 10 s -> 6/s
@@ -1124,7 +1124,7 @@ def test_counter_rates_reset_and_rate(spark):
 
 
 def test_trend_slope_known_values(spark):
-    from beats_spark.dataops.events import trend_slope
+    from beats_analytics.events import trend_slope
     df = spark.createDataFrame(
         # perfect line y = 3x + 1 -> slope 3.0
         [("up", 0, 1), ("up", 1, 4), ("up", 2, 7),
@@ -1147,7 +1147,7 @@ def test_trend_slope_known_values(spark):
 
 def test_apdex_known_values_and_validation(spark):
     import pytest
-    from beats_spark.dataops.events import apdex
+    from beats_analytics.events import apdex
     df = spark.createDataFrame(
         # T=100: sat 100, tol 150/400, frustrated 401
         [("svc", 100), ("svc", 150), ("svc", 400), ("svc", 401)],
@@ -1163,7 +1163,7 @@ def test_apdex_known_values_and_validation(spark):
 def test_fano_burstiness_known_values(spark):
     import pytest
     from pyspark.sql import functions as F
-    from beats_spark.dataops.events import fano_burstiness
+    from beats_analytics.events import fano_burstiness
     rows = (
         # "steady": 1 event per bucket x4 -> variance 0 -> fano 0
         [("steady", f"2024-01-01 00:{m:02d}:30") for m in range(4)]
@@ -1190,7 +1190,7 @@ def test_fano_burstiness_known_values(spark):
 
 def test_holt_smooth_known_values_and_negative_trend(spark):
     from pyspark.sql import functions as F
-    from beats_spark.dataops.events import holt_smooth
+    from beats_analytics.events import holt_smooth
     # decreasing series drives the trend negative; replicate the
     # recurrence with explicit truncation in plain python
     xs = [100, 80, 60, 40, 20]
@@ -1223,7 +1223,7 @@ def test_holt_smooth_known_values_and_negative_trend(spark):
 
 def test_weighted_percentiles_known_values(spark):
     import pytest
-    from beats_spark.dataops.events import weighted_percentiles
+    from beats_analytics.events import weighted_percentiles
     # one heavy row dominates: values 1..4, weights 1,1,1,97
     df = spark.createDataFrame(
         [("k", 1, 1), ("k", 2, 1), ("k", 3, 1), ("k", 4, 97)],
@@ -1252,7 +1252,7 @@ def test_weighted_percentiles_known_values(spark):
 
 
 def test_sequence_gaps_identity_and_dups(spark):
-    from beats_spark.dataops.events import sequence_gaps
+    from beats_analytics.events import sequence_gaps
     df = spark.createDataFrame(
         # key a: 1,2,5,5,9 -> gaps (3,4) and (6,7,8): missing 5,
         # 2 gap intervals, 1 dup
@@ -1272,7 +1272,7 @@ def test_sequence_gaps_identity_and_dups(spark):
 
 def test_gapfill_series_zeros_and_dup_guard(spark):
     import pytest
-    from beats_spark.dataops.events import gapfill_series
+    from beats_analytics.events import gapfill_series
     df = spark.createDataFrame(
         [("k", 10, 5), ("k", 13, 7), ("q", 1, 1)],
         "k string, b long, v long")
@@ -1295,7 +1295,7 @@ def test_gapfill_series_zeros_and_dup_guard(spark):
 def test_rolling_active_users_known_values(spark):
     import pytest
     from pyspark.sql import functions as F
-    from beats_spark.dataops.events import rolling_active_users
+    from beats_analytics.events import rolling_active_users
     # users on days: u1 on d0 and d3; u2 on d0; day range clips at d3
     rows = [("u1", 0), ("u2", 0), ("u1", 3), ("u1", 3)]
     df = spark.createDataFrame(rows, "u string, d long").select(
@@ -1312,7 +1312,7 @@ def test_rolling_active_users_known_values(spark):
 
 
 def test_metric_correlation_known_values(spark):
-    from beats_spark.dataops.events import metric_correlation
+    from beats_analytics.events import metric_correlation
     rows = []
     for t in range(6):
         rows.append((t, "up", t))           # x = t

@@ -1,4 +1,4 @@
-"""End-to-end training export (dataops/export.py): partitioned
+"""End-to-end training export (beats_analytics/export.py): partitioned
 output, both near-dup policies, NON-vacuous leak-freedom, packing
 integrity."""
 
@@ -7,7 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from beats_spark.dataops.export import export_training_set
+from beats_analytics.export import export_training_set
 
 
 def test_export_drop_mode(spark, sf_dir, tmp_path):
@@ -28,7 +28,7 @@ def test_export_drop_mode(spark, sf_dir, tmp_path):
         assert r["t"] <= 256 or r["k"] == 1
     # drop-mode: survivors are deduplicated — no near-dup pair among
     # the exported docs (that IS the leakage control here)
-    from beats_spark.dataops.dedup import minhash_lsh_pairs
+    from beats_analytics.dedup import minhash_lsh_pairs
     assert minhash_lsh_pairs(df, id_col="doc_id", text_col="text",
                              threshold=0.12).count() == 0
 
@@ -54,7 +54,7 @@ def test_export_confine_mode_is_leak_free_with_real_clusters(
              .agg(F.countDistinct("split").alias("s")).collect())
     assert all(r["s"] == 1 for r in sides)
     # equivalently: no near-dup PAIR crosses the boundary
-    from beats_spark.dataops.dedup import minhash_lsh_pairs
+    from beats_analytics.dedup import minhash_lsh_pairs
     pairs = minhash_lsh_pairs(df, id_col="doc_id", text_col="text",
                               threshold=0.12)
     a = df.select(F.col("doc_id").alias("id_a"),

@@ -1,4 +1,4 @@
-"""Bidirectional flow aggregation (dataops/flows.py): direction
+"""Bidirectional flow aggregation (beats_analytics/flows.py): direction
 canonicalization, idle-timeout flow splitting, per-direction
 counters, and the single-exchange plan shape."""
 
@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from beats_spark.dataops.flows import flow_aggregate
+from beats_analytics.flows import flow_aggregate
 
 
 def _pk(spark, rows):

@@ -183,7 +183,7 @@ class TestReaders:
 
 def test_fold_accents_values_and_passthrough(spark):
     from pyspark.sql import functions as F
-    from beats_spark.dataops.unicode import (
+    from beats_analytics.unicode import (
         fold_accents, _ACCENT_FROM, _ACCENT_TO)
     assert len(_ACCENT_FROM) == len(_ACCENT_TO)  # derived, aligned
     rows = [("héllo wörld café",), ("ÉLÄN straße Œuvre",),

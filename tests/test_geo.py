@@ -1,4 +1,4 @@
-"""Geohash encoding (dataops/geo.py): public-spec known vectors,
+"""Geohash encoding (beats_analytics/geo.py): public-spec known vectors,
 NULL policy, clamping, oracle-emitter equivalence, and the staged
 plan shape; plus the Fano burstiness exactness cases."""
 
@@ -8,7 +8,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from beats_spark.dataops.geo import (
+from beats_analytics.geo import (
     geohash_col, geohash_oracle_sql, geohash_rollup, with_geohash,
 )
 

@@ -4,9 +4,9 @@ session co-visitation."""
 import pytest
 from pyspark.sql import functions as F
 
-from beats_spark.dataops.governance import (
+from beats_analytics.governance import (
     k_anonymize, k_violations, purge_ids)
-from beats_spark.dataops.events import covisitation
+from beats_analytics.events import covisitation
 
 
 def _rows(spark):
@@ -84,7 +84,7 @@ def test_dp_counts_noise_spec(spark):
     """Noise must follow the documented md5 inverse-CDF spec exactly."""
     import hashlib
     import math
-    from beats_spark.dataops.governance import dp_counts
+    from beats_analytics.governance import dp_counts
     df = spark.createDataFrame(
         [("x",)] * 5 + [("y",)] * 2, "g string")
     out = {r["g"]: r for r in dp_counts(df, ["g"]).collect()}
@@ -112,7 +112,7 @@ def test_dp_counts_noise_spec(spark):
 
 
 def test_ab_test_decision_boundary(spark):
-    from beats_spark.dataops.events import ab_test
+    from beats_analytics.events import ab_test
 
     def build(n_a, c_a, n_b, c_b):
         rows = []
@@ -146,7 +146,7 @@ def test_ab_test_decision_boundary(spark):
 
 
 def test_calibration_bins_known_values(spark):
-    from beats_spark.dataops.mleval import calibration_bins
+    from beats_analytics.mleval import calibration_bins
     df = spark.createDataFrame(
         # bin 0: two negatives at p=0.05 ([0, 0.1) is bin 0)
         [(50000, 0), (50000, 0),
@@ -165,7 +165,7 @@ def test_calibration_bins_known_values(spark):
 
 
 def test_ips_value_known_values(spark):
-    from beats_spark.dataops.mleval import ips_value
+    from beats_analytics.mleval import ips_value
     df = spark.createDataFrame(
         # matched: p=0.5 w=2.0 r=1.0 -> wr 2.0; p=0.25 w=4.0 r=0.5 -> 2.0
         [("a", "a", 500000, 1000000),
@@ -192,7 +192,7 @@ def test_ips_value_known_values(spark):
 
 
 def test_auc_roc_known_values(spark):
-    from beats_spark.dataops.mleval import auc_roc
+    from beats_analytics.mleval import auc_roc
     # perfect separation: every positive above every negative -> 1.0
     df = spark.createDataFrame(
         [(10, 0), (20, 0), (30, 1), (40, 1)],
@@ -219,7 +219,7 @@ def test_auc_roc_known_values(spark):
 
 
 def test_auc_roc_matches_pandas_rank_sum(spark, sf_dir):
-    from beats_spark.dataops.mleval import auc_roc
+    from beats_analytics.mleval import auc_roc
     from pyspark.sql import functions as F
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         ((F.col("event_id") * 48271) % 99991).alias("score_micro"),
@@ -237,7 +237,7 @@ def test_auc_roc_matches_pandas_rank_sum(spark, sf_dir):
 
 def test_l_diversity_violations_and_keep(spark):
     import pytest
-    from beats_spark.dataops.governance import l_diversify, l_violations
+    from beats_analytics.governance import l_diversify, l_violations
     df = spark.createDataFrame(
         # group (a): 3 rows, 1 distinct sensitive -> violates l=2
         [("a", "flu"), ("a", "flu"), ("a", "flu"),
@@ -256,7 +256,7 @@ def test_l_diversity_violations_and_keep(spark):
 
 
 def test_cohen_kappa_known_values(spark):
-    from beats_spark.dataops.labeling import cohen_kappa
+    from beats_analytics.labeling import cohen_kappa
     # classic textbook 2x2: a/b counts yes-yes 20, yes-no 5,
     # no-yes 10, no-no 15 -> po=0.7, pe=(25*30 + 25*20)/2500=0.5,
     # kappa = 0.4

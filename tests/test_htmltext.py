@@ -1,8 +1,8 @@
-"""HTML -> text extraction (beats_spark.dataops.htmltext)."""
+"""HTML -> text extraction (beats_analytics.htmltext)."""
 import pytest
 from pyspark.sql import functions as F
 
-from beats_spark.dataops import extract_text, html_to_text
+from beats_analytics import extract_text, html_to_text
 
 
 def _x(spark, htmls):
@@ -49,7 +49,7 @@ def test_extract_text_decodes_binary(spark):
 def test_strip_chain_shared_with_duckdb(spark):
     """The SQL emitter replays the identical chain on messy input."""
     import duckdb
-    from beats_spark.dataops import html_strip_sql
+    from beats_analytics import html_strip_sql
     messy = ('<div class="x"><script a="1">var s = "</div>";</script>'
              '<h2>A &quot;B&#39;s&quot; C</h2><ul><li>one</li>'
              '<li>two</li></ul>&nbsp;tail   spaces</div>  ')
@@ -61,7 +61,7 @@ def test_strip_chain_shared_with_duckdb(spark):
 
 
 def test_extract_links_semantics(spark):
-    from beats_spark.dataops.htmltext import extract_links
+    from beats_analytics.htmltext import extract_links
     html = (
         '<p>pre</p>'
         '<a href="https://Ex.COM/a?q=1#f">plain</a>'
@@ -92,7 +92,7 @@ def test_extract_links_semantics(spark):
 
 
 def test_link_host_non_http_schemes_yield_null(spark):
-    from beats_spark.dataops.htmltext import extract_links
+    from beats_analytics.htmltext import extract_links
     html = ('<a href="mailto:a@b.com">mail</a>'
             '<a href="javascript:void(0)">js</a>'
             '<a href="tel:+1-555">call</a>'
@@ -113,7 +113,7 @@ def test_extract_tables_known_values(spark):
     tables and table-less/NULL pages contribute nothing; nested
     markup inside a cell survives as its text."""
     from pyspark.sql import functions as F
-    from beats_spark.dataops.htmltext import extract_tables
+    from beats_analytics.htmltext import extract_tables
     html = ('<html><body><p>intro</p>'
             '<table class="x"><tr><th>Lang</th><th>N</th></tr>'
             '<tr><td><b>en</b> &amp; more</td><td>42</td></tr>'
@@ -141,7 +141,7 @@ def test_extract_meta_known_values(spark):
     """Both attribute orders, entity/whitespace cleanup in title,
     first-tag-wins, robots directives incl. 'none', and the
     no-metadata page yielding empty strings + false gates."""
-    from beats_spark.dataops.htmltext import extract_meta
+    from beats_analytics.htmltext import extract_meta
     pages = [
         (1, '<html><head><title> A &amp; B </title>'
             '<meta name="description" content="first">'
@@ -172,7 +172,7 @@ def test_extract_hreflang_orders_and_gates(spark):
     """Attribute order free; stylesheet links and incomplete
     alternates dropped; lang lowercased; x-default kept."""
     from pyspark.sql import functions as F
-    from beats_spark.dataops.htmltext import extract_hreflang
+    from beats_analytics.htmltext import extract_hreflang
     html = ('<head>'
             '<link rel="alternate" hreflang="EN" href="https://e.x/en">'
             '<link href="https://e.x/de" hreflang="de" rel="alternate">'
@@ -189,7 +189,7 @@ def test_extract_hreflang_orders_and_gates(spark):
 
 
 def test_dom_fingerprint_structure_only(spark):
-    from beats_spark.dataops import dom_fingerprint
+    from beats_analytics import dom_fingerprint
     rows = [
         # same structure, different text / attr values / attr order
         (1, '<html><body><div class="a"><p>hello</p></div></body></html>'),
@@ -218,7 +218,7 @@ def test_dom_fingerprint_structure_only(spark):
 
 def test_dom_fingerprint_sql_parity(spark):
     import duckdb
-    from beats_spark.dataops import dom_fingerprint, dom_fingerprint_sql
+    from beats_analytics import dom_fingerprint, dom_fingerprint_sql
     htmls = ['<div class="x"><p>a</p></div>', "<ul><li>1<li>2</ul>",
              "< notatag", "text only", "<a href='u'>t</a><br/>"]
     df = spark.createDataFrame([(h,) for h in htmls], "h string")
@@ -232,7 +232,7 @@ def test_dom_fingerprint_sql_parity(spark):
 
 
 def test_wilson_lower_bound_values(spark):
-    from beats_spark.dataops import wilson_lower_bound
+    from beats_analytics import wilson_lower_bound
     df = spark.createDataFrame(
         [(3, 3), (97, 100), (0, 5), (5, 5), (50, 100)], "k long, n long")
     got = {(r["k"], r["n"]): r["w"] for r in df.select(

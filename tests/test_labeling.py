@@ -1,7 +1,7 @@
 """weak_label_vote / lf_summary: Snorkel-style weak supervision."""
 import pytest
 
-from beats_spark.dataops.labeling import lf_summary, weak_label_vote
+from beats_analytics.labeling import lf_summary, weak_label_vote
 
 
 def _df(spark):
@@ -70,7 +70,7 @@ def test_lf_summary_coverage_overlap_conflict(spark):
 
 
 def test_filter_sweep_retention_and_guards(spark):
-    from beats_spark.dataops.sample import filter_sweep
+    from beats_analytics.sample import filter_sweep
     df = spark.createDataFrame(
         [(1, 10, 100), (2, 20, 200), (3, 30, None),
          (4, None, 400), (5, 20, 50)],

@@ -1,10 +1,10 @@
-"""dataops.layout: Morton key correctness and the actual file-skipping
+"""beats_analytics.layout: Morton key correctness and the actual file-skipping
 property (parquet footer min/max tightness) it exists for."""
 
 import pytest
 from pyspark.sql import Row, functions as F
 
-from beats_spark.dataops import cluster_by_zorder, zorder_key
+from beats_analytics import cluster_by_zorder, zorder_key
 
 
 class TestZorderKey:
@@ -104,7 +104,7 @@ class TestBucketedJoin:
         """Two tables bucketed on the same key join WITHOUT shuffling
         either side — the write-once/join-many layout for fact-fact
         joins; an unbucketed control join plans Exchanges."""
-        from beats_spark.dataops import write_bucketed
+        from beats_analytics import write_bucketed
         # spark.sql.warehouse.dir is static — managed tables land in
         # ./spark-warehouse and are DROPped (files removed) in finally
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -131,7 +131,7 @@ class TestBucketedJoin:
             spark.sql("DROP TABLE IF EXISTS t_buck_b")
 
     def test_guard(self, spark):
-        from beats_spark.dataops import write_bucketed
+        from beats_analytics import write_bucketed
         with pytest.raises(ValueError, match="n_buckets"):
             write_bucketed(spark.range(1), "t", "id", n_buckets=0)
 
@@ -141,7 +141,7 @@ def test_global_rank_matches_window(spark):
     ties (broken by the tiebreaker column) and NULLS FIRST."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-    from beats_spark.dataops.layout import global_rank
+    from beats_analytics.layout import global_rank
 
     rows = [(i, v) for i, v in enumerate(
         [5, 3, None, 3, 9, 1, None, 5, 5, 2, 7, 3])]
@@ -157,7 +157,7 @@ def test_global_rank_matches_window(spark):
 
 
 def test_global_rank_empty_and_single(spark):
-    from beats_spark.dataops.layout import global_rank
+    from beats_analytics.layout import global_rank
     empty = spark.createDataFrame([], "id long, v long")
     assert global_rank(empty, ["v", "id"]).count() == 0
     one = spark.createDataFrame([(1, 42)], "id long, v long")
@@ -165,7 +165,7 @@ def test_global_rank_empty_and_single(spark):
 
 
 def test_zonemap_stats_range_prunes_hash_does_not(spark):
-    from beats_spark.dataops.layout import zonemap_stats
+    from beats_analytics.layout import zonemap_stats
     # values 0..999; predicate selects [100, 199] — 10% of the domain
     df = spark.createDataFrame([(i, i) for i in range(1000)],
                                "id long, v long")
@@ -183,7 +183,7 @@ def test_zonemap_stats_range_prunes_hash_does_not(spark):
 
 def test_global_prefix_sum_matches_window(spark):
     from pyspark.sql import Window, functions as F
-    from beats_spark.dataops.layout import global_prefix_sum
+    from beats_analytics.layout import global_prefix_sum
 
     df = spark.range(0, 500).select(
         F.col("id"), ((F.col("id") * 37) % 113).alias("v"))
@@ -198,7 +198,7 @@ def test_global_prefix_sum_matches_window(spark):
 
 def test_byte_balanced_shards_bounds(spark):
     from pyspark.sql import functions as F
-    from beats_spark.dataops.layout import byte_balanced_shards
+    from beats_analytics.layout import byte_balanced_shards
 
     # doc sizes vary 100x: hash-repartition would skew bytes badly
     df = spark.range(0, 300).select(
@@ -220,7 +220,7 @@ def test_byte_balanced_shards_bounds(spark):
 
 
 def test_skyline_2d_known_front(spark):
-    from beats_spark.dataops.layout import skyline_2d
+    from beats_analytics.layout import skyline_2d
     pts = [
         (1, 10, 100), (2, 20, 90), (3, 30, 80),   # the Pareto front
         (4, 10, 90),   # dominated by (10,100) and (20,90)
@@ -251,7 +251,7 @@ def test_skyline_2d_known_front(spark):
 def test_equidepth_hist_exactness_and_invariance(spark, sf_dir):
     import pytest
     from pyspark.sql import functions as F
-    from beats_spark.dataops.layout import equidepth_hist
+    from beats_analytics.layout import equidepth_hist
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = equidepth_hist(docs, "n_chars", "doc_id", n_buckets=7)
     rows = sorted(map(tuple, out.collect()))

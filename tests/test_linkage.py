@@ -2,7 +2,7 @@
 
 import pytest
 
-from beats_spark.dataops.linkage import blocked_link
+from beats_analytics.linkage import blocked_link
 
 
 def _frames(spark):

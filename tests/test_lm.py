@@ -1,9 +1,9 @@
-"""Bigram LM quality scoring (beats_spark.dataops.lm)."""
+"""Bigram LM quality scoring (beats_analytics.lm)."""
 import math
 
 from pyspark.sql import functions as F
 
-from beats_spark.dataops import bigram_model, lm_score
+from beats_analytics import bigram_model, lm_score
 
 
 def test_lm_score_hand_case(spark):
@@ -54,7 +54,7 @@ def test_lm_score_partition_invariant(spark):
 def test_nb_quality_hand_case(spark):
     import math
     from pyspark.sql import functions as F
-    from beats_spark.dataops.lm import nb_quality
+    from beats_analytics.lm import nb_quality
 
     # positives say "good", negatives say "spam"; one ambiguous doc
     rows = [(0, "good good text", 1), (1, "good text", 1),
@@ -78,7 +78,7 @@ def test_nb_quality_hand_case(spark):
 
 def test_nb_quality_partition_invariant(spark):
     from pyspark.sql import functions as F
-    from beats_spark.dataops.lm import nb_quality
+    from beats_analytics.lm import nb_quality
 
     rows = [(i, f"tok{i % 7} tok{i % 3} common word", i % 4)
             for i in range(60)]
@@ -91,7 +91,7 @@ def test_nb_quality_partition_invariant(spark):
 
 def test_token_kl_identical_groups_score_near_zero(spark):
     from pyspark.sql import functions as F
-    from beats_spark.dataops.lm import token_kl
+    from beats_analytics.lm import token_kl
 
     # two groups with IDENTICAL token distributions: KL must be ~0
     # (exactly 0 up to the micro-nat quantization of equal ratios)
@@ -115,7 +115,7 @@ def test_token_kl_identical_groups_score_near_zero(spark):
 
 
 def test_token_kl_partition_invariant(spark):
-    from beats_spark.dataops.lm import token_kl
+    from beats_analytics.lm import token_kl
 
     rows = [(i, f"w{i % 13} w{i % 5} shared", f"s{i % 3}")
             for i in range(60)]
@@ -127,7 +127,7 @@ def test_token_kl_partition_invariant(spark):
 
 def test_domain_weights_properties(spark):
     from pyspark.sql import functions as F
-    from beats_spark.dataops import domain_weights
+    from beats_analytics import domain_weights
     rows = []
     # domain A: exactly the curated distribution (repeat docs)
     for i in range(6):

@@ -1,4 +1,4 @@
-"""SCD1 snapshot merge (dataops/merge.py): classification semantics,
+"""SCD1 snapshot merge (beats_analytics/merge.py): classification semantics,
 null-safe digests, duplicate-delta rejection, drop_unchanged, and the
 narrow-exchange plan claim."""
 
@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from beats_spark.dataops.merge import merge_upsert
+from beats_analytics.merge import merge_upsert
 
 
 def _frames(spark):
@@ -82,7 +82,7 @@ def test_merge_classification_exchange_is_narrow(spark):
 
 
 def test_snapshot_diff_classifies_all_four_ways(spark):
-    from beats_spark.dataops.merge import snapshot_diff
+    from beats_analytics.merge import snapshot_diff
     old = spark.createDataFrame(
         [(1, "a", "en"), (2, "b", "en"), (3, "c", "en")],
         "url long, text string, lang string")
@@ -100,7 +100,7 @@ def test_snapshot_diff_classifies_all_four_ways(spark):
 
 def test_snapshot_diff_rejects_duplicate_keys(spark):
     import pytest
-    from beats_spark.dataops.merge import snapshot_diff
+    from beats_analytics.merge import snapshot_diff
     old = spark.createDataFrame([(1, "a"), (1, "b")],
                                 "url long, text string")
     new = spark.createDataFrame([(1, "a")], "url long, text string")
@@ -109,7 +109,7 @@ def test_snapshot_diff_rejects_duplicate_keys(spark):
 
 
 def test_snapshot_diff_null_vs_value_digest(spark):
-    from beats_spark.dataops.merge import snapshot_diff
+    from beats_analytics.merge import snapshot_diff
     old = spark.createDataFrame([(1, None)], "url long, text string")
     new = spark.createDataFrame([(1, "1")], "url long, text string")
     out = snapshot_diff(old, new, ["url"], ["text"]).collect()
@@ -118,7 +118,7 @@ def test_snapshot_diff_null_vs_value_digest(spark):
 
 def test_ivm_counts_insert_delete_zero_and_negative_guard(spark):
     import pytest
-    from beats_spark.dataops.merge import ivm_counts
+    from beats_analytics.merge import ivm_counts
     base = spark.createDataFrame([("a", 2), ("b", 1), ("c", 1)],
                                  "k string, n long")
     delta = spark.createDataFrame(
@@ -138,7 +138,7 @@ def test_change_rate_tiers_and_edges(spark):
     """Known change patterns land in the right tiers; single-snapshot
     keys are 'unknown' with NULL rate; identical digests across all
     snaps give rate 0/'cold'."""
-    from beats_spark.dataops.merge import change_rate
+    from beats_analytics.merge import change_rate
     rows = []
     for s in range(4):
         rows.append(("stable", s, "d0"))

@@ -4,7 +4,7 @@ decoder override."""
 
 from pyspark.sql import functions as F
 
-from beats_spark.dataops.multimodal import (
+from beats_analytics.multimodal import (
     attach_media_meta, extract_image_features, sample_video_frames,
     set_decoder, _DECODERS,
 )
@@ -65,7 +65,7 @@ def test_sample_video_frames_kernel_is_columnar():
     are numpy-backed AND match the per-row reference computation."""
     import numpy as np
     import pandas as pd
-    from beats_spark.dataops.multimodal import _fake_decode
+    from beats_analytics.multimodal import _fake_decode
 
     payloads = [b"\x89PNG fake bytes here", b"GIF89a data", None,
                 b"x" * 100]
@@ -105,7 +105,7 @@ def test_set_batch_decoder_vectorized_seam(spark):
     """A vectorized decoder (the real-model swap point) drives both
     kernels with zero per-item Python."""
     import numpy as np
-    from beats_spark.dataops.multimodal import (
+    from beats_analytics.multimodal import (
         set_batch_decoder, _BATCH_DECODERS)
 
     def batch_fake(payloads):
@@ -142,7 +142,7 @@ def test_batch_decoder_never_sees_null_or_empty(spark):
     is bytes and the batch is non-empty — mixed, all-null, and empty
     inputs all decode without the decoder having to defend itself."""
     import numpy as np
-    from beats_spark.dataops.multimodal import (
+    from beats_analytics.multimodal import (
         set_batch_decoder, _BATCH_DECODERS, _column_decoder)
 
     def strict_fake(payloads):
@@ -204,7 +204,7 @@ def test_sample_video_frames_on_null_meta(spark):
 
 
 def test_media_fingerprints_null_and_determinism(spark):
-    from beats_spark.dataops.multimodal import (
+    from beats_analytics.multimodal import (
         media_fingerprints, _fake_fingerprint)
     out = {r["doc_id"]: r["fp"]
            for r in media_fingerprints(_payloads(spark)).collect()}
@@ -217,7 +217,7 @@ def test_media_fingerprints_null_and_determinism(spark):
 
 
 def test_media_phash_pairs_finds_duplicates(spark):
-    from beats_spark.dataops.multimodal import media_phash_pairs
+    from beats_analytics.multimodal import media_phash_pairs
     df = spark.createDataFrame(
         [(1, b"same bytes payload AAAA"), (2, b"same bytes payload AAAA"),
          (3, b"utterly different content zzzz qqqq"), (4, None)],
@@ -234,7 +234,7 @@ def test_media_phash_pairs_finds_duplicates(spark):
 
 
 def test_set_fingerprinter_seam(spark):
-    from beats_spark.dataops import multimodal as mm
+    from beats_analytics import multimodal as mm
     mm.set_fingerprinter("audio", lambda p: len(p) % 7)
     try:
         out = {r["doc_id"]: r["fp"]

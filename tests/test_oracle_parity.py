@@ -14,7 +14,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from beats_spark.queries import QUERIES, ORACLES
+from beats_analytics.queries import QUERIES, ORACLES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 TABLES = ("region nation customer supplier part orders lineitem events "

@@ -24,7 +24,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from beats_spark.queries import QUERIES, ORACLES
+from beats_analytics.queries import QUERIES, ORACLES
 
 SF01 = os.environ.get("SPARK_GRAFT_SF01_DIR", "/root/testdata/sf0.1")
 TABLES = ("region nation customer supplier part orders lineitem events "

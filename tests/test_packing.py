@@ -1,10 +1,10 @@
-"""Sequence packing (dataops/packing.py): concat-split arithmetic,
+"""Sequence packing (beats_analytics/packing.py): concat-split arithmetic,
 greedy first-fit semantics, oversized docs, shard isolation,
 determinism under partitioning."""
 
 from pyspark.sql import functions as F
 
-from beats_spark.dataops.packing import pack_concat, pack_greedy
+from beats_analytics.packing import pack_concat, pack_greedy
 
 
 def _df(spark, rows):
@@ -72,7 +72,7 @@ def test_deterministic_under_partitioning(spark):
 
 def test_chunk_tokens_known_values(spark):
     from pyspark.sql import functions as F
-    from beats_spark.dataops.packing import chunk_tokens
+    from beats_analytics.packing import chunk_tokens
     df = spark.createDataFrame(
         [("a", "t1 t2 t3 t4 t5 t6 t7"),   # 7 toks: w=3 s=2 -> 3 chunks
          ("b", "x y"),                    # fits one window
@@ -104,7 +104,7 @@ def test_passage_chunks_sentence_boundaries(spark):
     """Passages never cut sentences; bucketing by cumulative start
     offset at target pitch; a giant sentence is its own passage;
     empty/NULL docs vanish; passage_id dense when buckets skip."""
-    from beats_spark.dataops.packing import passage_chunks
+    from beats_analytics.packing import passage_chunks
     df = spark.createDataFrame(
         [(1, "One short. Another sentence here! A third one? "
              "And a fourth sentence that is longer than the rest. Tail"),

@@ -167,7 +167,7 @@ def test_robots_pattern_compile_matches_reference(pattern, path):
     regex metacharacters that must be treated as literals and '$'
     appearing mid-pattern (literal) vs trailing (anchor)."""
     import re as _re
-    from beats_spark.dataops.robots import compile_robots_pattern
+    from beats_analytics.robots import compile_robots_pattern
     # mid-pattern '$' is literal only when not the final char; the
     # reference matcher above treats a trailing '$' as the anchor and
     # every other '$' literally, same as the compiler

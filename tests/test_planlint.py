@@ -102,7 +102,7 @@ def test_catalog_sweep_no_silent_scale_killers(spark, sf_dir):
     """EVERY catalog query's plan must be free of CartesianProduct and
     row-wise Python. The documented-bounded exceptions carry their
     justification here, not buried in prose."""
-    from beats_spark.queries import QUERIES
+    from beats_analytics.queries import QUERIES
     # CartesianProduct and row-wise Python have NO allowances.
     # wide_text_exchange allowances: multiline/partial-line
     # REASSEMBLY queries must co-locate each file's lines to join

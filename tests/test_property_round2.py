@@ -184,7 +184,7 @@ def test_banded_hamming_pairs_pigeonhole_complete(spark):
     adversarial near-collisions (codes differing in exactly
     max_hamming bits)."""
     from itertools import combinations
-    from beats_spark.dataops.dedup import banded_hamming_pairs
+    from beats_analytics.dedup import banded_hamming_pairs
     rng = random.Random(2024)
     for trial in range(6):
         max_hamming = trial % 6

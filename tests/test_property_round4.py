@@ -19,11 +19,11 @@ import random
 
 from pyspark.sql import functions as F
 
-from beats_spark.dataops.events import (
+from beats_analytics.events import (
     sequence_gaps, weighted_percentiles,
 )
-from beats_spark.dataops.flows import flow_aggregate
-from beats_spark.dataops.sketch import heavy_hitters
+from beats_analytics.flows import flow_aggregate
+from beats_analytics.sketch import heavy_hitters
 
 
 def test_heavy_hitters_equals_exact_having_randomized(spark):

@@ -1,4 +1,4 @@
-"""RFC 9309 robots.txt engine (dataops/robots.py): parse/group/match
+"""RFC 9309 robots.txt engine (beats_analytics/robots.py): parse/group/match
 semantics against the RFC + public Googlebot documented examples, the
 broadcast plan shape, and URL path extraction."""
 
@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from beats_spark.dataops.robots import (
+from beats_analytics.robots import (
     compile_robots_pattern, parse_robots, parse_robots_txt,
     robots_filter, url_path,
 )
@@ -102,7 +102,7 @@ def test_filter_longest_match_tie_allows(spark):
 
 
 def test_parse_sitemap_and_index(spark):
-    from beats_spark.dataops.robots import parse_sitemap, parse_sitemap_index
+    from beats_analytics.robots import parse_sitemap, parse_sitemap_index
     xml = """<?xml version="1.0" encoding="UTF-8"?>
     <urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
       <url ><loc> https://h.com/a </loc><lastmod>2024-01-02</lastmod>
@@ -140,7 +140,7 @@ def test_parse_feed_rss_atom_mixed(spark):
     """RSS items and Atom entries from the same blob set; CDATA
     unwrap, link-less items dropped, tag absence comes back NULL."""
     from pyspark.sql import functions as F
-    from beats_spark.dataops.robots import parse_feed
+    from beats_analytics.robots import parse_feed
     rss = ("<rss><channel><item><title><![CDATA[Hello & Co]]></title>"
            "<link>https://e.x/1</link><guid>g1</guid>"
            "<pubDate>Mon, 01 Jan 2024 00:00:00 GMT</pubDate></item>"

@@ -617,7 +617,7 @@ def test_new_oracles_survive_null_text_and_lang(spark, tmp_path):
     shapes absent from the shipped testdata but allowed by the
     schema."""
     import duckdb
-    from beats_spark.queries import QUERIES, ORACLES
+    from beats_analytics.queries import QUERIES, ORACLES
 
     rows = [
         (1, "aa bb\naa bb\ncc", "en", "s", 5),

@@ -3,7 +3,7 @@
 import pytest
 from pyspark.sql import Row, functions as F
 
-from beats_spark.dataops.scrub import (
+from beats_analytics.scrub import (
     PII_PATTERNS, dedup_lines, pii_counts, scrub, scrub_pii)
 
 
@@ -109,7 +109,7 @@ def test_dedup_lines_order_preserved_after_gaps(spark):
 # ----------------------------------------------------------- c4_clean
 
 def _c4(spark, pages, **kw):
-    from beats_spark.dataops import c4_clean
+    from beats_analytics import c4_clean
     df = spark.createDataFrame(pages, "doc_id long, text string")
     return {r.doc_id: r for r in c4_clean(df, **kw).collect()}
 
@@ -163,7 +163,7 @@ def test_c4_trims_and_is_case_insensitive(spark):
 
 
 def test_strip_boilerplate_per_site_ratio_and_vanishing_doc(spark):
-    from beats_spark.dataops.scrub import strip_boilerplate
+    from beats_analytics.scrub import strip_boilerplate
     docs = spark.createDataFrame(
         [(1, "s1", "unique one\nFOOTER\nbody a"),
          (2, "s1", "unique two\nFOOTER"),
@@ -186,7 +186,7 @@ def test_strip_boilerplate_per_site_ratio_and_vanishing_doc(spark):
 
 def test_strip_boilerplate_rejects_bad_ratio(spark):
     import pytest
-    from beats_spark.dataops.scrub import strip_boilerplate
+    from beats_analytics.scrub import strip_boilerplate
     docs = spark.createDataFrame([(1, "s", "x")],
                                  "doc_id long, source string, "
                                  "text string")
@@ -196,7 +196,7 @@ def test_strip_boilerplate_rejects_bad_ratio(spark):
 
 def test_blocklist_filter_boundaries_hits_and_guards(spark):
     import pytest
-    from beats_spark.dataops.scrub import blocklist_filter
+    from beats_analytics.scrub import blocklist_filter
     docs = spark.createDataFrame(
         [(1, "a classic passage, nothing bad"),   # substring != word
          (2, "SPAM here and don't stop"),         # case + apostrophe

@@ -5,7 +5,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from beats_spark.dataops import clock_skew, split_sentences
+from beats_analytics import clock_skew, split_sentences
 
 
 def test_split_sentences_basic(spark):

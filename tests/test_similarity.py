@@ -3,8 +3,8 @@ bucket/rerank correctness."""
 
 from pyspark.sql import functions as F
 
-from beats_spark.dataops import cosine_topk, lsh_cosine_topk
-from beats_spark.dataops.similarity import (
+from beats_analytics import cosine_topk, lsh_cosine_topk
+from beats_analytics.similarity import (
     cosine_similarity, lsh_signature,
 )
 
@@ -50,7 +50,7 @@ def test_lsh_candidates_share_bucket_and_scores_are_exact(spark, sf_dir):
 
 def test_ivf_lists_partition_corpus(spark, sf_dir):
     from pyspark.sql import functions as F
-    from beats_spark.dataops.similarity import ivf_assign, ivf_cosine_topk
+    from beats_analytics.similarity import ivf_assign, ivf_cosine_topk
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cent = (emb.orderBy("vec_id").limit(8)
             .select(F.col("vec_id").alias("centroid_id"), "embedding"))
@@ -62,7 +62,7 @@ def test_ivf_lists_partition_corpus(spark, sf_dir):
     assert 1 < n_lists <= 8
 
     # probing ALL lists with nprobe=n_centroids reproduces brute force
-    from beats_spark.dataops.similarity import cosine_topk
+    from beats_analytics.similarity import cosine_topk
     q = emb.filter(F.col("vec_id") < 5)
     full = ivf_cosine_topk(emb, q, k=3, n_centroids=8, nprobe=8)
     brute = cosine_topk(emb, q, k=3)
@@ -87,7 +87,7 @@ def _clustered_vectors(spark, per_cluster=20, dim=6):
 
 
 def test_kmeans_fit_recovers_separated_clusters(spark):
-    from beats_spark.dataops import ivf_assign, kmeans_fit
+    from beats_analytics import ivf_assign, kmeans_fit
     df = _clustered_vectors(spark)
     cent = kmeans_fit(df, k=3, max_iter=4)
     assert cent.count() == 3
@@ -108,7 +108,7 @@ def test_kmeans_fit_recovers_separated_clusters(spark):
 
 
 def test_kmeans_fit_deterministic_across_partitionings(spark):
-    from beats_spark.dataops import ivf_assign, kmeans_fit
+    from beats_analytics import ivf_assign, kmeans_fit
     df = _clustered_vectors(spark)
     a = kmeans_fit(df, k=3, max_iter=3)
     b = kmeans_fit(df.repartition(7), k=3, max_iter=3)
@@ -124,7 +124,7 @@ def test_kmeans_fit_deterministic_across_partitionings(spark):
 
 
 def test_kmeans_fit_empty_cluster_and_validation(spark):
-    from beats_spark.dataops import kmeans_fit
+    from beats_analytics import kmeans_fit
     import pytest as _pytest
     df = _clustered_vectors(spark, per_cluster=2)
     # k larger than distinct directions: empty clusters keep their
@@ -136,7 +136,7 @@ def test_kmeans_fit_empty_cluster_and_validation(spark):
 
 
 def test_ivf_topk_accepts_trained_centroids(spark, sf_dir):
-    from beats_spark.dataops import ivf_cosine_topk, kmeans_fit
+    from beats_analytics import ivf_cosine_topk, kmeans_fit
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet") \
         .select("vec_id", "embedding")
     corpus = emb.filter(F.col("vec_id") >= 10)
@@ -155,7 +155,7 @@ def _vec_df(spark, rows):
 
 
 def test_semdedup_keeps_farthest_of_dup_group(spark):
-    from beats_spark.dataops import semdedup
+    from beats_analytics import semdedup
     import math
     # one centroid at (1,0); three near-identical vectors at small
     # angles plus one orthogonal singleton. keep='far' must keep ONLY
@@ -182,7 +182,7 @@ def test_semdedup_keeps_farthest_of_dup_group(spark):
 
 
 def test_semdedup_near_keeps_closest_instead(spark):
-    from beats_spark.dataops import semdedup
+    from beats_analytics import semdedup
     import math
     vecs = _vec_df(spark, [
         (10, (math.cos(0.02), math.sin(0.02))),
@@ -196,7 +196,7 @@ def test_semdedup_near_keeps_closest_instead(spark):
 
 
 def test_semdedup_repartition_invariant_and_plan(spark, sf_dir):
-    from beats_spark.dataops import semdedup
+    from beats_analytics import semdedup
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
     cent = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("centroid_id"), "embedding")
@@ -212,7 +212,7 @@ def test_semdedup_repartition_invariant_and_plan(spark, sf_dir):
 
 def test_semdedup_validation_and_kmeans_composition(spark, sf_dir):
     import pytest
-    from beats_spark.dataops import kmeans_fit, semdedup
+    from beats_analytics import kmeans_fit, semdedup
     emb = _emb(spark, sf_dir).select("vec_id", "embedding")
     with pytest.raises(ValueError, match="keep"):
         semdedup(emb, emb.limit(1), 0.5, keep="nope")
@@ -230,7 +230,7 @@ def test_semdedup_validation_and_kmeans_composition(spark, sf_dir):
 # ------------------------------------------------------------- RRF
 
 def test_rrf_fuse_exact_scores_and_missing_ids(spark):
-    from beats_spark.dataops.similarity import rrf_fuse
+    from beats_analytics.similarity import rrf_fuse
     import pytest as _pytest
     r1 = spark.createDataFrame([(1, 1), (2, 2), (3, 3)],
                                "id long, rank int")
@@ -255,7 +255,7 @@ def test_multiprobe_recall_dominates_single_probe(spark, sf_dir):
     """Probing Hamming-1 buckets can only ADD candidates: multi-probe
     recall vs brute force is >= single-probe recall, and probes=0
     reproduces the single-probe operator exactly."""
-    from beats_spark.dataops.similarity import (
+    from beats_analytics.similarity import (
         cosine_topk, lsh_cosine_topk, lsh_multiprobe_topk)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.limit(8)
@@ -284,7 +284,7 @@ def test_bitext_margin_known_values_and_hub_penalty(spark):
     target (high cosine to EVERYTHING) must be margin-penalized."""
     import math
     from decimal import Decimal, ROUND_HALF_UP
-    from beats_spark.dataops.similarity import bitext_margin_mine
+    from beats_analytics.similarity import bitext_margin_mine
 
     def cos6(a, b):
         c = (sum(x * y for x, y in zip(a, b))
@@ -334,7 +334,7 @@ def test_pq_topk_recall_vs_brute_and_guards(spark):
     (recall vs brute force), and the rerank stage must make the
     returned cosines EXACT (not approximations)."""
     import pytest
-    from beats_spark.dataops.similarity import cosine_topk, pq_topk
+    from beats_analytics.similarity import cosine_topk, pq_topk
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = emb.filter("vec_id < 5")
     true = {(r["query_id"], r["neighbor_id"]): r["cosine"]
@@ -354,7 +354,7 @@ def test_pq_topk_recall_vs_brute_and_guards(spark):
 
 def test_hard_negatives_excludes_positives(spark, sf_dir):
     from pyspark.sql import functions as F
-    from beats_spark.dataops.similarity import (cosine_topk_blocked,
+    from beats_analytics.similarity import (cosine_topk_blocked,
                                                 hard_negatives)
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -375,7 +375,7 @@ def test_hard_negatives_excludes_positives(spark, sf_dir):
 
 
 def test_random_projection_exactness_and_edges(spark):
-    from beats_spark.dataops.similarity import random_projection
+    from beats_analytics.similarity import random_projection
     df = spark.createDataFrame(
         [(1, [1.0, -2.0, 0.5]), (2, [0.0, 0.0, 0.0]), (3, []), (4, None)],
         "vec_id bigint, embedding array<float>")
@@ -402,7 +402,7 @@ def test_random_projection_preserves_distances(spark):
     correlate with the original space (signs are pseudo-random enough)."""
     import itertools
     import numpy as np
-    from beats_spark.dataops.similarity import random_projection
+    from beats_analytics.similarity import random_projection
     rng = np.random.default_rng(7)
     # structured points (varying norms), so pairwise distances have
     # real spread — true-random Rademacher scores only r~0.5 on

@@ -1,4 +1,4 @@
-"""Sketch operators (dataops/sketch.py) and weighted priority
+"""Sketch operators (beats_analytics/sketch.py) and weighted priority
 sampling: semantics (exactness windows, over-estimate-only bounds, no
 false negatives), repartition invariance, loud-failure contracts, and
 the plan shapes the module's scale claims rest on."""
@@ -8,11 +8,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from beats_spark.dataops.sketch import (
+from beats_analytics.sketch import (
     bloom_build, bloom_probe, countmin_build, countmin_estimate,
     kmv_distinct,
 )
-from beats_spark.dataops.sample import priority_sample
+from beats_analytics.sample import priority_sample
 
 
 def _docs(spark, sf_dir):
@@ -197,7 +197,7 @@ def test_priority_sample_invariance_and_validation(spark, sf_dir):
 # --------------------------------------------------- gopher rule set
 
 def test_gopher_rules_each_threshold(spark):
-    from beats_spark.dataops.textstats import gopher_rules
+    from beats_analytics.textstats import gopher_rules
     base = ("the quick brown fox jumps over a lazy dog and that have "
             "be to of with more words here to clear the minimum")
     docs = [
@@ -238,8 +238,8 @@ def test_gopher_rules_each_threshold(spark):
 def test_stream_countmin_matches_batch(spark, tmp_path):
     """After draining any prefix of micro-batches, the streaming grid
     is bit-identical to the batch build over the same rows."""
-    from beats_spark.dataops.sketch import countmin_build
-    from beats_spark.streaming import stream_countmin
+    from beats_analytics.sketch import countmin_build
+    from beats_analytics.streaming import stream_countmin
 
     src, ck = str(tmp_path / "src"), str(tmp_path / "ck")
     b1 = spark.createDataFrame(
@@ -273,7 +273,7 @@ def test_priority_sample_large_weights_not_tie_collapsed(spark, sf_dir):
     0.000000 tie at token-count-scale weights, handing membership to
     the lexicographic tie-break; the Gumbel micro-nat key must keep
     weights in charge at any scale."""
-    from beats_spark.dataops.sample import priority_sample
+    from beats_analytics.sample import priority_sample
     docs = _docs(spark, sf_dir)
     big = docs.withColumn("w", F.col("n_chars").cast("double") * 1e5)
     got = priority_sample(big, "doc_id", "w", 20, keep_score=True)
@@ -307,7 +307,7 @@ def test_kmv_empty_input_global_form(spark, sf_dir):
 def test_stream_countmin_null_guard_matches_batch(spark, tmp_path):
     """stream_countmin delegates to countmin_build, so NULL keys fail
     loudly on both paths instead of silently widening the stream grid."""
-    from beats_spark.streaming import stream_countmin
+    from beats_analytics.streaming import stream_countmin
     src, ck = str(tmp_path / "nsrc"), str(tmp_path / "nck")
     spark.createDataFrame([(1, "a"), (2, None)], "i long, k string") \
         .coalesce(1).write.parquet(src)
@@ -323,7 +323,7 @@ def test_stream_countmin_null_guard_matches_batch(spark, tmp_path):
 # ---------------------------------------------------------------- HLL
 
 def test_hll_estimator_accuracy_and_merge(spark, sf_dir):
-    from beats_spark.dataops.sketch import (
+    from beats_analytics.sketch import (
         hll_distinct, hll_merge, hll_registers, hll_estimate)
     docs = _docs(spark, sf_dir)
     true = docs.select("text").distinct().count()
@@ -354,7 +354,7 @@ def test_hll_estimator_accuracy_and_merge(spark, sf_dir):
 
 
 def test_hll_partition_invariance_and_validation(spark, sf_dir):
-    from beats_spark.dataops.sketch import hll_distinct
+    from beats_analytics.sketch import hll_distinct
     docs = _docs(spark, sf_dir)
     one = sorted(map(tuple,
                      hll_distinct(docs, "text", by="lang",
@@ -373,7 +373,7 @@ def test_hll_register_exchange_is_partial_agg(spark, sf_dir):
     """The scale claim: the register build is a partial-combining
     max — HashAggregate appears below AND above the exchange, and the
     exchange key is (group, bucket), never the raw value."""
-    from beats_spark.dataops.sketch import hll_registers
+    from beats_analytics.sketch import hll_registers
     docs = _docs(spark, sf_dir)
     plan = _plan(hll_registers(docs, "text", by="lang", seed="s"))
     assert plan.count("HashAggregate") >= 2
@@ -436,7 +436,7 @@ def test_corpus_signature_merges_by_min(spark, sf_dir):
     the signature of a union equals the min-merge of partial
     signatures — the property that lets per-day sketches roll up
     without re-reading raw data (same contract as hll_merge)."""
-    from beats_spark.dataops.dedup import shingles
+    from beats_analytics.dedup import shingles
     docs = _docs(spark, sf_dir)
     k = 8
 
@@ -459,7 +459,7 @@ def test_corpus_overlap_estimate_brackets_exact(spark, sf_dir):
     on the 190 fixture pairs the mean absolute error must sit well
     inside the σ = sqrt(J(1-J)/16) ~ 0.12 band, and both columns
     stay in [0, 1]."""
-    from beats_spark.queries import QUERIES
+    from beats_analytics.queries import QUERIES
     rows = QUERIES["corpus_overlap"](spark, sf_dir).collect()
     assert len(rows) == 190
     errs = [abs(r.j_est - r.j_exact) for r in rows]
@@ -473,8 +473,8 @@ def test_stream_hll_matches_batch_and_is_replay_safe(spark, tmp_path):
     register frame is bit-identical to the batch build over the same
     rows; replaying a batch (at-least-once delivery) cannot move any
     register because max() is idempotent."""
-    from beats_spark.dataops.sketch import hll_registers, hll_estimate
-    from beats_spark.streaming import stream_hll
+    from beats_analytics.sketch import hll_registers, hll_estimate
+    from beats_analytics.streaming import stream_hll
 
     src, ck = str(tmp_path / "src"), str(tmp_path / "ck")
     b1 = spark.createDataFrame(
@@ -514,7 +514,7 @@ def test_stream_hll_matches_batch_and_is_replay_safe(spark, tmp_path):
 def test_hll_composite_by_matches_single_key_slices(spark, sf_dir):
     """A composite (key, window) grouping gives the same registers as
     running the single-key sketch inside each window slice."""
-    from beats_spark.dataops.sketch import hll_registers
+    from beats_analytics.sketch import hll_registers
     ev = _events(spark, sf_dir)
     keyed = ev.select(
         "event_type",
@@ -535,7 +535,7 @@ def test_hll_composite_by_matches_single_key_slices(spark, sf_dir):
 # ---------------------------------------------------- HDR histogram
 
 def test_hdr_histogram_buckets_merge_and_percentiles(spark):
-    from beats_spark.dataops.sketch import hdr_histogram, hdr_percentiles
+    from beats_analytics.sketch import hdr_histogram, hdr_percentiles
     # values in micro-units after scale 1: 0, 1, 2, 3, 4..7, 8..15
     rows = [(0.0,), (1.0,), (2.0,), (3.0,), (5.0,), (12.0,)]
     df = spark.createDataFrame(rows, "v double")
@@ -563,7 +563,7 @@ def test_hdr_histogram_buckets_merge_and_percentiles(spark):
 
 
 def test_hdr_histogram_negative_fails_loud(spark):
-    from beats_spark.dataops.sketch import hdr_histogram, hdr_percentiles
+    from beats_analytics.sketch import hdr_histogram, hdr_percentiles
     df = spark.createDataFrame([(1.0,), (-2.0,)], "v double")
     with pytest.raises(Exception, match="negative"):
         hdr_histogram(df, "v").collect()
@@ -580,7 +580,7 @@ def test_hdr_histogram_negative_fails_loud(spark):
 # ------------------------------------------------------ heavy hitters
 
 def test_heavy_hitters_exact_vs_groupby(spark, sf_dir):
-    from beats_spark.dataops.sketch import heavy_hitters
+    from beats_analytics.sketch import heavy_hitters
     ev = _events(spark, sf_dir).select(
         (F.col("user_id") % 23).cast("string").alias("item"))
     k = 15
@@ -597,7 +597,7 @@ def test_heavy_hitters_exact_vs_groupby(spark, sf_dir):
 
 
 def test_heavy_hitters_partition_invariance_and_fields(spark, sf_dir):
-    from beats_spark.dataops.sketch import heavy_hitters
+    from beats_analytics.sketch import heavy_hitters
     ev = _events(spark, sf_dir).select(
         F.when(F.col("event_id") % 4 == 0, F.lit("hot"))
         .otherwise(F.col("event_id").cast("string")).alias("item"))
@@ -612,7 +612,7 @@ def test_heavy_hitters_partition_invariance_and_fields(spark, sf_dir):
 
 
 def test_heavy_hitters_plan_and_validation(spark, sf_dir):
-    from beats_spark.dataops.sketch import heavy_hitters
+    from beats_analytics.sketch import heavy_hitters
     ev = _events(spark, sf_dir).select(
         (F.col("user_id") % 5).cast("string").alias("item"))
     plan = _plan(heavy_hitters(ev, "item", k=4))

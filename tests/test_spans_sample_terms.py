@@ -1,10 +1,10 @@
 """Duplicate n-gram spans, deterministic sampling, and term stats
-(beats_spark.dataops.{spans,sample,terms})."""
+(beats_analytics.{spans,sample,terms})."""
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
-from beats_spark.dataops import (
+from beats_analytics import (
     cap_per_key, doc_frequency, doc_ngrams, hash_sample,
     ngram_duplicate_stats, tfidf_top_terms,
 )
@@ -134,7 +134,7 @@ def test_tfidf_top_terms_hand_case(spark):
 # ------------------------------------------------------ span removal
 
 def test_remove_duplicate_spans_keep_first(spark):
-    from beats_spark.dataops import remove_duplicate_spans
+    from beats_analytics import remove_duplicate_spans
     docs = spark.createDataFrame([
         (1, "the cat sat on the mat"),   # first occurrence survives
         (2, "the cat sat by a window"),  # loses 'the cat sat'
@@ -153,7 +153,7 @@ def test_remove_duplicate_spans_keep_first(spark):
 
 
 def test_remove_duplicate_spans_drop_all_and_overlap(spark):
-    from beats_spark.dataops import remove_duplicate_spans
+    from beats_analytics import remove_duplicate_spans
     docs = spark.createDataFrame([
         (1, "a b c d e"),
         (2, "a b c d x"),   # shares 'a b c' and 'b c d' (overlap)
@@ -167,7 +167,7 @@ def test_remove_duplicate_spans_drop_all_and_overlap(spark):
 
 
 def test_remove_duplicate_spans_within_doc_repeat(spark):
-    from beats_spark.dataops import remove_duplicate_spans
+    from beats_analytics import remove_duplicate_spans
     # the repeat inside ONE doc: second occurrence removed, first kept
     docs = spark.createDataFrame(
         [(1, "x y z q x y z")], ["doc_id", "text"])
@@ -177,7 +177,7 @@ def test_remove_duplicate_spans_within_doc_repeat(spark):
 
 
 def test_remove_spans_hash_and_text_modes_agree(spark, sf_dir):
-    from beats_spark.dataops import remove_duplicate_spans
+    from beats_analytics import remove_duplicate_spans
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     a = remove_duplicate_spans(docs, n=3, by_hash=True)
     b = remove_duplicate_spans(docs, n=3, by_hash=False)
@@ -185,7 +185,7 @@ def test_remove_spans_hash_and_text_modes_agree(spark, sf_dir):
 
 
 def test_remove_duplicate_spans_null_text(spark):
-    from beats_spark.dataops import remove_duplicate_spans
+    from beats_analytics import remove_duplicate_spans
     docs = spark.createDataFrame([(1, None), (2, "a b")],
                                  "doc_id long, text string")
     out = {r.doc_id: r for r in
@@ -198,7 +198,7 @@ def test_remove_duplicate_spans_null_text(spark):
 # ----------------------------------------------------------- mixture
 
 def test_mixture_plan_weights(spark):
-    from beats_spark.dataops import mixture_plan
+    from beats_analytics import mixture_plan
     rows = [("en", i) for i in range(800)] + \
            [("de", i) for i in range(100)] + \
            [("es", i) for i in range(300)]
@@ -213,7 +213,7 @@ def test_mixture_plan_weights(spark):
 
 
 def test_mixture_sample_proportions_and_determinism(spark):
-    from beats_spark.dataops import mixture_sample
+    from beats_analytics import mixture_sample
     rows = [("en", i) for i in range(4000)] + \
            [("de", i + 10_000) for i in range(500)] + \
            [("xx", i + 50_000) for i in range(50)]
@@ -236,7 +236,7 @@ def test_mixture_sample_proportions_and_determinism(spark):
 
 
 def test_mixture_temperature_and_errors(spark):
-    from beats_spark.dataops import mixture_plan, mixture_sample
+    from beats_analytics import mixture_plan, mixture_sample
     rows = [("a", i) for i in range(900)] + \
            [("b", i + 1000) for i in range(100)]
     df = spark.createDataFrame(rows, ["g", "id"])
@@ -261,7 +261,7 @@ def test_mixture_temperature_and_errors(spark):
 
 
 def test_mixture_total_rows_cap(spark):
-    from beats_spark.dataops import mixture_plan
+    from beats_analytics import mixture_plan
     rows = [("a", i) for i in range(1000)] + \
            [("b", i + 5000) for i in range(1000)]
     df = spark.createDataFrame(rows, ["g", "id"])
@@ -275,7 +275,7 @@ def test_mixture_total_rows_cap(spark):
 # ------------------------------------------------- incremental dedup
 
 def test_dedup_against(spark):
-    from beats_spark.dataops import dedup_against
+    from beats_analytics import dedup_against
     seen = spark.createDataFrame(
         [(1, "old page one"), (2, "old page two")], ["doc_id", "text"])
     new = spark.createDataFrame(
@@ -296,7 +296,7 @@ def test_dedup_against(spark):
     n2 = spark.createDataFrame(
         [(1, "HTTP://A.com:80/x"), (2, "http://b.com/y")],
         ["doc_id", "url"])
-    from beats_spark.dataops import canonical_url
+    from beats_analytics import canonical_url
     got = sorted(r.doc_id for r in
                  dedup_against(n2, s2, id_col="doc_id",
                                key=canonical_url(F.col("url"))).collect())
@@ -306,7 +306,7 @@ def test_dedup_against(spark):
 def test_dedup_incremental_query_nonvacuous(spark, sf_dir):
     """Both drop mechanisms fire on real data: re-crawls (vs history)
     and within-batch copies each remove rows."""
-    from beats_spark.queries import QUERIES
+    from beats_analytics.queries import QUERIES
     out = QUERIES["dedup_incremental"](spark, sf_dir)
     ids = sorted(r.doc_id for r in out.collect())
     assert len(ids) == 250                     # only genuinely-new pages
@@ -316,7 +316,7 @@ def test_dedup_incremental_query_nonvacuous(spark, sf_dir):
 # --------------------------------------------------- quantile buckets
 
 def test_quantile_buckets(spark):
-    from beats_spark.dataops import quantile_buckets
+    from beats_analytics import quantile_buckets
     rows = [("a", i, float(i)) for i in range(9)] + \
            [("b", 100, None), ("b", 101, 5.0), ("b", 102, 1.0)]
     df = spark.createDataFrame(rows, "g string, id long, s double")
@@ -341,7 +341,7 @@ def test_ngram_stats_string_ids(spark):
     """Short docs with STRING ids keep distinct per-doc keys (a cast
     to long would NULL out and collapse them into one hot group, and
     would throw under ANSI mode)."""
-    from beats_spark.dataops import ngram_duplicate_stats
+    from beats_analytics import ngram_duplicate_stats
     docs = spark.createDataFrame(
         [("http://a/x", "hi"), ("http://b/y", "yo"),
          ("http://c/z", "the cat sat on a mat")],
@@ -358,7 +358,7 @@ def test_ngram_stats_string_ids(spark):
 def _budget_naive(spark, df, key_col, tokens_col, budget, seed=""):
     """The definition: global cumsum over (h, key) order, cum <= b."""
     from pyspark.sql import Window
-    from beats_spark.dataops.sample import _priority60
+    from beats_analytics.sample import _priority60
     w = (Window.orderBy(F.col("__h"), F.col(key_col))
          .rowsBetween(Window.unboundedPreceding, 0))
     return (df.withColumn("__h", _priority60(key_col, seed, "naive"))
@@ -374,7 +374,7 @@ def _toy_docs(spark, n=200):
 
 
 def test_token_budget_matches_global_window(spark):
-    from beats_spark.dataops import token_budget_sample
+    from beats_analytics import token_budget_sample
     df = _toy_docs(spark)
     total = df.agg(F.sum("n_tok")).first()[0]
     for budget in (0, 1, total // 3, total // 2, total, total + 10):
@@ -388,8 +388,8 @@ def test_token_budget_matches_global_window(spark):
 
 
 def test_token_budget_exact_boundary_and_zero_tokens(spark):
-    from beats_spark.dataops import token_budget_sample
-    from beats_spark.dataops.sample import _priority60
+    from beats_analytics import token_budget_sample
+    from beats_analytics.sample import _priority60
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate([5, 0, 7, 0, 3, 9, 0, 2])],
         ["doc_id", "n_tok"])
@@ -414,7 +414,7 @@ def test_token_budget_exact_boundary_and_zero_tokens(spark):
 
 
 def test_token_budget_partition_invariance_and_cum(spark):
-    from beats_spark.dataops import token_budget_sample
+    from beats_analytics import token_budget_sample
     df = _toy_docs(spark, 300)
     a = token_budget_sample(df, "doc_id", "n_tok", 2000,
                             seed="s1", n_buckets=16)
@@ -434,7 +434,7 @@ def test_token_budget_partition_invariance_and_cum(spark):
 
 
 def test_token_budget_guards(spark):
-    from beats_spark.dataops import token_budget_sample
+    from beats_analytics import token_budget_sample
     df = _toy_docs(spark, 10)
     with pytest.raises(ValueError):
         token_budget_sample(df, "doc_id", "n_tok", -1)
@@ -447,8 +447,8 @@ def test_token_budget_guards(spark):
 
 def test_corpus_shuffle_is_exact_permutation(spark):
     from pyspark.sql import Window
-    from beats_spark.dataops import corpus_shuffle
-    from beats_spark.dataops.sample import _priority60
+    from beats_analytics import corpus_shuffle
+    from beats_analytics.sample import _priority60
     df = _toy_docs(spark, 257)
     out = corpus_shuffle(df, "doc_id", seed="e0", n_buckets=8)
     rows = out.collect()
@@ -463,7 +463,7 @@ def test_corpus_shuffle_is_exact_permutation(spark):
 
 
 def test_corpus_shuffle_seed_and_stability(spark):
-    from beats_spark.dataops import corpus_shuffle
+    from beats_analytics import corpus_shuffle
     df = _toy_docs(spark, 100)
     a = {(r.doc_id, r.shuffle_pos) for r in
          corpus_shuffle(df, "doc_id", seed="e1").collect()}
@@ -478,8 +478,8 @@ def test_corpus_shuffle_seed_and_stability(spark):
 
 def test_token_budget_per_group_matches_partitioned_window(spark):
     from pyspark.sql import Window
-    from beats_spark.dataops import token_budget_sample
-    from beats_spark.dataops.sample import _priority60
+    from beats_analytics import token_budget_sample
+    from beats_analytics.sample import _priority60
     df = spark.range(300).select(
         F.col("id").alias("doc_id"),
         F.element_at(F.array(F.lit("a"), F.lit("b"), F.lit("c")),
@@ -500,7 +500,7 @@ def test_token_budget_per_group_matches_partitioned_window(spark):
 
 
 def test_token_budget_group_guards(spark):
-    from beats_spark.dataops import token_budget_sample
+    from beats_analytics import token_budget_sample
     df = spark.createDataFrame([(1, "a", 5)],
                                ["doc_id", "src", "n_tok"])
     with pytest.raises(ValueError, match="requires by="):
@@ -530,7 +530,7 @@ def test_token_budget_group_guards(spark):
 # ------------------------------------------------------- lang_spans
 
 def test_lang_spans_merges_adjacent_and_segments_switches(spark):
-    from beats_spark.dataops.textstats import lang_spans
+    from beats_analytics.textstats import lang_spans
     docs = spark.createDataFrame([
         # en, en -> ONE span of 2; then de span; then en again
         (1, "the and of to is\n\nthe of is\n\nder und das ist\n\n"
@@ -550,7 +550,7 @@ def test_lang_spans_single_window_exchange(spark, sf_dir):
     """Paragraphs of one doc land in one partition: the split +
     marker ID is map-side; the plan's only exchanges are the span
     window and the final span groupBy (which AQE may co-locate)."""
-    from beats_spark.dataops.textstats import lang_spans
+    from beats_analytics.textstats import lang_spans
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     plan = (lang_spans(docs)._jdf.queryExecution()
             .executedPlan().toString())
@@ -561,7 +561,7 @@ def test_lang_spans_single_window_exchange(spark, sf_dir):
 # ----------------------------------------------------- phrase_search
 
 def test_phrase_search_overlaps_positions_and_pushdown(spark):
-    from beats_spark.dataops.terms import phrase_search
+    from beats_analytics.terms import phrase_search
     import pytest as _pytest
     d = spark.createDataFrame(
         [(1, "a a a b"), (2, "x a a y a a"), (3, "a b a")],
@@ -583,7 +583,7 @@ def test_phrase_search_overlaps_positions_and_pushdown(spark):
 # ------------------------------------------------------ collocations
 
 def test_collocations_lift_ranking_and_exact_scores(spark):
-    from beats_spark.dataops.terms import collocations
+    from beats_analytics.terms import collocations
     # "new york" is the only pair of exclusive companions; every
     # other bigram has at least one high-frequency member diluting it
     rows = [(i, "the cat sat the cat ran the new york the dog sat")
@@ -602,7 +602,7 @@ def test_collocations_lift_ranking_and_exact_scores(spark):
 
 def test_sparse_cosine_values_and_stop_term_cutoff(spark):
     import math
-    from beats_spark.dataops.terms import sparse_cosine_pairs
+    from beats_analytics.terms import sparse_cosine_pairs
     docs = spark.createDataFrame([
         (1, "a b c"), (2, "a b c"),          # identical -> 1.0
         (3, "x y z"),                        # orthogonal to 1/2
@@ -630,7 +630,7 @@ def test_winnow_guarantee_and_known_values(spark):
     """Winnowing's core guarantee: any shared substring of length
     >= k + w - 1 contributes at least one COMMON fingerprint to both
     docs; plus a hand-checkable tiny case."""
-    from beats_spark.dataops.dedup import winnow_fingerprints
+    from beats_analytics.dedup import winnow_fingerprints
     shared = "the quick brown fox jumps over the lazy dog"
     df = spark.createDataFrame(
         [(1, "AAA " + shared + " BBB"),
@@ -659,7 +659,7 @@ def test_winnow_guarantee_and_known_values(spark):
 
 
 def test_winnow_pairs_finds_shared_passage(spark):
-    from beats_spark.dataops.dedup import winnow_pairs
+    from beats_analytics.dedup import winnow_pairs
     passage = ("winnowing guarantees matches for substrings of length "
                "at least k plus w minus one characters in both texts")
     df = spark.createDataFrame(
@@ -684,7 +684,7 @@ def test_winnow_pairs_finds_shared_passage(spark):
 
 
 def test_percolate_and_semantics_lang_gate_and_zero_match(spark):
-    from beats_spark.dataops.terms import percolate
+    from beats_analytics.terms import percolate
     from pyspark.sql.types import (ArrayType, StringType, StructField,
                                    StructType)
     docs = spark.createDataFrame(
@@ -712,7 +712,7 @@ def test_percolate_and_semantics_lang_gate_and_zero_match(spark):
 
 
 def test_bm25_fixed_point_known_values(spark):
-    from beats_spark.dataops.terms import bm25_topk
+    from beats_analytics.terms import bm25_topk
     import math
     docs = spark.createDataFrame(
         [(1, "x x y pad pad"),      # tf(x)=2, tf(y)=1, dl=5
@@ -739,7 +739,7 @@ def test_bm25_fixed_point_known_values(spark):
 
 
 def test_kwic_snippets_overlaps_edges_and_short_docs(spark):
-    from beats_spark.dataops.terms import kwic_snippets
+    from beats_analytics.terms import kwic_snippets
     docs = spark.createDataFrame(
         [(1, "a a a b c"),        # overlapping matches at 0 and 1
          (2, "x a a"),            # match flush at end
@@ -754,7 +754,7 @@ def test_kwic_snippets_overlaps_edges_and_short_docs(spark):
 
 
 def test_term_drift_known_ratios_and_directions(spark):
-    from beats_spark.dataops.terms import term_drift
+    from beats_analytics.terms import term_drift
     old = spark.createDataFrame(
         [(1, "up dn dn dn dn flat flat")], "doc_id long, text string")
     new = spark.createDataFrame(
@@ -773,7 +773,7 @@ def test_term_drift_known_ratios_and_directions(spark):
 
 def test_trigram_grep_exact_vs_direct_scan_and_guards(spark):
     import pytest
-    from beats_spark.dataops.terms import trigram_grep
+    from beats_analytics.terms import trigram_grep
     docs = spark.createDataFrame(
         [(1, "xxabcxx"),          # one hit
          (2, "ababab"),           # "aba": non-overlap count = 1... 
@@ -801,7 +801,7 @@ def test_cdc_chunks_edit_locality_and_edges(spark):
     would re-align and change all of them). Plus edge cases: empty,
     NULL, and shorter-than-k texts come back as one chunk (or none
     when empty) without crashing."""
-    from beats_spark.dataops.dedup import cdc_chunks
+    from beats_analytics.dedup import cdc_chunks
     import random
     rng = random.Random(7)
     base = "".join(rng.choice("abcdefgh ") for _ in range(600))
@@ -833,7 +833,7 @@ def test_cdc_chunks_edit_locality_and_edges(spark):
 def test_cdc_dup_stats_counts_shared_chunks(spark):
     """Two docs sharing a long middle passage must share duplicate
     chunk digests, and saved_chars = (copies-1) * n_chars."""
-    from beats_spark.dataops.dedup import cdc_chunks, cdc_dup_stats
+    from beats_analytics.dedup import cdc_chunks, cdc_dup_stats
     import random
     rng = random.Random(11)
     mid = "".join(rng.choice("abcdefgh ") for _ in range(500))
@@ -861,7 +861,7 @@ def test_rake_keywords_paper_semantics(spark):
     punctuation, degree/frequency word scores, summed phrase scores,
     deterministic micro-unit integers. 'deep neural networks' must
     outrank single words (degree rewards co-occurrence)."""
-    from beats_spark.dataops.terms import rake_keywords
+    from beats_analytics.terms import rake_keywords
     text = ("Deep neural networks, and deep learning. "
             "Networks of the future!")
     df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
@@ -892,7 +892,7 @@ def test_rake_keywords_paper_semantics(spark):
 
 def test_gazetteer_match_longest_overlaps_and_guards(spark):
     import pytest
-    from beats_spark.dataops.terms import gazetteer_match
+    from beats_analytics.terms import gazetteer_match
     docs = spark.createDataFrame(
         [(1, "visit New York City and new york today"),
          (2, "the big apple"),          # no entity
@@ -936,7 +936,7 @@ def test_gazetteer_match_longest_overlaps_and_guards(spark):
 def test_ndcg_at_k_known_values(spark):
     """Hand-computed nDCG@3: gains rounded to micro-units first, NULL
     ndcg for queries with no positive judgments, unjudged = rel 0."""
-    from beats_spark.dataops.terms import ndcg_at_k
+    from beats_analytics.terms import ndcg_at_k
     runs = spark.createDataFrame(
         [("q1", 10, 1), ("q1", 11, 2), ("q1", 12, 3), ("q1", 13, 4),
          ("q2", 20, 1)],
@@ -964,7 +964,7 @@ def test_ndcg_at_k_known_values(spark):
 
 
 def test_vocab_coverage_known_values(spark):
-    from beats_spark.dataops.textstats import vocab_coverage
+    from beats_analytics.textstats import vocab_coverage
     df = spark.createDataFrame(
         # trigrams: "a b c"×2 (docs 1,2), "b c d"×1 (doc 2), plus NULL
         # and too-short docs contributing nothing
@@ -991,7 +991,7 @@ def test_zipf_fit_known_slope(spark):
     slope -ln2/ln2 steps... verify against a hand-computed fixed-point
     regression on the exact same integer spec."""
     import math
-    from beats_spark.dataops.textstats import zipf_fit
+    from beats_analytics.textstats import zipf_fit
     # grams: "g1 g1 g1" repeated 8x, "g2 g2 g2" 4x, "g3 g3 g3" 2x,
     # "g4 g4 g4" 1x -> freq/rank: (1,8),(2,4),(3,2),(4,1)
     rows = []

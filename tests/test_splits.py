@@ -1,10 +1,10 @@
-"""Deterministic hash splits (dataops/splits.py): stability,
+"""Deterministic hash splits (beats_analytics/splits.py): stability,
 fraction boundaries, cluster-level leakage control."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from beats_spark.dataops.splits import hash_split, split_fractions
+from beats_analytics.splits import hash_split, split_fractions
 
 
 def test_split_deterministic_under_partitioning(spark):

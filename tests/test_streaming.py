@@ -458,7 +458,7 @@ def test_multiline_before_mode_batch_streaming_equivalence(spark, tmp_path):
 def test_stream_dedup_against(spark, tmp_path):
     """Arriving pages dedup against the static corpus every
     micro-batch, and against the stream itself within the watermark."""
-    from beats_spark.streaming import stream_dedup_against
+    from beats_analytics.streaming import stream_dedup_against
 
     src, ck, out = (str(tmp_path / d) for d in ("src", "ck", "out"))
     seen = spark.createDataFrame([("already ingested page",)], ["text"])
@@ -509,16 +509,16 @@ def test_stateful_rate_limit_idle_timeout_same_admissions(spark, tmp_path):
              .trigger(availableNow=True).start())
         # a TTL query holds live timers, so availableNow never
         # self-terminates (see the operator docstring) — poll until
-        # the one data micro-batch has been processed, then stop
+        # the one data micro-batch has been processed, then stop.
+        # Progress is posted only after a batch commits, and the
+        # parquet file sink reports numOutputRows -1, so the batch's
+        # input count is the signal.
         import time
         deadline = time.time() + 120
         while time.time() < deadline:
             if q.awaitTermination(2):
                 break
-            done = [p for p in q.recentProgress
-                    if p["numInputRows"] > 0
-                    and p["sink"]["numOutputRows"] >= 0]
-            if done:
+            if any(p["numInputRows"] > 0 for p in q.recentProgress):
                 break
         q.stop()
         q.awaitTermination()
@@ -581,8 +581,8 @@ def test_stream_sessions_merge_across_batches(spark, tmp_path):
     """Sessions merge across micro-batches (file 2 extends file 1's
     open session), finalize when the watermark passes, and line up
     with the batch operator's boundaries on the same data."""
-    from beats_spark.dataops import session_rollup
-    from beats_spark.streaming.pipeline import stream_sessions
+    from beats_analytics import session_rollup
+    from beats_analytics.streaming import stream_sessions
     src_dir = str(tmp_path / "ev")
     ck = str(tmp_path / "ck")
     out_dir = str(tmp_path / "sessions")
@@ -644,8 +644,8 @@ def test_stream_sessions_gap_boundary_matches_batch(spark, tmp_path):
     """An event arriving EXACTLY gap_seconds after the previous one:
     assert the streaming session_window and the batch operator agree
     on whether it merges (batch rule: strict >, so it merges)."""
-    from beats_spark.dataops import session_rollup
-    from beats_spark.streaming.pipeline import stream_sessions
+    from beats_analytics import session_rollup
+    from beats_analytics.streaming import stream_sessions
     src_dir = str(tmp_path / "ev")
     os.makedirs(src_dir)
     t0 = 1_700_000_000_000_000
@@ -692,8 +692,8 @@ def test_stream_count_anomalies_matches_batch(spark, tmp_path):
     to the batch decimal(38,0) operator on the same bucketed counts,
     with state carried across micro-batches AND a query restart; a
     replayed (out-of-order) bucket is marked n_prior=-1, flag NULL."""
-    from beats_spark.dataops import count_anomalies
-    from beats_spark.streaming.pipeline import stream_count_anomalies
+    from beats_analytics import count_anomalies
+    from beats_analytics.streaming import stream_count_anomalies
     src_dir = str(tmp_path / "counts")
     ck = str(tmp_path / "ck")
     out_dir = str(tmp_path / "flags")
@@ -759,7 +759,7 @@ def test_stream_event_join_matches_batch(spark, tmp_path):
     different micro-batches."""
     import datetime as dt
     from pyspark.sql import functions as F
-    from beats_spark.streaming import stream_event_join
+    from beats_analytics.streaming import stream_event_join
 
     t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -827,8 +827,8 @@ def test_stream_ewma_matches_batch(spark, tmp_path):
     and a query restart and reproduces the batch kernel's smoothed
     values and spike flags bit-for-bit; a replayed (out-of-order) row
     is emitted with NULL ewma/spike and leaves the state untouched."""
-    from beats_spark.dataops.events import ewma_smooth
-    from beats_spark.streaming.pipeline import stream_ewma
+    from beats_analytics.events import ewma_smooth
+    from beats_analytics.streaming import stream_ewma
     src_dir = str(tmp_path / "ev")
     ck = str(tmp_path / "ck")
     out_dir = str(tmp_path / "sm")
@@ -885,8 +885,8 @@ def test_stream_percolate_matches_batch_and_join_form(spark, tmp_path):
     """Alerts over any micro-batch split equal batch percolation of
     the same rows, and the compiled form agrees with the join-form
     percolate on (doc, query) pairs."""
-    from beats_spark.streaming.pipeline import stream_percolate
-    from beats_spark.dataops.terms import percolate, with_percolator
+    from beats_analytics.streaming import stream_percolate
+    from beats_analytics.terms import percolate, with_percolator
     from pyspark.sql.types import (ArrayType, StringType, StructField,
                                    StructType)
 
@@ -945,8 +945,8 @@ def test_stream_dns_alerts_matches_batch(spark, tmp_path):
     """DNS-tunnel alerts over any micro-batch split equal the batch
     dns_tunnel_flags filter on the same rows (stateless projection —
     trigger-timing-independent)."""
-    from beats_spark.streaming.pipeline import stream_dns_alerts
-    from beats_spark.dataops.textstats import dns_tunnel_flags
+    from beats_analytics.streaming import stream_dns_alerts
+    from beats_analytics.textstats import dns_tunnel_flags
 
     rows = [("e0", "www.example.com"),
             ("e1", "d41d8cd98f00b204e9800998ecf8427e.t.example.com"),
@@ -983,7 +983,7 @@ def test_stateful_heavy_hitters_candidates_complete(spark, tmp_path):
     MG summary contains every global 1/k-heavy item (no false
     negatives), and an exact recount over the candidates equals the
     exact HAVING set — the batch op's contract, live."""
-    from beats_spark.streaming.pipeline import stateful_heavy_hitters
+    from beats_analytics.streaming import stateful_heavy_hitters
     src_dir = str(tmp_path / "items")
     ck = str(tmp_path / "ck_hh")
     out_dir = str(tmp_path / "hh")
@@ -1042,8 +1042,8 @@ def test_stateful_counter_rates_matches_batch(spark, tmp_path):
     row-for-row on in-order input, with state carried across
     micro-batches AND a restart; a replayed sample is late-marked
     (dt_us = -1) and leaves state untouched."""
-    from beats_spark.dataops.events import counter_rates
-    from beats_spark.streaming.pipeline import stateful_counter_rates
+    from beats_analytics.events import counter_rates
+    from beats_analytics.streaming import stateful_counter_rates
     src_dir = str(tmp_path / "ctr")
     ck = str(tmp_path / "ck_cr")
     out_dir = str(tmp_path / "rates")
@@ -1107,8 +1107,8 @@ def test_stateful_ewma_matches_batch(spark, tmp_path):
     """Streaming EWMA+spike emission replays the batch integer
     recurrence bit-for-bit across micro-batches and a restart; a
     replayed sample is late-marked and leaves state untouched."""
-    from beats_spark.dataops.events import ewma_smooth
-    from beats_spark.streaming.pipeline import stateful_ewma_smooth
+    from beats_analytics.events import ewma_smooth
+    from beats_analytics.streaming import stateful_ewma_smooth
     src_dir = str(tmp_path / "ewma_src")
     ck = str(tmp_path / "ck_ewma")
     out_dir = str(tmp_path / "ewma_out")
@@ -1170,8 +1170,8 @@ def test_stateful_sequence_gaps_matches_batch(spark, tmp_path):
     """Running per-key gap audit totals converge to the batch
     operator's row on per-key-ordered input; a below-last_seq record
     is late-counted without disturbing the audit."""
-    from beats_spark.dataops.events import sequence_gaps
-    from beats_spark.streaming.pipeline import stateful_sequence_gaps
+    from beats_analytics.events import sequence_gaps
+    from beats_analytics.streaming import stateful_sequence_gaps
     src_dir = str(tmp_path / "seq_src")
     ck = str(tmp_path / "ck_seq")
     out_dir = str(tmp_path / "seq_out")
@@ -1236,8 +1236,8 @@ def test_stream_seasonal_anomaly_matches_batch(spark, tmp_path):
     flags exactly the buckets the batch operator flags: offline
     median baseline, online integer cross-multiplication, one
     broadcast join."""
-    from beats_spark.dataops.events import seasonal_anomaly
-    from beats_spark.streaming.pipeline import stream_seasonal_anomaly
+    from beats_analytics.events import seasonal_anomaly
+    from beats_analytics.streaming import stream_seasonal_anomaly
 
     # history: two keys, hourly counts over several days with one
     # hot (key, day, hour) cell
@@ -1303,8 +1303,8 @@ def test_stateful_rolling_quantile_matches_batch(spark, tmp_path):
     """Streaming trailing-window nearest-rank quantile matches the
     batch window row-for-row across micro-batches and a restart; a
     replayed sample late-marks without touching the ring buffer."""
-    from beats_spark.dataops.events import rolling_quantile
-    from beats_spark.streaming.pipeline import stateful_rolling_quantile
+    from beats_analytics.events import rolling_quantile
+    from beats_analytics.streaming import stateful_rolling_quantile
     src = str(tmp_path / "rq_src"); os.makedirs(src)
     t0 = 1_700_000_000_000_000
     vals = [50, 10, 90, 30, 70, 20, 80, 40]
@@ -1356,8 +1356,8 @@ def test_stateful_cusum_matches_batch(spark, tmp_path):
     """Streaming CUSUM fires the identical alarm set as the batch
     fold across micro-batches and a restart (both statistics reset
     after an alarm, integer spelling shared)."""
-    from beats_spark.dataops.events import cusum_alarms
-    from beats_spark.streaming.pipeline import stateful_cusum
+    from beats_analytics.events import cusum_alarms
+    from beats_analytics.streaming import stateful_cusum
     src = str(tmp_path / "cu_src"); os.makedirs(src)
     # mean shift upward after seq 5 → one 'up' alarm, then reset
     vals = [0, 100_000, -50_000, 0, 50_000,
@@ -1406,8 +1406,8 @@ def test_stateful_slo_burn_matches_batch(spark, tmp_path):
     bit-for-bit — including the calendar-gap rule, where the RANGE
     frame must shrink over quiet buckets — across micro-batches and
     a restart."""
-    from beats_spark.dataops.events import slo_burn
-    from beats_spark.streaming.pipeline import stateful_slo_burn
+    from beats_analytics.events import slo_burn
+    from beats_analytics.streaming import stateful_slo_burn
     src = str(tmp_path / "sb_src"); os.makedirs(src)
     # (bucket index, events, errors) with a 4-bucket calendar gap
     rows_all = [("svc", 0, 100, 1), ("svc", 1, 100, 5),

@@ -1,8 +1,8 @@
-"""Unicode normalization (beats_spark.dataops.unicode)."""
+"""Unicode normalization (beats_analytics.unicode)."""
 import duckdb
 from pyspark.sql import functions as F
 
-from beats_spark.dataops import (
+from beats_analytics import (
     clean_text_column, unicode_clean, unicode_clean_sql,
 )
 

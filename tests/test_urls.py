@@ -1,9 +1,9 @@
 """URL canonicalization and URL-level dedup
-(beats_spark.dataops.urls)."""
+(beats_analytics.urls)."""
 import pytest
 from pyspark.sql import functions as F
 
-from beats_spark.dataops import canonical_url, url_dedup
+from beats_analytics import canonical_url, url_dedup
 
 
 def _canon(spark, urls, **kw):
@@ -104,7 +104,7 @@ def test_stateful_url_dedup_across_batches(spark, tmp_path):
     """Re-spellings of one canonical URL arriving in DIFFERENT
     micro-batches (within the watermark) still dedup to one survivor;
     distinct canonicals all pass."""
-    from beats_spark.streaming import stateful_url_dedup
+    from beats_analytics.streaming import stateful_url_dedup
 
     src, ck, out = (str(tmp_path / d) for d in ("src", "ck", "out"))
     base = "2024-01-01 00:0{m}:00"
@@ -172,7 +172,7 @@ def test_url_dedup_null_urls_fail_loudly(spark):
 
 
 def test_lang_url_skeleton_forms(spark):
-    from beats_spark.dataops.urls import lang_url_skeleton
+    from beats_analytics.urls import lang_url_skeleton
     from pyspark.sql import functions as F
 
     cases = [
@@ -196,7 +196,7 @@ def test_lang_url_skeleton_forms(spark):
 
 
 def test_lang_url_pairs_rep_bound_and_order(spark):
-    from beats_spark.dataops.urls import lang_url_pairs
+    from beats_analytics.urls import lang_url_pairs
 
     rows = [(1, "en", "https://s.example/en/p/1"),
             (2, "fr", "https://s.example/fr/p/1"),
@@ -213,7 +213,7 @@ def test_lang_url_pairs_rep_bound_and_order(spark):
 
 class TestCrawlTraps:
     def test_url_template_hex_before_digits(self, spark):
-        from beats_spark.dataops.urls import url_template
+        from beats_analytics.urls import url_template
         from pyspark.sql import functions as F
         rows = spark.createDataFrame(
             [("https://a.com/cal/2024/07/03/e91",),
@@ -225,7 +225,7 @@ class TestCrawlTraps:
             "/cal/N/N/N/eN", "/p/N?s=H", "/p/N?s=deadbeef", "/plain"]
 
     def test_crawl_traps_flags_explosive_host_only(self, spark):
-        from beats_spark.dataops.urls import crawl_traps
+        from beats_analytics.urls import crawl_traps
         trap = [(f"https://trap.com/cal/2024/{m}/{d}/x{i}",)
                 for i, (m, d) in enumerate((m, d) for m in range(1, 13)
                                            for d in range(1, 11))]
@@ -243,7 +243,7 @@ class TestCrawlTraps:
 def test_url_path_rollup_prefixes_and_guards(spark):
     import pytest
     from pyspark.sql import functions as F
-    from beats_spark.dataops.urls import url_path_rollup
+    from beats_analytics.urls import url_path_rollup
     df = spark.createDataFrame(
         [("https://a.example/x/y/z/deep",),   # depth capped at 3
          ("https://a.example/x/y?q=1",),      # query stripped
@@ -266,7 +266,7 @@ def test_surt_key_spec_vectors(spark):
     """SURT spelling per the public spec as the CC index applies it:
     scheme+www drop, host reverses, query sorts, default ports drop,
     bare host keys as host)/ ."""
-    from beats_spark.dataops.urls import surt_key
+    from beats_analytics.urls import surt_key
     cases = {
         "http://www.Example.com/Path?b=2&a=1":
             "com,example)/path?a=1&b=2",
@@ -289,7 +289,7 @@ def test_surt_key_spec_vectors(spark):
 
 
 def test_cdx_parse_and_latest(spark):
-    from beats_spark.dataops.urls import cdx_latest, cdx_parse
+    from beats_analytics.urls import cdx_latest, cdx_parse
     lines = [
         'com,a)/ 20240101120000 {"url":"http://a/","status":"200",'
         '"digest":"D1","filename":"f1","offset":"10","length":"5"}',
