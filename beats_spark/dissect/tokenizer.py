@@ -260,11 +260,14 @@ class Dissector:
 
         Equivalence: ``str.find(next_delim)`` (leftmost next-delimiter,
         ``dissect.go:103-165``) is exactly a lazy ``(.*?)`` followed by
-        the escaped delimiter; the tail capture is ``(.*)``; trailing
-        literal delimiters leave the remainder unanchored, matching the
-        tail-field rule at ``dissect.go:166-180``. Callers use this to
-        run the tokenizer as one C-speed vectorized ``str.extract``
-        over a whole Arrow batch instead of a per-message Python loop.
+        the escaped delimiter, inside an atomic group ``(?>...)`` because
+        ``find`` never revisits a delimiter it has taken (so a message
+        that fails costs one scan, not a backtracking search); the tail
+        capture is ``(.*)``; trailing literal delimiters leave the
+        remainder unanchored, matching the tail-field rule at
+        ``dissect.go:166-180``. The pattern reads the same in Python
+        (3.11+) and Java regex syntax, so callers run the tokenizer as
+        Catalyst ``regexp_extract`` expressions.
         """
         if self._trim is not None:
             return None
@@ -281,13 +284,14 @@ class Dissector:
         n_delims = len(self._delims)
         for i, f in enumerate(by_token):
             is_tail = (i + 1 >= n_delims)
+            field = "(.*" if f.kind == NORMAL else "(?:.*"
             if f.kind == NORMAL:
-                parts.append("(.*?)" if not is_tail else "(.*)")
                 group_keys.append(f.key)
+            if is_tail:
+                parts.append(field + ")")
             else:
-                parts.append("(?:.*?)" if not is_tail else "(?:.*)")
-            if not is_tail:
-                parts.append(re.escape(self._delims[i + 1]))
+                parts.append("(?>" + field + "?)"
+                             + re.escape(self._delims[i + 1]) + ")")
         return "(?s)" + "".join(parts), group_keys
 
     # -- extraction ---------------------------------------------------

@@ -22,6 +22,7 @@ as the watermark log already is.
 
 from __future__ import annotations
 
+import functools
 import os
 import unicodedata
 from typing import List, Tuple
@@ -29,7 +30,7 @@ from urllib.parse import quote, unquote
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import Observation
 
 __all__ = ["attach_observation", "metrics_rows", "write_metrics",
@@ -41,19 +42,22 @@ def attach_observation(df: DataFrame, sinks: List[str]
     """Attach Beats-named counters to the routed frame; read them after
     the write action completes."""
     obs = Observation("pipeline")
-    flags = (F.col("log_flags") if "log_flags" in df.columns
+    return df.observe(obs, *_counters(tuple(sinks),
+                                      "log_flags" in df.columns)), obs
+
+
+@functools.cache
+def _counters(sinks: Tuple[str, ...], has_flags: bool) -> Tuple[Column, ...]:
+    """The observed counter expressions, built once per sink list."""
+    flags = (F.col("log_flags") if has_flags
              else F.array().cast("array<string>"))
-    exprs = [
+    return (
         F.count(F.lit(1)).alias("events.total"),
         F.sum(F.when(F.array_contains(flags, "dissect_parsing_error"), 1)
                .otherwise(0))
          .alias("events.failed"),
-    ]
-    for s in sinks:
-        exprs.append(
-            F.sum(F.when(F.col("sink") == s, 1).otherwise(0))
-             .alias(f"output.{s}.events.acked"))
-    return df.observe(obs, *exprs), obs
+        *(F.sum(F.when(F.col("sink") == s, 1).otherwise(0))
+           .alias(f"output.{s}.events.acked") for s in sinks))
 
 
 def metrics_rows(obs: Observation) -> List[Tuple[str, int]]:

@@ -7,9 +7,15 @@ Stage → reference mapping:
 1. harvest: the pages table scan *is* the harvester
    (``filestream/input.go:178-247``); one input partition ≈ one file.
 2. multiline: continuation lines join their event inside each page —
-   per-row Arrow UDF, **no shuffle** (``multiline/pattern.go``).
-3. dissect: one Arrow-batched tokenizer pass, typed key columns
+   a regex ``split`` at every line break no whitespace follows, then
+   ``posexplode``; an event keeps its first ``MAX_LINES`` lines. Per
+   row, **no shuffle** (``multiline/pattern.go``).
+3. dissect: the tokenizer as one regex (``Dissector.to_regex``) in
+   ``regexp_extract`` expressions, typed key columns
    (``dissect/processor.go``); parse failures → dead-letter route.
+   Stages 2–7 are Catalyst expressions only: the plan has no Python
+   node, so every stage runs in the fused JVM operator chain, as Beats
+   runs its processors in the process that holds the queue and outputs.
 4. timestamp: layout parse of the extracted ts
    (``timestamp/timestamp.go:87``).
 5. enrich: lookups on host and lang — add_fields/geoip/dns emulation
@@ -28,6 +34,10 @@ Stage → reference mapping:
    Batch runs, snapshot runs and streaming micro-batches all commit
    through it, as every Beats input publishes through one output path.
 
+The expressions after the scan are built once per pair of lookup frames
+(``_compile``) and applied as a fixed handful of selects, so a run's plan
+costs a few dozen py4j calls, not the ~1,000 a build from scratch makes.
+
 Scale notes: the only shuffle in the whole plan is none at all — parse
 and enrich are map-side (map literal or broadcast), the routed write is
 partition-local. Hot-host skew therefore costs nothing here; it matters
@@ -37,11 +47,12 @@ salting handle it.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import weakref
 from dataclasses import dataclass, field
-from typing import Dict, List, Mapping, Optional
+from typing import Dict, List, Mapping, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -49,30 +60,95 @@ from pyspark.sql.types import (
     StructField, StructType)
 
 from .checkpoint import Watermarks, new_run_id, snapshot_id_of
-from .parse import parse_pages
+from .dissect.spark import FLAG_PARSING_ERROR, cast_for
+from .dissect.tokenizer import Dissector
 from .metrics import (attach_observation, metrics_rows, write_lineage,
                       write_metrics)
 from .processors.enrich import broadcast_enrich, enrich_assigns
-from .routing import route
+from .routing import compile_selector
 
 __all__ = ["build_events", "build_routed", "commit", "run_pipeline", "SINKS",
-           "TOKENIZER", "FOLD_MAX_ROWS"]
+           "TOKENIZER", "FOLD_MAX_ROWS", "CONTINUATION", "MAX_LINES"]
 
 TOKENIZER = 'ts=%{ts} level=%{level} host=%{host} bytes=%{bytes|long} msg="%{msg}"'
 SINKS = ["sink_es", "sink_ls", "sink_dropped", "sink_deadletter"]
+
+# Multiline ``pattern: '^\s'``, ``match: after``: a line that starts with
+# whitespace continues the event before it. These are the characters
+# Python's ``\s`` (``str.isspace()``) accepts besides ``\n`` itself, the
+# set ``functions.multiline.segment_lines`` joins on.
+CONTINUATION = ("\t\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+                "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008"
+                "\u2009\u200a\u2028\u2029\u202f\u205f\u3000")
+# an event ends at every line break that no continuation character follows
+_EVENT_BREAK = "\n(?![%s])" % "".join(f"\\u{ord(c):04x}" for c in CONTINUATION)
+MAX_LINES = 500  # multiline/pattern.go:52-58
+# an event's first MAX_LINES lines; possessive, so no input backtracks
+_HEAD_LINES = r"\A[^\n]*+(?:\n[^\n]*+){0,%d}" % (MAX_LINES - 1)
+_DISSECTOR = Dissector(TOKENIZER)
+_DISSECT_RX, _DISSECT_GROUPS = _DISSECTOR.to_regex()
+# the extracted ts becomes event_ts; the other keys keep their names
+_KEY_COLUMNS = [k for k in _DISSECTOR.keys if k != "ts"]
+_PAGE_COLUMNS = ["url", "warc_ts", "lang"]
+_EVENT_COLUMNS = (_PAGE_COLUMNS + ["msg_idx", "message"] + _KEY_COLUMNS
+                  + ["log_flags", "event_ts"])
+
+# enrich: geo/dns-ish lookup on host (dns/dns.go:80 append semantics,
+# tag_on_failure), label lookup on lang; (key, fields, tag_on_failure)
+# for host_meta, then lang_meta
+_LOOKUPS = (
+    ("host", {"geo_country": "geo_country", "geo_city": "geo_city",
+              "asn": "asn", "resolved_ip": "resolved_ip",
+              "registered_domain": "registered_domain"}, "host_meta_miss"),
+    ("lang", {"lang_label": "lang_label", "sink_hint": "sink_hint"}, None),
+)
+
+
+@functools.cache
+def _parse_stage() -> Tuple[Column, List[Column], List[Column], List[Column]]:
+    """The parse stage, built once: a filter that drops pages without
+    text, then three projections that split each page into its events,
+    keep an event's first ``MAX_LINES`` lines and dissect. Catalyst
+    expressions only, so the stage runs inside the fused JVM operator
+    chain with no Python worker."""
+    page = [F.col(c) for c in _PAGE_COLUMNS]
+    # the outer form only for its nullable output: the written schema
+    # keeps msg_idx and message optional. A split of a text is never
+    # empty, so once null texts are filtered it emits no extra row.
+    split = page + [F.posexplode_outer(F.split("text", _EVENT_BREAK, -1))
+                    .alias("msg_idx", "message")]
+    head = page + [F.col("msg_idx"), F.regexp_extract(
+        "message", _HEAD_LINES, 0).alias("message")]
+    message = F.col("message")
+    # dissect treats the empty message as a parse failure
+    # (dissect.go:57-62); a failed message carries no key values
+    ok = message.rlike(_DISSECT_RX) & (F.length(message) > 0)
+    raw = {k: F.when(ok, F.regexp_extract(message, _DISSECT_RX, i + 1))
+           for i, k in enumerate(_DISSECT_GROUPS)}
+    typed = {k: cast_for(dt, v) if (dt := _DISSECTOR.data_types.get(k))
+             else v for k, v in raw.items()}
+    dissect = page + [F.col("msg_idx"), message] + [
+        typed[k].alias(k) for k in _KEY_COLUMNS] + [
+        F.when(~ok, F.array(F.lit(FLAG_PARSING_ERROR)))
+        .otherwise(F.array().cast("array<string>")).alias("log_flags"),
+        F.try_to_timestamp(raw["ts"], F.lit("yyyy-MM-dd'T'HH:mm:ss'Z'"))
+        .alias("event_ts")]
+    return F.col("text").isNotNull(), split, head, dissect
 
 
 def build_events(pages: DataFrame) -> DataFrame:
     """pages → one row per multiline-joined event, dissect-parsed.
 
-    Single fused mapInPandas stage (see ``beats_spark.parse``) — one
-    Arrow round-trip for multiline + dissect + explode."""
-    events = parse_pages(pages, TOKENIZER, pattern=r"^\s", negate=False,
-                         match="after")
-    events = events.withColumn(
-        "event_ts",
-        F.try_to_timestamp(F.col("ts"), F.lit("yyyy-MM-dd'T'HH:mm:ss'Z'")))
-    return events.drop("ts")
+    A filter and three projections of Catalyst expressions
+    (``_parse_stage``): the page text splits into events at line breaks
+    no continuation character follows, each event keeps its first
+    ``MAX_LINES`` lines, and the tokenizer runs as one regex
+    (``Dissector.to_regex``)."""
+    has_text, *projections = _parse_stage()
+    events = pages.where(has_text)
+    for columns in projections:
+        events = events.select(*columns)
+    return events
 
 
 # Lookups of at most this many rows are folded into the plan; larger
@@ -136,6 +212,16 @@ def _folded_lookup(lookup: DataFrame, key: str,
     return folded
 
 
+def _folded_assigns(folded: Column, columns: Sequence[str], on: str,
+                    fields: Mapping[str, str],
+                    tag_on_failure: Optional[str]) -> dict:
+    """``enrich_assigns`` of an append enrich through a folded lookup."""
+    hit = folded[F.col(on)]
+    return enrich_assigns(
+        columns, [hit.getField(f"v{i}") for i in range(len(fields))],
+        hit.isNull(), fields, "append", tag_on_failure)
+
+
 def _enrich(events: DataFrame, lookup: DataFrame, on: str,
             fields: Mapping[str, str],
             tag_on_failure: Optional[str] = None) -> DataFrame:
@@ -152,46 +238,91 @@ def _enrich(events: DataFrame, lookup: DataFrame, on: str,
         return broadcast_enrich(events, lookup, on=on, lookup_key=on,
                                 fields=fields, action="append",
                                 tag_on_failure=tag_on_failure)
-    hit = folded[F.col(on)]
-    return events.withColumns(enrich_assigns(
-        events.columns, [hit.getField(f"v{i}") for i in range(len(fields))],
-        hit.isNull(), fields, "append", tag_on_failure))
+    return events.withColumns(
+        _folded_assigns(folded, events.columns, on, fields, tag_on_failure))
+
+
+def _projection(columns: List[str], assigns: Mapping[str, Column]
+                ) -> Tuple[List[Column], List[str]]:
+    """``withColumns(assigns)`` over a frame of ``columns`` as one select
+    list, with the columns it yields. Kept columns are one ``*`` when
+    none is replaced: each list entry costs a py4j call per select."""
+    new = [c for c in assigns if c not in columns]
+    kept = ([assigns[c].alias(c) if c in assigns else F.col(c)
+             for c in columns]
+            if any(c in assigns for c in columns) else [F.col("*")])
+    return kept + [assigns[c].alias(c) for c in new], columns + new
+
+
+@dataclass(frozen=True)
+class _Plan:
+    """``build_routed`` after the parse stage, compiled for one pair of
+    lookup frames: the select list of each enrich step in ``_LOOKUPS``
+    order (None when that lookup is too large to fold and stays a
+    broadcast join), then the select that adds the event id and the
+    sink."""
+    enrich: Tuple[Optional[List[Column]], ...]
+    route: List[Column]
+
+
+# host_meta → lang_meta → compiled plan. Weakly keyed at both levels, so
+# an entry lives exactly as long as both frames; the plan holds Columns
+# only, never a frame.
+_compiled: "weakref.WeakKeyDictionary[DataFrame, weakref.WeakKeyDictionary]" \
+    = weakref.WeakKeyDictionary()
+
+
+def _compile(host_meta: DataFrame, lang_meta: DataFrame) -> _Plan:
+    by_lang = _compiled.setdefault(host_meta, weakref.WeakKeyDictionary())
+    plan = by_lang.get(lang_meta)
+    if plan is not None:
+        return plan
+    columns = list(_EVENT_COLUMNS)
+    steps = []
+    for lookup, (on, fields, tag) in zip((host_meta, lang_meta), _LOOKUPS):
+        folded = _folded_lookup(lookup, on, fields)
+        # the event's host and lang columns are strings
+        if folded is not None and lookup.schema[on].dataType == StringType():
+            step, columns = _projection(columns, _folded_assigns(
+                folded, columns, on, fields, tag))
+        else:
+            step = None
+            columns = columns + [c for c in fields.values()
+                                 if c not in columns]
+        steps.append(step)
+    # deterministic event id (fingerprint/fingerprint.go:72), then the
+    # outil selector (outil/select.go:209)
+    event_id = F.sha2(F.concat_ws("|", F.col("url"), F.col("msg_idx")), 256)
+    failed = F.array_contains(F.col("log_flags"), FLAG_PARSING_ERROR)
+    sink = compile_selector([
+        {"index": "sink_deadletter", "when": failed},
+        {"index": "sink_dropped", "when": {"equals": {"lang": "zz"}}},
+        {"index": "%{[sink_hint]}"},
+    ], default="sink_es", columns=columns + ["event_id"])
+    plan = by_lang[lang_meta] = _Plan(tuple(steps), _projection(
+        columns, {"event_id": event_id, "sink": sink})[0])
+    return plan
 
 
 def build_routed(pages: DataFrame, host_meta: DataFrame,
                  lang_meta: DataFrame) -> DataFrame:
     """Full parse → enrich → route plan (lazy).
 
-    Lookups of at most ``FOLD_MAX_ROWS`` rows are collected the first
-    time this sees the lookup frame and become map literals in the
-    plan; later plans reuse them without a Spark job. A caller who
-    wants fresh lookup data passes a new frame."""
+    The expressions are compiled once per pair of lookup frames
+    (``_compile``) and applied as a fixed handful of selects. Lookups of
+    at most ``FOLD_MAX_ROWS`` rows are collected the first time and
+    become map literals in the plan; later plans reuse them without a
+    Spark job. A larger lookup is a broadcast join between the selects.
+    A caller who wants fresh lookup data passes a new frame."""
+    plan = _compile(host_meta, lang_meta)
     events = build_events(pages)
-
-    # enrich: geo/dns-ish lookup on host (dns/dns.go:80 append semantics,
-    # tag_on_failure), label lookup on lang
-    events = _enrich(
-        events, host_meta, on="host",
-        fields={"geo_country": "geo_country", "geo_city": "geo_city",
-                "asn": "asn", "resolved_ip": "resolved_ip",
-                "registered_domain": "registered_domain"},
-        tag_on_failure="host_meta_miss")
-    events = _enrich(
-        events, lang_meta, on="lang",
-        fields={"lang_label": "lang_label", "sink_hint": "sink_hint"})
-
-    # deterministic event id (fingerprint/fingerprint.go:72)
-    events = events.withColumn(
-        "event_id",
-        F.sha2(F.concat_ws("|", F.col("url"), F.col("msg_idx")), 256))
-
-    failed = F.array_contains(F.col("log_flags"), "dissect_parsing_error")
-    routed = route(events, [
-        {"index": "sink_deadletter", "when": failed},
-        {"index": "sink_dropped", "when": {"equals": {"lang": "zz"}}},
-        {"index": "%{[sink_hint]}"},
-    ], default="sink_es")
-    return routed
+    for lookup, (on, fields, tag), step in zip(
+            (host_meta, lang_meta), _LOOKUPS, plan.enrich):
+        events = events.select(*step) if step is not None else \
+            broadcast_enrich(events, lookup, on=on, lookup_key=on,
+                             fields=fields, action="append",
+                             tag_on_failure=tag)
+    return events.select(*plan.route)
 
 
 @dataclass

@@ -16,14 +16,15 @@ The reference's streaming semantics map as:
   processingTime for tailing).
 
 The same parse → enrich → route expression pipeline from
-``beats_spark.pipeline`` is reused verbatim — mapInPandas, lookups
-folded into the plan (or broadcast joins for large ones) and the
-when-chain router are all streaming-safe — and each micro-batch lands
-through the batch run's ``commit``: one routed write with its counters
-observed on it, then driver-written counters and lineage. Batch and
-streaming therefore share one implementation end to end, the design
-goal the reference gets by running the same processor chain and
-output path under every input.
+``beats_spark.pipeline`` is reused verbatim — the JVM-only parse
+(regex split + posexplode + regexp_extract), lookups folded into the
+plan (or broadcast joins for large ones) and the when-chain router are
+all streaming-safe, and no micro-batch runs a Python worker — and each
+micro-batch lands through the batch run's ``commit``: one routed write
+with its counters observed on it, then driver-written counters and
+lineage. Batch and streaming therefore share one implementation end
+to end, the design goal the reference gets by running the same
+processor chain and output path under every input.
 """
 
 from __future__ import annotations
