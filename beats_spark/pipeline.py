@@ -34,9 +34,11 @@ Stage → reference mapping:
    Batch runs, snapshot runs and streaming micro-batches all commit
    through it, as every Beats input publishes through one output path.
 
-The expressions after the scan are built once per pair of lookup frames
-(``_compile``) and applied as a fixed handful of selects, so a run's plan
-costs a few dozen py4j calls, not the ~1,000 a build from scratch makes.
+The expressions after the scan are built once — the parse and route
+stages once per process, each enrich step once per lookup frame
+(``_enrich_step``) — and applied as a fixed handful of selects, so a
+run's plan costs a few dozen py4j calls, not the ~1,000 a build from
+scratch makes.
 
 Scale notes: the only shuffle in the whole plan is none at all — parse
 and enrich are map-side (map literal or broadcast), the routed write is
@@ -52,12 +54,12 @@ import json
 import os
 import weakref
 from dataclasses import dataclass, field
-from typing import Dict, List, Mapping, Optional, Sequence, Tuple
+from typing import Dict, List, Mapping, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
-    ArrayType, BooleanType, DoubleType, FloatType, IntegralType, StringType,
-    StructField, StructType)
+    ArrayType, BooleanType, DataType, DoubleType, FloatType, IntegralType,
+    StringType, StructField, StructType)
 
 from .checkpoint import Watermarks, new_run_id, snapshot_id_of
 from .dissect.spark import FLAG_PARSING_ERROR, cast_for
@@ -87,11 +89,7 @@ MAX_LINES = 500  # multiline/pattern.go:52-58
 _HEAD_LINES = r"\A[^\n]*+(?:\n[^\n]*+){0,%d}" % (MAX_LINES - 1)
 _DISSECTOR = Dissector(TOKENIZER)
 _DISSECT_RX, _DISSECT_GROUPS = _DISSECTOR.to_regex()
-# the extracted ts becomes event_ts; the other keys keep their names
-_KEY_COLUMNS = [k for k in _DISSECTOR.keys if k != "ts"]
 _PAGE_COLUMNS = ["url", "warc_ts", "lang"]
-_EVENT_COLUMNS = (_PAGE_COLUMNS + ["msg_idx", "message"] + _KEY_COLUMNS
-                  + ["log_flags", "event_ts"])
 
 # enrich: geo/dns-ish lookup on host (dns/dns.go:80 append semantics,
 # tag_on_failure), label lookup on lang; (key, fields, tag_on_failure)
@@ -105,12 +103,12 @@ _LOOKUPS = (
 
 
 @functools.cache
-def _parse_stage() -> Tuple[Column, List[Column], List[Column], List[Column]]:
+def _parse_stage() -> Tuple[Column, List[List[Column]], Tuple[str, ...]]:
     """The parse stage, built once: a filter that drops pages without
     text, then three projections that split each page into its events,
-    keep an event's first ``MAX_LINES`` lines and dissect. Catalyst
-    expressions only, so the stage runs inside the fused JVM operator
-    chain with no Python worker."""
+    keep an event's first ``MAX_LINES`` lines and dissect; and the names
+    of the columns it yields. Catalyst expressions only, so the stage
+    runs inside the fused JVM operator chain with no Python worker."""
     page = [F.col(c) for c in _PAGE_COLUMNS]
     # the outer form only for its nullable output: the written schema
     # keeps msg_idx and message optional. A split of a text is never
@@ -127,13 +125,17 @@ def _parse_stage() -> Tuple[Column, List[Column], List[Column], List[Column]]:
            for i, k in enumerate(_DISSECT_GROUPS)}
     typed = {k: cast_for(dt, v) if (dt := _DISSECTOR.data_types.get(k))
              else v for k, v in raw.items()}
-    dissect = page + [F.col("msg_idx"), message] + [
-        typed[k].alias(k) for k in _KEY_COLUMNS] + [
-        F.when(~ok, F.array(F.lit(FLAG_PARSING_ERROR)))
-        .otherwise(F.array().cast("array<string>")).alias("log_flags"),
-        F.try_to_timestamp(raw["ts"], F.lit("yyyy-MM-dd'T'HH:mm:ss'Z'"))
-        .alias("event_ts")]
-    return F.col("text").isNotNull(), split, head, dissect
+    # the extracted ts becomes event_ts; the other keys keep their names
+    dissect = dict(zip(_PAGE_COLUMNS, page), msg_idx=F.col("msg_idx"),
+                   message=message)
+    dissect.update((k, typed[k].alias(k)) for k in _DISSECTOR.keys
+                   if k != "ts")
+    dissect["log_flags"] = F.when(~ok, F.array(F.lit(FLAG_PARSING_ERROR))) \
+        .otherwise(F.array().cast("array<string>")).alias("log_flags")
+    dissect["event_ts"] = F.try_to_timestamp(
+        raw["ts"], F.lit("yyyy-MM-dd'T'HH:mm:ss'Z'")).alias("event_ts")
+    return (F.col("text").isNotNull(), [split, head, list(dissect.values())],
+            tuple(dissect))
 
 
 def build_events(pages: DataFrame) -> DataFrame:
@@ -144,7 +146,7 @@ def build_events(pages: DataFrame) -> DataFrame:
     no continuation character follows, each event keeps its first
     ``MAX_LINES`` lines, and the tokenizer runs as one regex
     (``Dissector.to_regex``)."""
-    has_text, *projections = _parse_stage()
+    has_text, projections, _ = _parse_stage()
     events = pages.where(has_text)
     for columns in projections:
         events = events.select(*columns)
@@ -163,9 +165,10 @@ def build_events(pages: DataFrame) -> DataFrame:
 FOLD_MAX_ROWS = 1024
 
 # lookup frame → {(key, source columns): map literal, or None when the
-# lookup cannot be folded}. Weakly keyed, so an entry lives exactly as
-# long as its frame; two threads planning over a new frame at once both
-# build the same literal, and either may be kept.
+# lookup cannot be folded; _enrich_step's arguments: its result}. Weakly
+# keyed, so an entry lives exactly as long as its frame, and it holds
+# Columns only, never a frame; two threads planning over a new frame at
+# once build the same entries, and either may be kept.
 _folded: "weakref.WeakKeyDictionary[DataFrame, dict]" = \
     weakref.WeakKeyDictionary()
 
@@ -212,14 +215,54 @@ def _folded_lookup(lookup: DataFrame, key: str,
     return folded
 
 
-def _folded_assigns(folded: Column, columns: Sequence[str], on: str,
-                    fields: Mapping[str, str],
-                    tag_on_failure: Optional[str]) -> dict:
-    """``enrich_assigns`` of an append enrich through a folded lookup."""
-    hit = folded[F.col(on)]
-    return enrich_assigns(
+def _enrich_step(lookup: DataFrame, on: str, fields: Mapping[str, str],
+                 tag_on_failure: Optional[str], columns: Tuple[str, ...],
+                 key_type: DataType
+                 ) -> Tuple[Optional[List[Column]], Tuple[str, ...]]:
+    """An append enrich keyed on the ``on`` column of ``lookup`` and of
+    a frame of ``columns`` whose ``on`` column is of ``key_type``: the
+    select list that applies it with the lookup folded into the plan,
+    or None when it stays a ``broadcast_enrich`` join; and the columns
+    of the enriched frame. Built once per lookup frame and arguments.
+
+    The select list is ``withColumns(enrich_assigns(...))`` as one
+    select, with the kept columns as one ``*`` when none is replaced:
+    each list entry costs a py4j call per select."""
+    cache = _folded.setdefault(lookup, {})
+    ck = (on, tuple(fields.items()), tag_on_failure, columns, key_type)
+    if ck in cache:
+        return cache[ck]
+    folded = _folded_lookup(lookup, on, fields)
+    foldable = folded is not None and lookup.schema[on].dataType == key_type
+    # a broadcast join sets the same columns from its join output
+    hit = folded[F.col(on)] if foldable else F.lit(None)
+    assigns = enrich_assigns(
         columns, [hit.getField(f"v{i}") for i in range(len(fields))],
         hit.isNull(), fields, "append", tag_on_failure)
+    new = [c for c in assigns if c not in columns]
+    step = None
+    if foldable:
+        kept = ([assigns[c].alias(c) if c in assigns else F.col(c)
+                 for c in columns]
+                if len(new) < len(assigns) else [F.col("*")])
+        step = kept + [assigns[c].alias(c) for c in new]
+    cache[ck] = step, columns + tuple(new)
+    return cache[ck]
+
+
+def _enrich_over(events: DataFrame, columns: Tuple[str, ...],
+                 key_type: DataType, lookup: DataFrame, on: str,
+                 fields: Mapping[str, str], tag_on_failure: Optional[str]
+                 ) -> Tuple[DataFrame, Tuple[str, ...]]:
+    """``events`` (of ``columns``, its ``on`` column of ``key_type``)
+    after the ``_enrich_step`` through ``lookup``, and its columns."""
+    step, enriched = _enrich_step(lookup, on, fields, tag_on_failure,
+                                  columns, key_type)
+    if step is None:
+        return broadcast_enrich(events, lookup, on=on, lookup_key=on,
+                                fields=fields, action="append",
+                                tag_on_failure=tag_on_failure), enriched
+    return events.select(*step), enriched
 
 
 def _enrich(events: DataFrame, lookup: DataFrame, on: str,
@@ -232,97 +275,44 @@ def _enrich(events: DataFrame, lookup: DataFrame, on: str,
 
     The folded data is the lookup frame's content when first seen: a
     caller who wants fresh lookup data passes a new frame."""
-    folded = _folded_lookup(lookup, on, fields)
-    if (folded is None
-            or events.schema[on].dataType != lookup.schema[on].dataType):
-        return broadcast_enrich(events, lookup, on=on, lookup_key=on,
-                                fields=fields, action="append",
-                                tag_on_failure=tag_on_failure)
-    return events.withColumns(
-        _folded_assigns(folded, events.columns, on, fields, tag_on_failure))
+    return _enrich_over(events, tuple(events.columns),
+                        events.schema[on].dataType, lookup, on, fields,
+                        tag_on_failure)[0]
 
 
-def _projection(columns: List[str], assigns: Mapping[str, Column]
-                ) -> Tuple[List[Column], List[str]]:
-    """``withColumns(assigns)`` over a frame of ``columns`` as one select
-    list, with the columns it yields. Kept columns are one ``*`` when
-    none is replaced: each list entry costs a py4j call per select."""
-    new = [c for c in assigns if c not in columns]
-    kept = ([assigns[c].alias(c) if c in assigns else F.col(c)
-             for c in columns]
-            if any(c in assigns for c in columns) else [F.col("*")])
-    return kept + [assigns[c].alias(c) for c in new], columns + new
-
-
-@dataclass(frozen=True)
-class _Plan:
-    """``build_routed`` after the parse stage, compiled for one pair of
-    lookup frames: the select list of each enrich step in ``_LOOKUPS``
-    order (None when that lookup is too large to fold and stays a
-    broadcast join), then the select that adds the event id and the
-    sink."""
-    enrich: Tuple[Optional[List[Column]], ...]
-    route: List[Column]
-
-
-# host_meta → lang_meta → compiled plan. Weakly keyed at both levels, so
-# an entry lives exactly as long as both frames; the plan holds Columns
-# only, never a frame.
-_compiled: "weakref.WeakKeyDictionary[DataFrame, weakref.WeakKeyDictionary]" \
-    = weakref.WeakKeyDictionary()
-
-
-def _compile(host_meta: DataFrame, lang_meta: DataFrame) -> _Plan:
-    by_lang = _compiled.setdefault(host_meta, weakref.WeakKeyDictionary())
-    plan = by_lang.get(lang_meta)
-    if plan is not None:
-        return plan
-    columns = list(_EVENT_COLUMNS)
-    steps = []
-    for lookup, (on, fields, tag) in zip((host_meta, lang_meta), _LOOKUPS):
-        folded = _folded_lookup(lookup, on, fields)
-        # the event's host and lang columns are strings
-        if folded is not None and lookup.schema[on].dataType == StringType():
-            step, columns = _projection(columns, _folded_assigns(
-                folded, columns, on, fields, tag))
-        else:
-            step = None
-            columns = columns + [c for c in fields.values()
-                                 if c not in columns]
-        steps.append(step)
-    # deterministic event id (fingerprint/fingerprint.go:72), then the
-    # outil selector (outil/select.go:209)
+@functools.cache
+def _route_stage(columns: Tuple[str, ...]) -> List[Column]:
+    """The select that adds the deterministic event id
+    (fingerprint/fingerprint.go:72) and the outil selector's sink
+    (outil/select.go:209) to a frame of ``columns``."""
     event_id = F.sha2(F.concat_ws("|", F.col("url"), F.col("msg_idx")), 256)
     failed = F.array_contains(F.col("log_flags"), FLAG_PARSING_ERROR)
     sink = compile_selector([
         {"index": "sink_deadletter", "when": failed},
         {"index": "sink_dropped", "when": {"equals": {"lang": "zz"}}},
         {"index": "%{[sink_hint]}"},
-    ], default="sink_es", columns=columns + ["event_id"])
-    plan = by_lang[lang_meta] = _Plan(tuple(steps), _projection(
-        columns, {"event_id": event_id, "sink": sink})[0])
-    return plan
+    ], default="sink_es", columns=[*columns, "event_id"])
+    return [F.col("*"), event_id.alias("event_id"), sink.alias("sink")]
 
 
 def build_routed(pages: DataFrame, host_meta: DataFrame,
                  lang_meta: DataFrame) -> DataFrame:
     """Full parse → enrich → route plan (lazy).
 
-    The expressions are compiled once per pair of lookup frames
-    (``_compile``) and applied as a fixed handful of selects. Lookups of
-    at most ``FOLD_MAX_ROWS`` rows are collected the first time and
-    become map literals in the plan; later plans reuse them without a
-    Spark job. A larger lookup is a broadcast join between the selects.
-    A caller who wants fresh lookup data passes a new frame."""
-    plan = _compile(host_meta, lang_meta)
+    Every stage's expressions are built once and applied as a fixed
+    handful of selects: the parse stage and the route select once per
+    process, each enrich step once per lookup frame. Lookups of at most
+    ``FOLD_MAX_ROWS`` rows are collected the first time and become map
+    literals in the plan; later plans reuse them without a Spark job. A
+    larger lookup is a broadcast join between the selects. A caller who
+    wants fresh lookup data passes a new frame."""
     events = build_events(pages)
-    for lookup, (on, fields, tag), step in zip(
-            (host_meta, lang_meta), _LOOKUPS, plan.enrich):
-        events = events.select(*step) if step is not None else \
-            broadcast_enrich(events, lookup, on=on, lookup_key=on,
-                             fields=fields, action="append",
-                             tag_on_failure=tag)
-    return events.select(*plan.route)
+    columns = _parse_stage()[2]
+    for lookup, (on, fields, tag) in zip((host_meta, lang_meta), _LOOKUPS):
+        # the parsed host and lang columns are strings
+        events, columns = _enrich_over(events, columns, StringType(),
+                                       lookup, on, fields, tag)
+    return events.select(*_route_stage(columns))
 
 
 @dataclass

@@ -22,8 +22,8 @@ from beats_spark.dissect.spark import FLAG_PARSING_ERROR, cast_for
 from beats_spark.dissect.tokenizer import Dissector
 from beats_spark.functions.multiline import segment_lines
 from beats_spark.pipeline import (
-    CONTINUATION, MAX_LINES, TOKENIZER, _compile, _compiled, build_events,
-    build_routed, run_pipeline)
+    _LOOKUPS, CONTINUATION, MAX_LINES, TOKENIZER, _enrich, _folded,
+    _parse_stage, build_events, build_routed, run_pipeline)
 
 PAGES_DDL = "url string, warc_ts timestamp, lang string, text string"
 KEYS = ["ts", "bytes", "host", "level", "msg"]
@@ -231,32 +231,49 @@ def test_compiled_plan_is_reused_and_released(spark):
 
     pages = fixtures.pages(spark, 20)
     hm, lm = fixtures.host_meta(spark), fixtures.lang_meta(spark)
+    events = build_events(pages)
+    # the column names build_routed threads through its enrich steps are
+    # the parse stage's own
+    assert tuple(events.columns) == _parse_stage()[2]
+    # _enrich over the parsed events builds the very steps build_routed
+    # applies: a build finds them all and adds none
+    for lookup, (on, fields, tag) in zip((hm, lm), _LOOKUPS):
+        events = _enrich(events, lookup, on, fields, tag)
+
+    def entries():
+        return [{k: id(v) for k, v in _folded[f].items()} for f in (hm, lm)]
+
+    built = entries()
     build_routed(pages, hm, lm)
-    plan = _compiled[hm][lm]
+    assert entries() == built
 
     calls = []
     send = ClientServerConnection.send_command
 
-    def counting(self, *args, **kwargs):
-        calls.append(1)
-        return send(self, *args, **kwargs)
+    def counting(self, command, *args, **kwargs):
+        # not the deletes py4j sends as Python drops Java references
+        if not command.startswith("m\nd\n"):
+            calls.append(command)
+        return send(self, command, *args, **kwargs)
 
+    gc.collect()
     ClientServerConnection.send_command = counting
     try:
         build_routed(pages, hm, lm)
     finally:
         ClientServerConnection.send_command = send
-    assert _compile(hm, lm) is plan
     assert len(calls) < 100
 
-    # a new lookup frame compiles a new plan
+    # a new lookup frame gets entries of its own
     lm2 = fixtures.lang_meta(spark)
-    assert _compile(hm, lm2) is not plan
+    build_routed(pages, hm, lm2)
+    assert lm2 in _folded and entries() == built
 
-    released = weakref.ref(plan)
-    del plan, hm, lm, lm2
+    # the entries hold no frame: they go when the frames are collected
+    frames = [weakref.ref(f) for f in (hm, lm, lm2)]
+    del hm, lm, lm2, lookup
     gc.collect()
-    assert released() is None
+    assert [f() for f in frames] == [None, None, None]
 
 
 def test_large_lookup_is_a_broadcast_join_between_the_selects(spark):
@@ -269,8 +286,6 @@ def test_large_lookup_is_a_broadcast_join_between_the_selects(spark):
     big = hm.unionByName(filler)
     pages = fixtures.pages(spark, 100)
     routed = build_routed(pages, big, lm)
-    assert _compile(big, lm).enrich[0] is None
-    assert _compile(big, lm).enrich[1] is not None
     plan = routed._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastHashJoin") == 1
     folded = build_routed(pages, hm, lm)
