@@ -46,17 +46,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when an Iceberg catalog is configured in this session."""
-    try:
-        jvm = spark.sparkContext._jvm
-        jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
 @dataclass
 class Snapshot:
     snapshot_id: str
@@ -278,8 +267,3 @@ class Catalog:
 
     def table(self, name: str) -> Table:
         return Table(self.root, name)
-
-    def tables(self) -> List[str]:
-        return sorted(
-            d for d in os.listdir(self.root)
-            if os.path.isdir(os.path.join(self.root, d)))

@@ -296,10 +296,6 @@ def network_any(col: Column, specs) -> Column:
     return out
 
 
-def _network_one(col: Column, spec: str) -> Column:
-    return network_any(col, [spec])
-
-
 # ---------------------------------------------------------------- helpers
 
 def _as_list(v) -> List:

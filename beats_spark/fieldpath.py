@@ -1,13 +1,11 @@
 """Dot-path field access over typed Catalyst schemas.
 
 The reference event model is a dynamic nested map addressed by
-dot-notation paths (``libbeat/beat/event.go:84-104``, ``:229-261``;
-mapstr deep put/get). Here the event is a Row with a *declared* schema —
-Catalyst needs types to prune and push down — so dot-paths map onto
-nested ``StructType`` columns via ``Column.withField`` /
-``Column.dropFields``. A path like ``log.flags`` is the ``flags`` field
-of the ``log`` struct column; a missing intermediate struct is created
-on put, like ``mapstr.M.Put`` (``event.go:240-261``).
+dot-notation paths (``libbeat/beat/event.go:84-104``; mapstr deep
+get). Here the event is a Row with a *declared* schema — Catalyst needs
+types to prune and push down — so dot-paths map onto nested
+``StructType`` columns. A path like ``log.flags`` is the ``flags`` field
+of the ``log`` struct column.
 """
 
 from __future__ import annotations
@@ -17,7 +15,7 @@ from typing import Optional
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
-__all__ = ["get_field", "put_field", "drop_field", "has_field", "field_type"]
+__all__ = ["get_field", "has_field", "field_type"]
 
 
 def get_field(df: DataFrame, path: str) -> Column:
@@ -42,61 +40,3 @@ def has_field(df: DataFrame, path: str) -> bool:
     unlike the per-event check in ``conditions/has_fields.go:31``;
     per-row null-ness is a separate ``isNotNull`` predicate)."""
     return field_type(df.schema, path) is not None
-
-
-def _nest(parts: list, col: Column) -> Column:
-    """Wrap ``col`` into structs so that parts[0].parts[1]... = col."""
-    for p in reversed(parts):
-        col = F.struct(col.alias(p))
-    return col
-
-
-def put_field(df: DataFrame, path: str, col: Column) -> DataFrame:
-    """Deep put, creating intermediate structs as needed
-    (``event.go:229-261`` PutValue semantics, minus the dynamic-type
-    part: the written column carries its own type)."""
-    parts = path.split(".")
-    if len(parts) == 1:
-        return df.withColumn(path, col)
-    root, rest = parts[0], parts[1:]
-    if field_type(df.schema, root) is not None and isinstance(
-        df.schema[root].dataType, T.StructType
-    ):
-        # withField requires every intermediate struct to exist; walk
-        # down to the deepest existing struct and nest the remainder
-        # under it (mapstr.Put creates missing intermediates)
-        dtype: T.DataType = df.schema[root].dataType
-        known = [root]
-        i = 0
-        while i < len(rest) - 1:
-            if (isinstance(dtype, T.StructType)
-                    and rest[i] in dtype.fieldNames()
-                    and isinstance(dtype[rest[i]].dataType, T.StructType)):
-                known.append(rest[i])
-                dtype = dtype[rest[i]].dataType
-                i += 1
-            else:
-                break
-        tail = rest[i:]
-        target = _nest(tail[1:], col) if len(tail) > 1 else col
-        field_path = ".".join(known[1:] + [tail[0]])
-        return df.withColumn(root, F.col(root).withField(field_path, target))
-    # root absent or scalar → replace with a fresh nested struct
-    return df.withColumn(root, _nest(rest, col))
-
-
-def drop_field(df: DataFrame, path: str) -> DataFrame:
-    """Deep delete (``event.go:333-350``). Dropping a missing path is a
-    no-op, like ``mapstr.Delete`` with ignore-missing callers."""
-    parts = path.split(".")
-    if len(parts) == 1:
-        return df.drop(path)
-    root, rest = parts[0], ".".join(parts[1:])
-    rt = field_type(df.schema, root)
-    if not isinstance(rt, T.StructType):
-        return df
-    if field_type(df.schema, path) is None:
-        return df
-    # dropFields on the last remaining field yields a null struct; that
-    # matches "empty map stays" closely enough for routing purposes.
-    return df.withColumn(root, F.col(root).dropFields(rest))

@@ -19,10 +19,10 @@ Stage → reference mapping:
 4. timestamp: layout parse of the extracted ts
    (``timestamp/timestamp.go:87``).
 5. enrich: lookups on host and lang — add_fields/geoip/dns emulation
-   (SURVEY.md §2.5). A small lookup is collected once per lookup frame
-   and folded into the plan as a ``key → struct`` map literal, so a run
-   spends no job on it; a larger one is a broadcast join
-   (``broadcast_enrich``).
+   (SURVEY.md §2.5) — through ``lookup``, the enrich every lookup
+   processor runs: a small lookup is folded into the plan as a map
+   literal, so a run spends no job on it; a larger one is a broadcast
+   join.
 6. route: outil first-match-wins selector → ``sink`` column
    (``outil/select.go:209``).
 7. output: ``commit`` — ONE pass, ``partitionBy(sink)``, all sinks
@@ -35,10 +35,10 @@ Stage → reference mapping:
    through it, as every Beats input publishes through one output path.
 
 The expressions after the scan are built once — the parse and route
-stages once per process, each enrich step once per lookup frame
-(``_enrich_step``) — and applied as a fixed handful of selects, so a
-run's plan costs a few dozen py4j calls, not the ~1,000 a build from
-scratch makes.
+stages once per process here, each enrich step once per lookup frame
+in ``lookup`` — and applied as a fixed handful of selects, so a run's
+plan costs a few dozen py4j calls, not the ~1,000 a build from scratch
+makes.
 
 Scale notes: the only shuffle in the whole plan is none at all — parse
 and enrich are map-side (map literal or broadcast), the routed write is
@@ -50,23 +50,19 @@ salting handle it.
 from __future__ import annotations
 
 import functools
-import json
 import os
-import weakref
 from dataclasses import dataclass, field
-from typing import Dict, List, Mapping, Optional, Tuple
+from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (
-    ArrayType, BooleanType, DataType, DoubleType, FloatType, IntegralType,
-    StringType, StructField, StructType)
+from pyspark.sql.types import StringType
 
 from .checkpoint import Watermarks, new_run_id, snapshot_id_of
 from .dissect.spark import FLAG_PARSING_ERROR, cast_for
 from .dissect.tokenizer import Dissector
+from .lookup import FOLD_MAX_ROWS, enrich_columns
 from .metrics import (attach_observation, metrics_rows, write_lineage,
                       write_metrics)
-from .processors.enrich import broadcast_enrich, enrich_assigns
 from .routing import compile_selector
 
 __all__ = ["build_events", "build_routed", "commit", "run_pipeline", "SINKS",
@@ -153,133 +149,6 @@ def build_events(pages: DataFrame) -> DataFrame:
     return events
 
 
-# Lookups of at most this many rows are folded into the plan; larger
-# ones are broadcast joins. Spark looks a key up in a map literal by a
-# linear scan. Measured on a 4-vCPU VM (local[4], pyspark 4.1, 2M string
-# keys, 3 looked-up columns): the folded lookup costs ~0.1 µs per row at
-# 16 keys, ~0.4 µs at 512 and ~0.9 µs at 1024, against ~0.1 µs for a
-# broadcast probe, but every broadcast join costs its run ~0.3 s of
-# jobs. At 1024 keys the fold is still cheaper for runs of up to ~400k
-# events (a snapshot run here is 1k–32k); at 2048 keys (~1.3 µs) the
-# break-even falls to ~240k.
-FOLD_MAX_ROWS = 1024
-
-# lookup frame → {(key, source columns): map literal, or None when the
-# lookup cannot be folded; _enrich_step's arguments: its result}. Weakly
-# keyed, so an entry lives exactly as long as its frame, and it holds
-# Columns only, never a frame; two threads planning over a new frame at
-# once build the same entries, and either may be kept.
-_folded: "weakref.WeakKeyDictionary[DataFrame, dict]" = \
-    weakref.WeakKeyDictionary()
-
-
-def _json_typed(dt) -> bool:
-    """Whether values of this type survive the JSON round trip exactly."""
-    return dt == StringType() or isinstance(
-        dt, (IntegralType, BooleanType, FloatType, DoubleType))
-
-
-def _folded_lookup(lookup: DataFrame, key: str,
-                   fields: Mapping[str, str]) -> Optional[Column]:
-    """``lookup`` as a ``key → struct(v0, v1, ...)`` map literal over its
-    ``fields`` source columns, or None when it has more than
-    ``FOLD_MAX_ROWS`` rows or a type the literal cannot carry. Collected
-    once per lookup frame object; the first row of a duplicated key
-    wins and null keys are dropped, as no join matches them."""
-    cache = _folded.setdefault(lookup, {})
-    ck = (key, tuple(fields))
-    if ck in cache:
-        return cache[ck]
-    sel = lookup.select(key, *fields)
-    types = [f.dataType for f in sel.schema.fields]
-    folded = None
-    if ((types[0] == StringType() or isinstance(types[0], IntegralType))
-            and all(_json_typed(t) for t in types[1:])):
-        rows = sel.limit(FOLD_MAX_ROWS + 1).collect()
-        if len(rows) <= FOLD_MAX_ROWS:
-            entries: Dict = {}
-            for r in rows:
-                if r[0] is not None:
-                    entries.setdefault(r[0], r[1:])
-            value_type = StructType([StructField(f"v{i}", t)
-                                     for i, t in enumerate(types[1:])])
-            payload = json.dumps([
-                {"k": k, "v": {f"v{i}": x for i, x in enumerate(v)}}
-                for k, v in entries.items()])
-            # one string literal: the optimizer folds the parse into a
-            # map literal, so the plan carries no per-row JSON work
-            folded = F.map_from_entries(F.from_json(F.lit(payload), ArrayType(
-                StructType([StructField("k", types[0]),
-                            StructField("v", value_type)]))))
-    cache[ck] = folded
-    return folded
-
-
-def _enrich_step(lookup: DataFrame, on: str, fields: Mapping[str, str],
-                 tag_on_failure: Optional[str], columns: Tuple[str, ...],
-                 key_type: DataType
-                 ) -> Tuple[Optional[List[Column]], Tuple[str, ...]]:
-    """An append enrich keyed on the ``on`` column of ``lookup`` and of
-    a frame of ``columns`` whose ``on`` column is of ``key_type``: the
-    select list that applies it with the lookup folded into the plan,
-    or None when it stays a ``broadcast_enrich`` join; and the columns
-    of the enriched frame. Built once per lookup frame and arguments.
-
-    The select list is ``withColumns(enrich_assigns(...))`` as one
-    select, with the kept columns as one ``*`` when none is replaced:
-    each list entry costs a py4j call per select."""
-    cache = _folded.setdefault(lookup, {})
-    ck = (on, tuple(fields.items()), tag_on_failure, columns, key_type)
-    if ck in cache:
-        return cache[ck]
-    folded = _folded_lookup(lookup, on, fields)
-    foldable = folded is not None and lookup.schema[on].dataType == key_type
-    # a broadcast join sets the same columns from its join output
-    hit = folded[F.col(on)] if foldable else F.lit(None)
-    assigns = enrich_assigns(
-        columns, [hit.getField(f"v{i}") for i in range(len(fields))],
-        hit.isNull(), fields, "append", tag_on_failure)
-    new = [c for c in assigns if c not in columns]
-    step = None
-    if foldable:
-        kept = ([assigns[c].alias(c) if c in assigns else F.col(c)
-                 for c in columns]
-                if len(new) < len(assigns) else [F.col("*")])
-        step = kept + [assigns[c].alias(c) for c in new]
-    cache[ck] = step, columns + tuple(new)
-    return cache[ck]
-
-
-def _enrich_over(events: DataFrame, columns: Tuple[str, ...],
-                 key_type: DataType, lookup: DataFrame, on: str,
-                 fields: Mapping[str, str], tag_on_failure: Optional[str]
-                 ) -> Tuple[DataFrame, Tuple[str, ...]]:
-    """``events`` (of ``columns``, its ``on`` column of ``key_type``)
-    after the ``_enrich_step`` through ``lookup``, and its columns."""
-    step, enriched = _enrich_step(lookup, on, fields, tag_on_failure,
-                                  columns, key_type)
-    if step is None:
-        return broadcast_enrich(events, lookup, on=on, lookup_key=on,
-                                fields=fields, action="append",
-                                tag_on_failure=tag_on_failure), enriched
-    return events.select(*step), enriched
-
-
-def _enrich(events: DataFrame, lookup: DataFrame, on: str,
-            fields: Mapping[str, str],
-            tag_on_failure: Optional[str] = None) -> DataFrame:
-    """``broadcast_enrich(action="append")`` keyed on the ``on`` column
-    of both frames, with the lookup folded into the plan when it is
-    small. A miss (no key, or a null key) leaves the fields null and
-    tags ``tag_on_failure``; column order and values match the join.
-
-    The folded data is the lookup frame's content when first seen: a
-    caller who wants fresh lookup data passes a new frame."""
-    return _enrich_over(events, tuple(events.columns),
-                        events.schema[on].dataType, lookup, on, fields,
-                        tag_on_failure)[0]
-
-
 @functools.cache
 def _route_stage(columns: Tuple[str, ...]) -> List[Column]:
     """The select that adds the deterministic event id
@@ -310,8 +179,9 @@ def build_routed(pages: DataFrame, host_meta: DataFrame,
     columns = _parse_stage()[2]
     for lookup, (on, fields, tag) in zip((host_meta, lang_meta), _LOOKUPS):
         # the parsed host and lang columns are strings
-        events, columns = _enrich_over(events, columns, StringType(),
-                                       lookup, on, fields, tag)
+        events, columns = enrich_columns(events, columns, StringType(),
+                                         lookup, on, on, fields, "append",
+                                         tag)
     return events.select(*_route_stage(columns))
 
 

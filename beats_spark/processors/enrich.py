@@ -1,12 +1,12 @@
-"""Enrichment processors — the join surface (SURVEY.md §2.5).
+"""Enrichment processors — the lookup surface (SURVEY.md §2.5).
 
 The reference does point lookups against side state (dns cache, generic
-KV cache, sid tables, geoip in ES ingest). In Spark every one of these
-is a **broadcast left join** against a lookup DataFrame: the TTL'd LRU
-cache of ``dns/cache.go`` is simply the broadcast table itself, shipped
-once per executor instead of filled per miss. At 100 TB the lookup side
-stays small (hosts, langs, SIDs), so broadcast avoids shuffling the
-fact table entirely.
+KV cache, sid tables, geoip in ES ingest). Here every one of these runs
+``lookup.enrich`` against a lookup DataFrame: a small lookup is folded
+into the plan as a map literal, a larger one is a broadcast left join.
+Either way the TTL'd LRU cache of ``dns/cache.go`` is simply the lookup
+table itself, shipped once per plan or per executor instead of filled
+per miss, and the fact table never shuffles.
 """
 
 from __future__ import annotations
@@ -15,6 +15,7 @@ from typing import Any, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..lookup import broadcast_enrich, enrich, enrich_assigns
 from . import ProcResult, register
 
 __all__ = ["broadcast_enrich", "cidr_enrich", "enrich_assigns",
@@ -24,59 +25,6 @@ __all__ = ["broadcast_enrich", "cidr_enrich", "enrich_assigns",
 def url_host(col: Column) -> Column:
     """Host part of a URL, JVM-side (``parse_url``)."""
     return F.parse_url(col, F.lit("HOST"))
-
-
-def broadcast_enrich(
-    df: DataFrame,
-    lookup: DataFrame,
-    on: str,
-    lookup_key: str,
-    fields: Mapping[str, str],
-    action: str = "append",
-    tag_on_failure: str | None = None,
-) -> DataFrame:
-    """Generic broadcast-join enrich used by dns/cache/translate_*.
-
-    ``fields`` maps lookup column → output column. ``action`` mirrors
-    ``dns/config.go:32-51``: ``append`` keeps an existing non-null
-    output value, ``replace`` overwrites. ``tag_on_failure`` appends a
-    tag to ``log_flags`` for rows with no lookup match.
-    """
-    sel = [F.col(lookup_key).alias("__k")] + [
-        F.col(src).alias(f"__v_{i}") for i, src in enumerate(fields)]
-    right = lookup.select(*sel).dropDuplicates(["__k"])
-    joined = df.join(F.broadcast(right), df[on] == F.col("__k"), "left")
-    out = joined.withColumns(enrich_assigns(
-        df.columns, [F.col(f"__v_{i}") for i in range(len(fields))],
-        F.col("__k").isNull(), fields, action, tag_on_failure))
-    return out.drop("__k", *[f"__v_{i}" for i in range(len(fields))])
-
-
-def enrich_assigns(
-    columns: Sequence[str],
-    values: Sequence[Column],
-    miss: Column,
-    fields: Mapping[str, str],
-    action: str = "append",
-    tag_on_failure: str | None = None,
-) -> dict:
-    """The output columns of an enrich, whatever the lookup mechanism:
-    ``values[i]`` is the looked-up value of the i-th entry of ``fields``
-    and ``miss`` is true on rows without a lookup match. ``columns`` are
-    the input frame's columns."""
-    assigns = {}
-    for new, dst in zip(values, fields.values()):
-        if action == "append" and dst in columns:
-            assigns[dst] = F.coalesce(F.col(dst), new)
-        else:
-            assigns[dst] = new
-    if tag_on_failure:
-        prev = (F.coalesce(F.col("log_flags"), F.array().cast("array<string>"))
-                if "log_flags" in columns else F.array().cast("array<string>"))
-        assigns["log_flags"] = F.when(
-            miss, F.array_union(prev, F.array(F.lit(tag_on_failure)))
-        ).otherwise(prev)
-    return assigns
 
 
 @register("dns")
@@ -96,7 +44,7 @@ def dns(cfg: Mapping[str, Any]):
         def reshape(d: DataFrame) -> DataFrame:
             out = d
             for src, dst in fields.items():
-                out = broadcast_enrich(
+                out = enrich(
                     out, lookup, on=src, lookup_key=lookup_key,
                     fields={value_field: dst}, action=action,
                     tag_on_failure=tag)
@@ -107,8 +55,8 @@ def dns(cfg: Mapping[str, Any]):
 
 @register("cache")
 def cache(cfg: Mapping[str, Any]):
-    """Generic KV enrich (``cache/cache.go:128``). ``get``: broadcast
-    join the store on key_field → target_field. ``put`` is the store
+    """Generic KV enrich (``cache/cache.go:128``). ``get``: look
+    key_field up in the store → target_field. ``put`` is the store
     *builder* — in batch it is ``groupBy(key).agg(last(value))`` run by
     the caller (see ``build_cache_store``)."""
     get = cfg.get("get")
@@ -119,7 +67,7 @@ def cache(cfg: Mapping[str, Any]):
             key = get["key_field"]
             tgt = get["target_field"]
             value_cols = [c for c in lookup.columns if c != "key"]
-            return broadcast_enrich(
+            return enrich(
                 d, lookup, on=key, lookup_key="key",
                 fields={c: f"{tgt}_{c}" for c in value_cols},
                 action="replace" if get.get("overwrite_keys") else "append",
@@ -156,7 +104,7 @@ def build_cache_store(df: DataFrame, key_field: str, value_fields: list,
 
 @register("translate_sid")
 def translate_sid(cfg: Mapping[str, Any]):
-    """SID → account fields via broadcast table
+    """SID → account fields via a lookup table
     (``translate_sid/translatesid.go:75``)."""
     lookup = cfg["lookup"]
     src = cfg["field"]
@@ -165,16 +113,16 @@ def translate_sid(cfg: Mapping[str, Any]):
 
     def make(df: DataFrame) -> ProcResult:
         def reshape(d: DataFrame) -> DataFrame:
-            return broadcast_enrich(d, lookup, on=src, lookup_key=key,
-                                    fields=mapping, action="replace")
+            return enrich(d, lookup, on=src, lookup_key=key,
+                          fields=mapping, action="replace")
         return ProcResult(reshape=reshape)
     return make
 
 
 def _lookup_join_builder(default_field: str, default_key: str):
     """Shared builder for the container/orchestrator/process metadata
-    processors — all are broadcast joins of a caller-supplied side
-    table keyed on an id column (``add_docker_metadata.go:147``,
+    processors — all are lookups of a caller-supplied side table keyed
+    on an id column (``add_docker_metadata.go:147``,
     ``add_kubernetes_metadata/kubernetes.go:335``,
     ``add_process_metadata.go:207``,
     ``translate_ldap_attribute.go:141``)."""
@@ -189,9 +137,9 @@ def _lookup_join_builder(default_field: str, default_key: str):
 
         def make(df: DataFrame) -> ProcResult:
             def reshape(d: DataFrame) -> DataFrame:
-                return broadcast_enrich(d, lookup, on=src, lookup_key=key,
-                                        fields=fields, action=action,
-                                        tag_on_failure=tag)
+                return enrich(d, lookup, on=src, lookup_key=key,
+                              fields=fields, action=action,
+                              tag_on_failure=tag)
             return ProcResult(reshape=reshape)
         return make
     return builder

@@ -23,6 +23,7 @@ from typing import Callable, Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from . import fixtures
 from .conditions import compile_condition
 from .dissect.spark import apply_dissect
 from .functions.grok import grok_extract
@@ -1125,12 +1126,7 @@ def _flagship_lookups(spark: SparkSession, docs: DataFrame):
                 F.abs(F.xxhash64("host") % 64000).alias("asn"),
                 F.lit("203.0.113.7").alias("resolved_ip"),
                 F.lit("example.org").alias("registered_domain")))
-    lang_meta = spark.createDataFrame(
-        [("en", "English", "sink_es"), ("de", "German", "sink_es"),
-         ("fr", "French", "sink_ls"), ("es", "Spanish", "sink_ls"),
-         ("zh", "Chinese", "sink_ls")],
-        "lang string, lang_label string, sink_hint string")
-    return host_meta, lang_meta
+    return host_meta, fixtures.lang_meta(spark)
 
 
 @query("flagship_routed_counts", oracle="""

@@ -46,6 +46,7 @@ def main() -> int:
              .config("spark.sql.session.timeZone", "UTC")
              .getOrCreate())
 
+    from beats_spark import fixtures
     from beats_spark.pipeline import run_pipeline, run_pipeline_incremental
     from beats_spark.catalog import Table
     import os
@@ -71,11 +72,7 @@ def main() -> int:
     if args.lang_meta:
         lang_meta = spark.read.parquet(args.lang_meta)
     else:
-        lang_meta = spark.createDataFrame(
-            [("en", "English", "sink_es"), ("de", "German", "sink_es"),
-             ("fr", "French", "sink_ls"), ("es", "Spanish", "sink_ls"),
-             ("zh", "Chinese", "sink_ls")],
-            "lang string, lang_label string, sink_hint string")
+        lang_meta = fixtures.lang_meta(spark)
 
     if args.incremental:
         table = Table(os.path.dirname(args.pages),

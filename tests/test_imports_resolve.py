@@ -155,3 +155,56 @@ def test_shipper_never_imports_analytics():
             if any(m.split(".")[0] == "beats_analytics" for m in mods):
                 problems.append(f"{rel}:{node.lineno}")
     assert not problems, "\n".join(problems)
+
+
+def _top_level(stmts):
+    """The statements a module runs on import: its body, with top-level
+    ``if``/``try``/``with`` blocks opened."""
+    for node in stmts:
+        yield node
+        if isinstance(node, (ast.If, ast.Try, ast.With)):
+            for field in ("body", "orelse", "finalbody"):
+                yield from _top_level(getattr(node, field, []))
+            for h in getattr(node, "handlers", []):
+                yield from _top_level(h.body)
+
+
+def _import_closure(dotted):
+    """The package modules ``import <dotted>`` loads, found statically:
+    module-level imports followed transitively, each with its parent
+    packages. Function-level imports run later, or never, so they are
+    not followed."""
+    seen, todo = set(), [dotted.split(".")]
+    while todo:
+        target = todo.pop()
+        for i in range(1, len(target) + 1):
+            parts = target[:i]
+            path = _module_file(parts)
+            if path is None or ".".join(parts) in seen:
+                continue
+            seen.add(".".join(parts))
+            package = (parts if path.endswith("__init__.py")
+                       else parts[:-1])
+            tree = ast.parse(open(path, encoding="utf-8").read(), path)
+            for node in _top_level(tree.body):
+                if isinstance(node, ast.Import):
+                    todo += [a.name.split(".") for a in node.names]
+                elif isinstance(node, ast.ImportFrom):
+                    base = (package[:len(package) - (node.level - 1)]
+                            if node.level else [])
+                    base = base + (node.module.split(".") if node.module
+                                   else [])
+                    # an imported name may be a submodule
+                    todo += [base] + [base + [a.name] for a in node.names]
+    return {m for m in seen if m.split(".")[0] in PACKAGES}
+
+
+def test_pipeline_never_loads_the_processor_registry():
+    """The shipped pipeline's lookups run ``beats_spark.lookup``, so
+    importing the pipeline loads none of ``beats_spark.processors``."""
+    assert "beats_spark.processors.enrich" in _import_closure(
+        "beats_spark.queries")
+    closure = _import_closure("beats_spark.pipeline")
+    assert "beats_spark.lookup" in closure
+    assert sorted(m for m in closure
+                  if m.split(".")[:2] == ["beats_spark", "processors"]) == []

@@ -21,9 +21,10 @@ from beats_spark import fixtures
 from beats_spark.dissect.spark import FLAG_PARSING_ERROR, cast_for
 from beats_spark.dissect.tokenizer import Dissector
 from beats_spark.functions.multiline import segment_lines
+from beats_spark.lookup import _folded, enrich
 from beats_spark.pipeline import (
-    _LOOKUPS, CONTINUATION, MAX_LINES, TOKENIZER, _enrich, _folded,
-    _parse_stage, build_events, build_routed, run_pipeline)
+    _LOOKUPS, CONTINUATION, MAX_LINES, TOKENIZER, _parse_stage,
+    build_events, build_routed, run_pipeline)
 
 PAGES_DDL = "url string, warc_ts timestamp, lang string, text string"
 KEYS = ["ts", "bytes", "host", "level", "msg"]
@@ -235,10 +236,11 @@ def test_compiled_plan_is_reused_and_released(spark):
     # the column names build_routed threads through its enrich steps are
     # the parse stage's own
     assert tuple(events.columns) == _parse_stage()[2]
-    # _enrich over the parsed events builds the very steps build_routed
+    # enrich over the parsed events builds the very steps build_routed
     # applies: a build finds them all and adds none
     for lookup, (on, fields, tag) in zip((hm, lm), _LOOKUPS):
-        events = _enrich(events, lookup, on, fields, tag)
+        events = enrich(events, lookup, on=on, lookup_key=on, fields=fields,
+                        tag_on_failure=tag)
 
     def entries():
         return [{k: id(v) for k, v in _folded[f].items()} for f in (hm, lm)]

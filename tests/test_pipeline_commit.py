@@ -14,8 +14,9 @@ from pyspark.sql import functions as F
 from beats_spark import fixtures
 from beats_spark.catalog import Catalog
 from beats_spark.checkpoint import Watermarks
+from beats_spark.lookup import _folded_lookup, enrich
 from beats_spark.pipeline import (
-    FOLD_MAX_ROWS, SINKS, _enrich, _folded_lookup, build_events, run_pipeline,
+    FOLD_MAX_ROWS, SINKS, build_events, run_pipeline,
     run_pipeline_incremental)
 from beats_spark.processors.enrich import broadcast_enrich
 
@@ -84,8 +85,10 @@ def test_folded_enrich_matches_broadcast(spark):
     assert None in hosts and set(fixtures.HOSTS[-2:]) <= hosts
     assert "zz" in langs
 
-    folded = _enrich(_enrich(events, hm, "host", HOST_FIELDS,
-                             "host_meta_miss"), lm, "lang", LANG_FIELDS)
+    folded = enrich(enrich(events, hm, on="host", lookup_key="host",
+                           fields=HOST_FIELDS,
+                           tag_on_failure="host_meta_miss"),
+                    lm, on="lang", lookup_key="lang", fields=LANG_FIELDS)
     plan = folded._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan and "Exchange" not in plan
     reference = _broadcast_reference(events, hm, lm)
@@ -107,7 +110,8 @@ def test_lookup_above_fold_limit_takes_broadcast_path(spark):
     assert _folded_lookup(big, "host", HOST_FIELDS) is None
 
     events = build_events(fixtures.pages(spark, 100))
-    enriched = _enrich(events, big, "host", HOST_FIELDS, "host_meta_miss")
+    enriched = enrich(events, big, on="host", lookup_key="host",
+                      fields=HOST_FIELDS, tag_on_failure="host_meta_miss")
     plan = enriched._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     reference = broadcast_enrich(events, big, on="host", lookup_key="host",
