@@ -8,8 +8,12 @@ Reference semantics are cited per-module as ``file:line`` paths inside
 ``/root/reference/`` (read-only snapshot). This is a re-design, not a
 port: the reference is a per-event interpreted Go chain; here every
 operator is a ``DataFrame -> DataFrame`` transform built from
-``pyspark.sql.functions`` columns, with vectorized pandas/Arrow UDFs
-only where Catalyst has no equivalent (dissect/grok tokenization).
+``pyspark.sql.functions`` columns. The shipped pipeline's parse is
+Catalyst expressions too (multiline as a regex split, dissect as one
+regex), so its plan has no Python node; vectorized pandas UDFs remain
+only in the ``dissect`` processor and the multiline parser, for the
+forms a regex does not cover. Lookup frames held in the driver are
+local relations (``lookup.local_frame``), read with no Python worker.
 """
 
 __version__ = "0.1.0"

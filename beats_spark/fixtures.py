@@ -1,7 +1,8 @@
 """Deterministic synthetic fixtures: the Common-Crawl-style ``pages``
 table mandated by BASELINE.json ``input_hint`` —
 ``(url string, warc_ts timestamp, html binary, text string, lang
-string)`` — plus the broadcast lookup tables (FIXTURES.md §1-2).
+string)`` — plus the host and lang lookup tables (FIXTURES.md §1-2),
+local relations that the pipeline folds into its plan as map literals.
 
 Generated **with Spark itself** (``spark.range`` + column expressions,
 seed-free determinism via id arithmetic): the same code paints 10³ rows
@@ -15,6 +16,8 @@ from __future__ import annotations
 from typing import List, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+
+from .lookup import local_frame
 
 __all__ = ["pages", "host_meta", "lang_meta", "HOSTS", "LANGS"]
 
@@ -102,8 +105,8 @@ def pages(spark: SparkSession, n_rows: int = 10_000,
 
 
 def host_meta(spark: SparkSession) -> DataFrame:
-    """Broadcast-side geo/dns lookup (FIXTURES.md §2): the last two
-    hosts are deliberately absent → left-join null branch exercises
+    """Geo/dns lookup on host (FIXTURES.md §2): the last two hosts are
+    deliberately absent, so the lookup-miss branch exercises
     ``tag_on_failure``."""
     rows = []
     countries = ["US", "DE", "GB", "FR", "JP", "BR", "IN", "AU", "CA", "NL"]
@@ -119,9 +122,10 @@ def host_meta(spark: SparkSession) -> DataFrame:
             f"203.0.{k}.{10 + k}",
             ".".join(parts[-2:]),
         ))
-    return spark.createDataFrame(
-        rows, "host string, geo_country string, geo_city string, "
-              "asn bigint, resolved_ip string, registered_domain string")
+    return local_frame(spark, rows,
+                       "host string, geo_country string, geo_city string, "
+                       "asn bigint, resolved_ip string, "
+                       "registered_domain string")
 
 
 def lang_meta(spark: SparkSession) -> DataFrame:
@@ -133,5 +137,5 @@ def lang_meta(spark: SparkSession) -> DataFrame:
         ("zh", "Chinese", "sink_ls"),
         # zz intentionally absent → router default handles it
     ]
-    return spark.createDataFrame(
-        rows, "lang string, lang_label string, sink_hint string")
+    return local_frame(
+        spark, rows, "lang string, lang_label string, sink_hint string")

@@ -18,20 +18,28 @@ decision, made from its content, picks how a plan probes it:
 Both give the same columns, schema and rows (``enrich``). This module
 imports no processor: the shipped pipeline reaches it without loading
 the registry.
+
+Lookup frames held in the driver are local relations (``local_frame``):
+Spark reads them, and the fold above collects them, in the driver,
+with no job and no Python worker.
 """
 
 from __future__ import annotations
 
 import json
 import weakref
-from typing import Dict, List, Mapping, Optional, Sequence, Tuple
+from typing import (Dict, Iterable, List, Mapping, Optional, Sequence,
+                    Tuple)
 
-from pyspark.sql import Column, DataFrame, functions as F
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType, BooleanType, DataType, DoubleType, FloatType, IntegralType,
-    StringType, StructField, StructType)
+    StringType, StructField, StructType, _parse_datatype_string)
 
-__all__ = ["FOLD_MAX_ROWS", "broadcast_enrich", "enrich", "enrich_assigns"]
+__all__ = ["FOLD_MAX_ROWS", "broadcast_enrich", "enrich", "enrich_assigns",
+           "local_frame"]
 
 # Lookups of at most this many rows are folded into the plan; larger
 # ones are broadcast joins. Spark looks a key up in a map literal by a
@@ -51,6 +59,22 @@ FOLD_MAX_ROWS = 1024
 # once build the same entries, and either may be kept.
 _folded: "weakref.WeakKeyDictionary[DataFrame, dict]" = \
     weakref.WeakKeyDictionary()
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Sequence],
+                ddl: str) -> DataFrame:
+    """A frame of the driver-held ``rows`` with the schema ``ddl``, as a
+    local relation (``LocalTableScan``).
+
+    ``createDataFrame`` over a Python list plans as a scan of a Python
+    RDD: reading it, even to collect it, runs a Spark job and forks the
+    Python workers, which then stay for the life of the session. Over an
+    Arrow table it is a ``LocalRelation``, which the driver reads in the
+    JVM."""
+    schema = _parse_datatype_string(ddl)
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                 to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 def enrich_assigns(

@@ -81,8 +81,6 @@ CONTINUATION = ("\t\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
 # an event ends at every line break that no continuation character follows
 _EVENT_BREAK = "\n(?![%s])" % "".join(f"\\u{ord(c):04x}" for c in CONTINUATION)
 MAX_LINES = 500  # multiline/pattern.go:52-58
-# an event's first MAX_LINES lines; possessive, so no input backtracks
-_HEAD_LINES = r"\A[^\n]*+(?:\n[^\n]*+){0,%d}" % (MAX_LINES - 1)
 _DISSECTOR = Dissector(TOKENIZER)
 _DISSECT_RX, _DISSECT_GROUPS = _DISSECTOR.to_regex()
 _PAGE_COLUMNS = ["url", "warc_ts", "lang"]
@@ -111,8 +109,10 @@ def _parse_stage() -> Tuple[Column, List[List[Column]], Tuple[str, ...]]:
     # empty, so once null texts are filtered it emits no extra row.
     split = page + [F.posexplode_outer(F.split("text", _EVENT_BREAK, -1))
                     .alias("msg_idx", "message")]
-    head = page + [F.col("msg_idx"), F.regexp_extract(
-        "message", _HEAD_LINES, 0).alias("message")]
+    # the text before the MAX_LINES-th line break: the first MAX_LINES
+    # lines, found by a byte scan of the UTF-8 string
+    head = page + [F.col("msg_idx"), F.substring_index(
+        "message", "\n", MAX_LINES).alias("message")]
     message = F.col("message")
     # dissect treats the empty message as a parse failure
     # (dissect.go:57-62); a failed message carries no key values

@@ -41,6 +41,8 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .lookup import local_frame
+
 __all__ = ["PslRules", "parse_psl", "load_psl_file", "ICANN_SUBSET",
            "default_rules", "registered_domain_psl"]
 
@@ -209,8 +211,8 @@ def registered_domain_psl(
     for s in rules.exception:
         merged.setdefault(s, [False, False, False])[2] = True
     rows = [(s, ex, wd, xc) for s, (ex, wd, xc) in sorted(merged.items())]
-    rtab = spark.createDataFrame(
-        rows, "sfx string, ex boolean, wd boolean, xc boolean")
+    rtab = local_frame(
+        spark, rows, "sfx string, ex boolean, wd boolean, xc boolean")
 
     host = F.lower(F.col(host_col))
     labels = F.split(host, r"\.")

@@ -31,6 +31,7 @@ from .functions.multiline import multiline_join_col
 from .processors import compile_processors
 from .routing import route
 from .fmtstr import compile_fmtstr
+from .lookup import local_frame
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
@@ -2751,7 +2752,7 @@ def cidr_enrich_q(spark, sf_dir):
     oracle spells the same mask arithmetic as tiered CASE."""
     from .processors.enrich import cidr_enrich
     ev = _t(spark, sf_dir, "events")
-    prefixes = spark.createDataFrame([
+    prefixes = local_frame(spark, [
         ("10.0.0.0/8", 64496, "corp-net"),
         ("10.1.0.0/16", 64497, "dmz"),
         ("10.1.1.0/24", 64498, "lb-pool"),
