@@ -1,7 +1,7 @@
 from .tokenizer import Dissector, DissectError, TokenizerError, convert_value
-from .spark import apply_dissect, dissect_map_col, cast_for, FLAG_PARSING_ERROR
+from .spark import apply_dissect, cast_for, FLAG_PARSING_ERROR
 
 __all__ = [
     "Dissector", "DissectError", "TokenizerError", "convert_value",
-    "apply_dissect", "dissect_map_col", "cast_for", "FLAG_PARSING_ERROR",
+    "apply_dissect", "cast_for", "FLAG_PARSING_ERROR",
 ]

@@ -16,9 +16,11 @@ implementation (``libbeat/processors/dissect/``):
   ``dissect/dissect.go:238-285``
 - validation:                 ``dissect/validate.go:24-41``
 
-The class is deliberately Spark-free: it runs inside an Arrow-batched
-pandas UDF (see ``beats_spark.dissect.spark``) and in plain unit tests.
-The hot loop is ``str.find`` based — no regex at extraction time.
+The class is deliberately Spark-free. ``Dissector.to_regex`` gives the
+one regex that ``beats_spark.dissect.spark`` runs as Catalyst
+expressions; a tokenizer no regex expresses runs ``dissect_safe`` in an
+Arrow-batched pandas UDF. The hot loop is ``str.find`` based — no regex
+at extraction time.
 """
 
 from __future__ import annotations
@@ -256,7 +258,10 @@ class Dissector:
     def to_regex(self) -> Optional[Tuple[str, List[str]]]:
         """``(pattern, group_keys)`` when the tokenizer is expressible
         as one anchored lazy-capture regex — i.e. only normal/skip
-        fields, no fixed length, no greedy padding, no append/indirect.
+        fields, no fixed length, no greedy padding, no append/indirect,
+        no ``/ordinal`` (which reorders the assignment of a repeated
+        key). A repeated key has one group per occurrence; the last
+        one holds the value ``dissect_safe`` gives the key.
 
         Equivalence: ``str.find(next_delim)`` (leftmost next-delimiter,
         ``dissect.go:103-165``) is exactly a lazy ``(.*?)`` followed by
@@ -272,17 +277,14 @@ class Dissector:
         if self._trim is not None:
             return None
         for f in self._fields:
-            if f.kind not in (NORMAL, SKIP) or f.fixed or f.greedy:
+            if (f.kind not in (NORMAL, SKIP) or f.fixed or f.greedy
+                    or f.ordinal):
                 return None
-        if any(self._greedy):
-            return None
-        # fields in token order (self._fields is ordinal-sorted, which
-        # equals token order when every ordinal is 0)
-        by_token = sorted(self._fields, key=lambda f: f.id)
+        # with every ordinal 0, self._fields is in token order
         parts = ["^", re.escape(self._delims[0])]
         group_keys: List[str] = []
         n_delims = len(self._delims)
-        for i, f in enumerate(by_token):
+        for i, f in enumerate(self._fields):
             is_tail = (i + 1 >= n_delims)
             field = "(.*" if f.kind == NORMAL else "(?:.*"
             if f.kind == NORMAL:
@@ -352,33 +354,11 @@ class Dissector:
     def dissect(self, s: str) -> Dict[str, str]:
         """String → {key: value}; raises DissectError on failure
         (dissect.go:57-77)."""
-        if not s:
-            raise DissectError("empty string provided")
-        positions = self._extract(s)
-        if positions is None:
+        m = self.dissect_safe(s)
+        if m is None:
+            if not s:
+                raise DissectError("empty string provided")
             raise DissectError(f"could not dissect {s!r} with {self.raw!r}")
-        if self._trim is not None:
-            positions = [self._trim(s, a, b) for a, b in positions]
-
-        m: Dict[str, str] = {}
-        for f in self._fields:
-            a, b = positions[f.id]
-            v = s[a:b]
-            k = f.kind
-            if k == SKIP:
-                continue
-            if k == INDIRECT:
-                ref = m.get(f.key)
-                if ref is not None:
-                    m[ref] = v
-                continue
-            if k == APPEND:
-                prev = m.get(f.key)
-                m[f.key] = v if prev is None else prev + f.join + v
-                continue
-            m[f.key] = v  # NORMAL / NAMED_SKIP / POINTER
-        for k in self._reference_keys:
-            m.pop(k, None)
         return m
 
     def dissect_convert(self, s: str) -> Dict[str, object]:
@@ -449,7 +429,7 @@ class Dissector:
                 prev = m.get(f.key)
                 m[f.key] = v if prev is None else prev + f.join + v
                 continue
-            m[f.key] = v
+            m[f.key] = v  # NORMAL / NAMED_SKIP / POINTER
         for k in self._reference_keys:
             m.pop(k, None)
         return m

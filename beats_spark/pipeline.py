@@ -10,9 +10,10 @@ Stage → reference mapping:
    a regex ``split`` at every line break no whitespace follows, then
    ``posexplode``; an event keeps its first ``MAX_LINES`` lines. Per
    row, **no shuffle** (``multiline/pattern.go``).
-3. dissect: the tokenizer as one regex (``Dissector.to_regex``) in
-   ``regexp_extract`` expressions, typed key columns
-   (``dissect/processor.go``); parse failures → dead-letter route.
+3. dissect: the tokenizer as one regex in ``regexp_extract``
+   expressions, typed key columns (``dissect.spark.dissect_columns``,
+   the form the ``dissect`` processor runs too;
+   ``dissect/processor.go``); parse failures → dead-letter route.
    Stages 2–7 are Catalyst expressions only: the plan has no Python
    node, so every stage runs in the fused JVM operator chain, as Beats
    runs its processors in the process that holds the queue and outputs.
@@ -43,8 +44,7 @@ makes.
 Scale notes: the only shuffle in the whole plan is none at all — parse
 and enrich are map-side (map literal or broadcast), the routed write is
 partition-local. Hot-host skew therefore costs nothing here; it matters
-only for host-keyed aggregations (see mlops/bench), where AQE +
-salting handle it.
+only for host-keyed aggregations, where AQE + salting handle it.
 """
 
 from __future__ import annotations
@@ -58,7 +58,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType
 
 from .checkpoint import Watermarks, new_run_id, snapshot_id_of
-from .dissect.spark import FLAG_PARSING_ERROR, cast_for
+from .dissect.spark import FLAG_PARSING_ERROR, dissect_columns
 from .dissect.tokenizer import Dissector
 from .lookup import FOLD_MAX_ROWS, enrich_columns
 from .metrics import (attach_observation, metrics_rows, write_lineage,
@@ -81,8 +81,6 @@ CONTINUATION = ("\t\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
 # an event ends at every line break that no continuation character follows
 _EVENT_BREAK = "\n(?![%s])" % "".join(f"\\u{ord(c):04x}" for c in CONTINUATION)
 MAX_LINES = 500  # multiline/pattern.go:52-58
-_DISSECTOR = Dissector(TOKENIZER)
-_DISSECT_RX, _DISSECT_GROUPS = _DISSECTOR.to_regex()
 _PAGE_COLUMNS = ["url", "warc_ts", "lang"]
 
 # enrich: geo/dns-ish lookup on host (dns/dns.go:80 append semantics,
@@ -114,22 +112,15 @@ def _parse_stage() -> Tuple[Column, List[List[Column]], Tuple[str, ...]]:
     head = page + [F.col("msg_idx"), F.substring_index(
         "message", "\n", MAX_LINES).alias("message")]
     message = F.col("message")
-    # dissect treats the empty message as a parse failure
-    # (dissect.go:57-62); a failed message carries no key values
-    ok = message.rlike(_DISSECT_RX) & (F.length(message) > 0)
-    raw = {k: F.when(ok, F.regexp_extract(message, _DISSECT_RX, i + 1))
-           for i, k in enumerate(_DISSECT_GROUPS)}
-    typed = {k: cast_for(dt, v) if (dt := _DISSECTOR.data_types.get(k))
-             else v for k, v in raw.items()}
+    ok, keys = dissect_columns(message, Dissector(TOKENIZER))
     # the extracted ts becomes event_ts; the other keys keep their names
     dissect = dict(zip(_PAGE_COLUMNS, page), msg_idx=F.col("msg_idx"),
                    message=message)
-    dissect.update((k, typed[k].alias(k)) for k in _DISSECTOR.keys
-                   if k != "ts")
+    dissect.update((k, v.alias(k)) for k, v in keys.items() if k != "ts")
     dissect["log_flags"] = F.when(~ok, F.array(F.lit(FLAG_PARSING_ERROR))) \
         .otherwise(F.array().cast("array<string>")).alias("log_flags")
     dissect["event_ts"] = F.try_to_timestamp(
-        raw["ts"], F.lit("yyyy-MM-dd'T'HH:mm:ss'Z'")).alias("event_ts")
+        keys["ts"], F.lit("yyyy-MM-dd'T'HH:mm:ss'Z'")).alias("event_ts")
     return (F.col("text").isNotNull(), [split, head, list(dissect.values())],
             tuple(dissect))
 
@@ -141,7 +132,7 @@ def build_events(pages: DataFrame) -> DataFrame:
     (``_parse_stage``): the page text splits into events at line breaks
     no continuation character follows, each event keeps its first
     ``MAX_LINES`` lines, and the tokenizer runs as one regex
-    (``Dissector.to_regex``)."""
+    (``dissect_columns``)."""
     has_text, projections, _ = _parse_stage()
     events = pages.where(has_text)
     for columns in projections:

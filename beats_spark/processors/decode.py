@@ -1,7 +1,7 @@
 """Decode / parse processors (SURVEY.md §2.4).
 
 All JVM-side built-ins except gzip decompression (zlib pandas UDF) and
-the dissect processor (Arrow UDF from ``beats_spark.dissect``).
+a dissect tokenizer no regex expresses (``beats_spark.dissect``).
 """
 
 from __future__ import annotations

@@ -447,9 +447,9 @@ SELECT regexp_extract(message, 'evt=([^ ]+) user=', 1) AS etype,
 FROM lines GROUP BY etype
 """)
 def dissect_extract(spark, sf_dir):
-    """Dissect tokenizer (Arrow-batched) round-trip: synthesize a log
-    line from typed columns, tokenize it back, aggregate the typed
-    results."""
+    """Dissect tokenizer (Catalyst ``regexp_extract``) round-trip:
+    synthesize a log line from typed columns, tokenize it back,
+    aggregate the typed results."""
     ev = _t(spark, sf_dir, "events")
     line = F.concat(F.lit("evt="), F.col("event_type"),
                     F.lit(" user="), F.col("user_id").cast("string"),
