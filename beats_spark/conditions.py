@@ -31,8 +31,6 @@ from __future__ import annotations
 import ipaddress
 from typing import Any, Dict, Iterator, List, Mapping, Sequence
 
-import pandas as pd
-
 from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
 
@@ -179,16 +177,21 @@ def _go_named_pred(spec: str):
 
 def _ip_pred_udf(pred):
     """Arrow-batched boolean UDF over an IP string column; unparseable
-    values are false (Go: ParseIP nil → no match)."""
+    values are false (Go: ParseIP nil → no match). pandas is loaded
+    only when a plan needs this kernel."""
+    import pandas as pd
 
-    @F.pandas_udf("boolean")
-    def _m(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    def _m(it):
         def one(v):
             ip = _go_ip_parse(v)
             return bool(pred(ip)) if ip is not None else False
         for s in it:
             yield s.map(one)
-    return _m
+    # pandas_udf reads its kind from the hints; written in the
+    # signature they would be strings naming a module-level ``pd``
+    _m.__annotations__ = {"it": Iterator[pd.Series],
+                          "return": Iterator[pd.Series]}
+    return F.pandas_udf(_m, "boolean")
 
 
 def cidr_match(col: Column, cidr: str) -> Column:

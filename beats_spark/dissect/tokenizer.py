@@ -16,17 +16,18 @@ implementation (``libbeat/processors/dissect/``):
   ``dissect/dissect.go:238-285``
 - validation:                 ``dissect/validate.go:24-41``
 
-The class is deliberately Spark-free. ``Dissector.to_regex`` gives the
-one regex that ``beats_spark.dissect.spark`` runs as Catalyst
-expressions; a tokenizer no regex expresses runs ``dissect_safe`` in an
-Arrow-batched pandas UDF. The hot loop is ``str.find`` based — no regex
-at extraction time.
+The class is deliberately Spark-free: it is the reference that
+``beats_spark.dissect.spark.dissect_columns`` transcribes into Catalyst
+expressions (``_extract``'s find loop and ``dissect_safe``'s key
+assignment), and the tests hold that form to it. The loop is
+``str.find`` based — no regex at extraction time.
 """
 
 from __future__ import annotations
 
 import ipaddress
 import re
+import string
 from dataclasses import dataclass, field as dc_field
 from typing import Dict, List, Optional, Tuple
 
@@ -50,6 +51,7 @@ _SUFFIX_RE = re.compile(
 )
 
 _DATA_TYPES = {"integer", "long", "float", "double", "string", "boolean", "ip"}
+_NUMERIC = {"integer", "long", "float", "double"}
 _DEFAULT_JOIN = " "
 
 # kinds
@@ -159,20 +161,30 @@ def _parse_bool(v: str) -> bool:
 
 
 def _str_to_int(v: str) -> int:
-    # base-16 when 0x/0X prefixed, else base 10 (dissect.go:239-247)
-    if v.startswith("0x") or v.startswith("0X") or v.startswith("-0x") or v.startswith("-0X"):
-        return int(v, 16)
+    # base 16 after a 0x/0X prefix, which a minus sign may precede, else
+    # base 10 (dissect.go:239-247)
+    neg = v.startswith("-")
+    body = v[1:] if neg else v
+    if body.startswith(("0x", "0X")):
+        digits = body[2:]
+        if not digits or not set(digits) <= set(string.hexdigits):
+            raise ValueError(f"not a hex int: {v!r}")
+        return -int(digits, 16) if neg else int(digits, 16)
     return int(v, 10)
 
 
 def convert_value(data_type: str, v: str):
     """Typed conversion with fall-back-to-string on failure
     (dissect.go:249-285). Returns the converted value or the original
-    string if conversion fails."""
+    string if conversion fails. Numbers are ASCII without ``_``
+    separators, as Go's ``strconv`` reads a base-10 number; Python's
+    ``int``/``float`` would take both."""
     try:
         s = v.rstrip(" ")
         if data_type == "string":
             return s
+        if data_type in _NUMERIC and ("_" in s or not s.isascii()):
+            return v
         if data_type in ("integer", "long"):
             n = _str_to_int(s)
             if data_type == "integer" and not (-(2 ** 31) <= n < 2 ** 31):
@@ -203,6 +215,8 @@ class Dissector:
                  trim_chars: str = " "):
         self.raw = tokenizer
         self._trim = make_trimmer(trim_values, trim_chars)
+        self.trim_values = (trim_values or "none").lower()
+        self.trim_chars = trim_chars
 
         matches = list(_DELIM_RE.finditer(tokenizer))
         if not matches:
@@ -252,49 +266,6 @@ class Dissector:
         for f in fields_sorted:
             if f.kind == INDIRECT and f.key not in refs:
                 raise TokenizerError(f"missing reference for key '{f.key}'")
-
-    # -- vectorizable fast path ---------------------------------------
-
-    def to_regex(self) -> Optional[Tuple[str, List[str]]]:
-        """``(pattern, group_keys)`` when the tokenizer is expressible
-        as one anchored lazy-capture regex — i.e. only normal/skip
-        fields, no fixed length, no greedy padding, no append/indirect,
-        no ``/ordinal`` (which reorders the assignment of a repeated
-        key). A repeated key has one group per occurrence; the last
-        one holds the value ``dissect_safe`` gives the key.
-
-        Equivalence: ``str.find(next_delim)`` (leftmost next-delimiter,
-        ``dissect.go:103-165``) is exactly a lazy ``(.*?)`` followed by
-        the escaped delimiter, inside an atomic group ``(?>...)`` because
-        ``find`` never revisits a delimiter it has taken (so a message
-        that fails costs one scan, not a backtracking search); the tail
-        capture is ``(.*)``; trailing literal delimiters leave the
-        remainder unanchored, matching the tail-field rule at
-        ``dissect.go:166-180``. The pattern reads the same in Python
-        (3.11+) and Java regex syntax, so callers run the tokenizer as
-        Catalyst ``regexp_extract`` expressions.
-        """
-        if self._trim is not None:
-            return None
-        for f in self._fields:
-            if (f.kind not in (NORMAL, SKIP) or f.fixed or f.greedy
-                    or f.ordinal):
-                return None
-        # with every ordinal 0, self._fields is in token order
-        parts = ["^", re.escape(self._delims[0])]
-        group_keys: List[str] = []
-        n_delims = len(self._delims)
-        for i, f in enumerate(self._fields):
-            is_tail = (i + 1 >= n_delims)
-            field = "(.*" if f.kind == NORMAL else "(?:.*"
-            if f.kind == NORMAL:
-                group_keys.append(f.key)
-            if is_tail:
-                parts.append(field + ")")
-            else:
-                parts.append("(?>" + field + "?)"
-                             + re.escape(self._delims[i + 1]) + ")")
-        return "(?s)" + "".join(parts), group_keys
 
     # -- extraction ---------------------------------------------------
 

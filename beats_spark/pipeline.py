@@ -10,10 +10,11 @@ Stage → reference mapping:
    a regex ``split`` at every line break no whitespace follows, then
    ``posexplode``; an event keeps its first ``MAX_LINES`` lines. Per
    row, **no shuffle** (``multiline/pattern.go``).
-3. dissect: the tokenizer as one regex in ``regexp_extract``
-   expressions, typed key columns (``dissect.spark.dissect_columns``,
-   the form the ``dissect`` processor runs too;
-   ``dissect/processor.go``); parse failures → dead-letter route.
+3. dissect: the tokenizer's find loop as ``startswith``/``position``/
+   ``substr`` expressions, no regex, and typed key columns
+   (``dissect.spark.dissect_columns``, the form the ``dissect``
+   processor runs too; ``dissect/processor.go``); parse failures →
+   dead-letter route.
    Stages 2–7 are Catalyst expressions only: the plan has no Python
    node, so every stage runs in the fused JVM operator chain, as Beats
    runs its processors in the process that holds the queue and outputs.
@@ -131,8 +132,8 @@ def build_events(pages: DataFrame) -> DataFrame:
     A filter and three projections of Catalyst expressions
     (``_parse_stage``): the page text splits into events at line breaks
     no continuation character follows, each event keeps its first
-    ``MAX_LINES`` lines, and the tokenizer runs as one regex
-    (``dissect_columns``)."""
+    ``MAX_LINES`` lines, and the tokenizer runs as Catalyst string
+    functions (``dissect_columns``)."""
     has_text, projections, _ = _parse_stage()
     events = pages.where(has_text)
     for columns in projections:

@@ -1,7 +1,6 @@
 """Decode / parse processors (SURVEY.md §2.4).
 
-All JVM-side built-ins except gzip decompression (zlib pandas UDF) and
-a dissect tokenizer no regex expresses (``beats_spark.dissect``).
+All JVM-side built-ins except gzip decompression (zlib pandas UDF).
 """
 
 from __future__ import annotations

@@ -1,16 +1,23 @@
-"""The ``dissect`` processor runs a tokenizer that ``Dissector.to_regex``
-expresses as Catalyst expressions (``dissect_columns``), with no Python
-node in the plan. These tests hold it to the pandas UDF it falls back to
-for the other tokenizers, on edge-case messages and frames."""
+"""The ``dissect`` processor and the shipped parse run every tokenizer
+as Catalyst expressions (``dissect_columns``), with no Python node and,
+in the shipped plan, no regex. These tests hold that form to the Python
+reference (``Dissector.dissect_safe`` + ``convert_value``) on edge-case
+messages and frames."""
+
+import json
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from beats_spark import fixtures
 from beats_spark.config import load_pipeline
-from beats_spark.dissect import Dissector, apply_dissect
+from beats_spark.dissect import (Dissector, apply_dissect, cast_for,
+                                 convert_value)
 from beats_spark.lookup import local_frame
-
-PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")
+from beats_spark.pipeline import build_routed
+from dissect_reference import (PYTHON_NODES, assert_catalyst_matches, plan,
+                               reference_apply, typed_reference)
 
 # skip fields, a key named twice, a trailing literal and every |type
 # the cast covers
@@ -24,14 +31,14 @@ MESSAGES = [
     "x y <0x> 12x 0 1.2.3.4 z.",
     "first\nline y <7> 8 False fe80::1 multi\nline.",
     "x y <1 > 2  TRUE 10.0.0.1  z.",
+    "x y <-0x1F> 1_000 1 10.0.0.1 z.",
+    "x y <0x1F1F1F1F1F1F1F1F1F> -0x8000000000000000 0 ::1 z.",
 ]
 TEXT = "ts=%{ts} msg=%{msg}"
 TEXTS = [None, "", "ts=1 msg=hi", "ts= msg=", "ts=2\nmsg=no",
          "ts=3 msg=a\nb c", "msg=only"]
-
-
-def plan(df):
-    return df._jdf.queryExecution().executedPlan().toString()
+_TYPES = {"integer": T.IntegerType(), "long": T.LongType(),
+          "boolean": T.BooleanType()}
 
 
 def frame(spark, messages, extra_ddl="", extra=()):
@@ -39,27 +46,30 @@ def frame(spark, messages, extra_ddl="", extra=()):
     return local_frame(spark, rows, "id int, message string" + extra_ddl)
 
 
-def fallback(df, *args, **kwargs):
-    """``apply_dissect`` through its pandas UDF: the tokenizer as if no
-    regex expressed it."""
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(Dissector, "to_regex", lambda self: None)
-        return apply_dissect(df, *args, **kwargs)
-
-
-def assert_same(got, want):
-    assert got.schema == want.schema
-    assert got.orderBy("id").collect() == want.orderBy("id").collect()
+def assert_reference(got, df, tokenizer, **kwargs):
+    """``got`` is ``apply_dissect(df, tokenizer, **kwargs)`` as the
+    reference computes it, with no Python node in its plan: its rows,
+    its column order and each key column's type."""
+    for node in PYTHON_NODES:
+        assert node not in plan(got), node
+    rows = [r.asDict() for r in df.orderBy("id").collect()]
+    want = reference_apply(rows, tokenizer, **kwargs)
+    assert got.columns == list(want[0])
+    assert [r.asDict() for r in got.orderBy("id").collect()] == want
+    d = Dissector(tokenizer)
+    prefix = kwargs.get("target_prefix", "dissect")
+    for k in d.keys:
+        name = f"{prefix}_{k}" if prefix else k
+        if name not in df.columns or kwargs.get("overwrite_keys"):
+            want_type = _TYPES.get(d.data_types.get(k), T.StringType())
+            assert got.schema[name].dataType == want_type, name
+    assert got.schema["log_flags"].dataType == T.ArrayType(T.StringType())
 
 
 def test_typed_tokenizer_matches_udf(spark):
     df = frame(spark, MESSAGES)
     got = apply_dissect(df, TYPED)
-    want = fallback(df, TYPED)
-    for node in PYTHON_NODES:
-        assert node not in plan(got), node
-    assert "ArrowEvalPython" in plan(want)
-    assert_same(got, want)
+    assert_reference(got, df, TYPED)
     by = {r.id: r for r in got.collect()}
     assert by[0].log_flags == by[1].log_flags == by[2].log_flags \
         == ["dissect_parsing_error"]
@@ -69,6 +79,8 @@ def test_typed_tokenizer_matches_udf(spark):
     assert (by[5].dissect_n, by[5].dissect_l, by[5].dissect_ok,
             by[5].dissect_addr) == (None, None, None, None)
     assert by[8].dissect_a == "multi\nline" and by[8].log_flags == []
+    assert (by[10].dissect_n, by[10].dissect_l) == (-31, None)
+    assert (by[11].dissect_n, by[11].dissect_l) == (None, -2 ** 63)
 
 
 @pytest.mark.parametrize("prefix", ["dissect", ""])
@@ -81,10 +93,8 @@ def test_clashing_columns_and_flags_match_udf(spark, prefix, overwrite):
                                            F.col("log_flags")))
     got = apply_dissect(df, TEXT, target_prefix=prefix,
                         overwrite_keys=overwrite)
-    want = fallback(df, TEXT, target_prefix=prefix, overwrite_keys=overwrite)
-    for node in PYTHON_NODES:
-        assert node not in plan(got), node
-    assert_same(got, want)
+    assert_reference(got, df, TEXT, target_prefix=prefix,
+                     overwrite_keys=overwrite)
     rows = got.orderBy("id").collect()
     assert (rows[2][clash] == "hi") is overwrite
     assert rows[0].log_flags == ["prior", "dissect_parsing_error"]
@@ -96,23 +106,89 @@ def test_clashing_columns_and_flags_match_udf(spark, prefix, overwrite):
     ("%{a} %{b}", {"trim_values": "all"}),
     ("%{+a} %{+a}", {}),
 ])
-def test_tokenizers_no_regex_expresses_keep_the_udf(spark, tokenizer, kwargs):
-    df = frame(spark, [None, "", " x  y ", "x y z"])
+def test_tokenizers_no_regex_expresses_plan_no_python_node(
+        spark, tokenizer, kwargs):
+    df = frame(spark, [None, "", " x  y ", "x y z", "x\ny  z\n"])
     got = apply_dissect(df, tokenizer, **kwargs)
-    assert "ArrowEvalPython" in plan(got)
-    assert "__dissect_map" not in got.columns
-    d = Dissector(tokenizer, **kwargs)
-    for r in got.collect():
-        kv = d.dissect_safe(r.message)
-        assert r.log_flags == ([] if kv else ["dissect_parsing_error"])
-        assert r.dissect_a == (kv["a"] if kv else None)
+    assert_reference(got, df, tokenizer, **kwargs)
 
 
-def test_ordinal_keys_are_left_to_the_udf():
+def test_ordinal_keys_follow_the_find_loop(spark):
     # the find() loop assigns a repeated key in ordinal order, not in
-    # token order, which a regex's groups do not follow
-    assert Dissector("%{a/2} %{a/1}").to_regex() is None
+    # token order, and joins an append key in ordinal order
     assert Dissector("%{a/2} %{a/1}").dissect("x y") == {"a": "x"}
+    for tokenizer in ("%{a/2} %{a/1}", "%{+a/2} %{+a/1} %{+a/3}"):
+        df = frame(spark, ["x y z", "x y", "x"])
+        assert_reference(apply_dissect(df, tokenizer), df, tokenizer)
+
+
+@pytest.mark.parametrize("tokenizer, kwargs, messages", [
+    ("%{a->} %{b}", {}, ["x    y", "x y", "xy", "x  "]),
+    ("%{a->}ab%{b}", {}, ["xababababy", "xabay", "xab", "abababab"]),
+    ("%{a#3}%{b}", {}, ["abcdef", "ab", "abc"]),
+    ("%{a} %{b#2}", {}, ["x yz", "x yzw", "x y"]),
+    ("%{a#3}-%{b}", {}, ["abc", "abc-", "abc-d", "ab"]),
+    ("%{*p} %{&p} %{a}", {}, ["a v w", "b v w", "p v w", "a v"]),
+    ("%{?x} %{&x}/%{+y} %{+y}", {}, ["y v/w z", "q v/w z"]),
+    ("%{+a/2} %{+a/1}->%{b#1}", {}, ["x y->z", "x y->zz"]),
+    ("<%{a}>%{b}", {"trim_values": "left", "trim_chars": " <"},
+     ["< x>  y ", "<x>y"]),
+    ("%{a},%{b}", {"trim_values": "right", "trim_chars": ""},
+     ["x ,y ", ",", "x,"]),
+    ("%{a}😀%{b->}😀😀%{c}", {"trim_values": "both", "trim_chars": "😀 "},
+     ["😀x😀y😀😀😀😀😀z😀", " x 😀 y 😀😀 z "]),
+])
+def test_every_field_kind_matches_reference(spark, tokenizer, kwargs,
+                                            messages):
+    assert_catalyst_matches(spark, Dissector(tokenizer, **kwargs),
+                            [None, ""] + messages)
+
+
+def test_typed_conversion_follows_the_reference(spark):
+    """A signed 0x prefix, Java's float suffix and Python's digit
+    separator: both paths read each as Go's strconv does."""
+    cases = [("long", "-0x1F", -31), ("double", "1.5f", None),
+             ("long", "1_000", None), ("integer", "-0X80000000", -2 ** 31),
+             ("double", "0x1p3", None), ("double", "-Infinity",
+                                         float("-inf")),
+             ("double", "iNf", float("inf")), ("double", "2d", None),
+             ("double", "1_0.5", None), ("long", "0x 1F", None)]
+    df = local_frame(spark, [(v,) for _, v, _ in cases], "v string")
+    got = df.select(*(cast_for(t, F.col("v")).alias(f"c{i}")
+                      for i, (t, _, _) in enumerate(cases))).collect()
+    for i, (data_type, value, want) in enumerate(cases):
+        assert typed_reference(data_type, value) == want, value
+        assert got[i][f"c{i}"] == want, value
+    assert convert_value("long", "1_000") == "1_000"
+    assert convert_value("double", "1.5f") == "1.5f"
+
+
+def _expression_classes(df):
+    """The class names of every expression in ``df``'s executed plan."""
+    classes = set()
+
+    def walk(node):
+        if isinstance(node, dict):
+            if "class" in node:
+                classes.add(node["class"].rsplit(".", 1)[-1])
+            for v in node.values():
+                walk(v)
+        elif isinstance(node, list):
+            for v in node:
+                walk(v)
+    walk(json.loads(df._jdf.queryExecution().executedPlan().toJSON()))
+    return classes
+
+
+def test_shipped_plan_runs_no_regex_dissect(spark):
+    pages = fixtures.pages(spark, 20)
+    routed = build_routed(pages, fixtures.host_meta(spark),
+                          fixtures.lang_meta(spark))
+    classes = _expression_classes(routed)
+    assert {"StringLocate", "StartsWith"} <= classes
+    assert not classes & {"RLike", "RegExpExtract", "RegExpReplace"}
+    # the multiline split keeps its regex
+    assert "StringSplit" in classes
 
 
 CONFIG = """

@@ -1,14 +1,12 @@
-"""Property-based equivalence: for every regex-expressible dissect
-pattern and arbitrary input, the vectorized fast path
-(`Dissector.to_regex` + re.match) must agree exactly with the
-find()-loop tokenizer — including failure cases."""
+"""Property-based equivalence: for every pattern of normal and skip
+fields and arbitrary input, the Catalyst dissect (`dissect_columns`)
+must agree exactly with the find()-loop tokenizer — including failure
+cases. `test_dissect_fields_property` covers the other field kinds."""
 
-import re
-
-import pandas as pd
 from hypothesis import given, settings, strategies as st
 
 from beats_spark.dissect.tokenizer import Dissector
+from dissect_reference import assert_catalyst_matches
 
 # delimiters drawn from realistic log punctuation (non-empty)
 _delim = st.text(alphabet=" =,;|/:[]()#\"'", min_size=1, max_size=4)
@@ -33,51 +31,26 @@ _msg = st.text(alphabet=" =,;|/:[]()#\"'abcdxyz\n\t0123456789",
                max_size=60)
 
 
+def _dissector(pat):
+    try:
+        return Dissector(pat)
+    except Exception:
+        return None  # invalid tokenizer — both paths nonexistent
+
+
 @settings(max_examples=300, deadline=None)
 @given(pat=patterns(), msg=_msg)
-def test_fast_path_equals_find_loop(pat, msg):
-    try:
-        d = Dissector(pat)
-    except Exception:
-        return  # invalid tokenizer — both paths nonexistent
-    rx = d.to_regex()
-    if rx is None:
-        return
-    rx_pat, rx_keys = rx
-    if not rx_keys or len(set(rx_keys)) != len(rx_keys):
-        return
-
-    loop = d.dissect_safe(msg)
-    m = re.match(rx_pat, msg) if msg else None
-    if loop is None:
-        assert m is None, (pat, msg)
-    else:
-        assert m is not None, (pat, msg)
-        for k, v in zip(rx_keys, m.groups()):
-            assert loop.get(k) == v, (pat, msg, k)
+def test_fast_path_equals_find_loop(spark, pat, msg):
+    d = _dissector(pat)
+    if d is not None:
+        assert_catalyst_matches(spark, d, [msg])
 
 
 @settings(max_examples=100, deadline=None)
 @given(pat=patterns(), msgs=st.lists(_msg, min_size=1, max_size=5))
-def test_fast_path_pandas_batch(pat, msgs):
-    """The pandas .str.extract batch form agrees with per-row
+def test_fast_path_pandas_batch(spark, pat, msgs):
+    """The Catalyst form over a batch of messages agrees with per-row
     dissect_safe."""
-    try:
-        d = Dissector(pat)
-    except Exception:
-        return
-    rx = d.to_regex()
-    if rx is None:
-        return
-    rx_pat, rx_keys = rx
-    if not rx_keys or len(set(rx_keys)) != len(rx_keys):
-        return
-    ext = pd.Series(msgs, dtype="object").str.extract(rx_pat)
-    ext.columns = rx_keys
-    for i, msg in enumerate(msgs):
-        loop = d.dissect_safe(msg)
-        if loop is None:
-            assert pd.isna(ext.iloc[i][rx_keys[0]]), (pat, msg)
-        else:
-            for k in rx_keys:
-                assert ext.iloc[i][k] == loop.get(k), (pat, msg, k)
+    d = _dissector(pat)
+    if d is not None:
+        assert_catalyst_matches(spark, d, msgs)

@@ -11,6 +11,7 @@ import os
 import pytest
 
 from beats_spark.dissect.tokenizer import Dissector, DissectError
+from dissect_reference import catalyst_keys, typed_reference
 
 CORPUS = ("/root/reference/libbeat/processors/dissect/testdata/"
           "dissect_tests.json")
@@ -40,26 +41,17 @@ def test_reference_corpus_case(case):
 
 
 @pytest.mark.skipif(not CASES, reason="reference corpus not mounted")
-def test_reference_corpus_fast_path_agrees():
-    """Where the regex fast path applies, it must match the corpus
-    ground truth too."""
-    import pandas as pd
+def test_reference_corpus_fast_path_agrees(spark):
+    """The Catalyst dissect must match the corpus ground truth too, on
+    every case."""
     checked = 0
     for case in CASES:
         d = Dissector(case["tok"])
-        rx = d.to_regex()
-        if rx is None:
-            continue
-        pat, keys = rx
-        if len(set(keys)) != len(keys):
-            continue
-        ext = pd.Series([case["msg"]]).str.extract(pat)
-        ext.columns = keys
-        if case["expected"] is None:
-            assert pd.isna(ext.iloc[0][keys[0]]), case["name"]
-        else:
-            for k in keys:
-                assert ext.iloc[0][k] == case["expected"].get(k), \
-                    (case["name"], k)
+        [got] = catalyst_keys(spark, d, [case["msg"]])
+        want = case["expected"]
+        if want is not None:
+            want = {k: typed_reference(d.data_types.get(k), want.get(k))
+                    for k in d.keys}
+        assert got == want, case["name"]
         checked += 1
-    assert checked >= 5  # the corpus exercises the fast path too
+    assert checked >= 5

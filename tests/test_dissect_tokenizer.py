@@ -4,7 +4,8 @@ Mirrors the reference's table-driven tests
 (``libbeat/processors/dissect/dissect_test.go``) and, when the read-only
 reference checkout is present, replays its JSON corpus
 (``libbeat/processors/dissect/testdata/dissect_tests.json``) for
-byte-identical parity. No Spark needed here.
+byte-identical parity. Only ``TestRegexFastPath`` starts Spark: it holds
+the Catalyst form of the tokenizer to the find() loop.
 """
 
 import json
@@ -18,6 +19,7 @@ from beats_spark.dissect.tokenizer import (
     TokenizerError,
     convert_value,
 )
+from dissect_reference import assert_catalyst_matches
 
 REF_CORPUS = "/root/reference/libbeat/processors/dissect/testdata/dissect_tests.json"
 
@@ -184,7 +186,8 @@ def test_reference_corpus_parity():
 
 
 class TestRegexFastPath:
-    """Dissector.to_regex must agree byte-for-byte with the find() loop."""
+    """The Catalyst dissect (``dissect_columns``) must agree
+    byte-for-byte with the find() loop."""
 
     CASES = [
         ('ts=%{ts} level=%{level} host=%{host} bytes=%{b|long} msg="%{m}"',
@@ -196,28 +199,14 @@ class TestRegexFastPath:
         ("pre: %{x}", ["pre: tail here", "nope", "pre: ", "pre:"]),
     ]
 
-    def test_equivalence(self):
-        import re as _re
-        import pandas as pd
-        from beats_spark.dissect.tokenizer import Dissector
+    def test_equivalence(self, spark):
         for pat, samples in self.CASES:
-            d = Dissector(pat)
-            rx = d.to_regex()
-            assert rx is not None, pat
-            rx_pat, rx_keys = rx
-            ext = pd.Series(samples, dtype="object").str.extract(rx_pat)
-            ext.columns = rx_keys
-            for i, s in enumerate(samples):
-                kv = d.dissect_safe(s)
-                if kv is None:
-                    assert pd.isna(ext.iloc[i][rx_keys[0]]), (pat, s)
-                else:
-                    for k in rx_keys:
-                        got = ext.iloc[i][k]
-                        assert got == kv.get(k), (pat, s, k, got, kv)
+            assert_catalyst_matches(spark, Dissector(pat), samples)
 
-    def test_unsupported_patterns_fall_back(self):
-        from beats_spark.dissect.tokenizer import Dissector
+    def test_unsupported_patterns_fall_back(self, spark):
+        """Greedy, fixed-length, append, indirect and named-skip
+        tokenizers run the same Catalyst form."""
+        samples = [None, "", "x y", "x   y", "abcdef", "k v", "x", "a  b c"]
         for pat in ("%{a->} %{b}", "%{a#3}%{b}", "%{+a} %{+a}",
                     "%{*ref} %{&ref}", "%{?skip} %{b}"):
-            assert Dissector(pat).to_regex() is None, pat
+            assert_catalyst_matches(spark, Dissector(pat), samples)

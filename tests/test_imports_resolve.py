@@ -172,11 +172,15 @@ def _top_level(stmts):
 def _import_closure(dotted):
     """The package modules ``import <dotted>`` loads, found statically:
     module-level imports followed transitively, each with its parent
-    packages. Function-level imports run later, or never, so they are
-    not followed."""
+    packages, and the top-level name of every other module they import.
+    Function-level imports run later, or never, so they are not
+    followed."""
     seen, todo = set(), [dotted.split(".")]
     while todo:
         target = todo.pop()
+        if target[0] not in PACKAGES:
+            seen.add(target[0])
+            continue
         for i in range(1, len(target) + 1):
             parts = target[:i]
             path = _module_file(parts)
@@ -196,7 +200,7 @@ def _import_closure(dotted):
                                    else [])
                     # an imported name may be a submodule
                     todo += [base] + [base + [a.name] for a in node.names]
-    return {m for m in seen if m.split(".")[0] in PACKAGES}
+    return seen
 
 
 def test_pipeline_never_loads_the_processor_registry():
@@ -208,3 +212,13 @@ def test_pipeline_never_loads_the_processor_registry():
     assert "beats_spark.lookup" in closure
     assert sorted(m for m in closure
                   if m.split(".")[:2] == ["beats_spark", "processors"]) == []
+
+
+def test_dissect_and_pipeline_import_no_pandas():
+    """Every dissect runs as Catalyst expressions, so neither the
+    dissect module nor the pipeline that imports it loads pandas: a
+    pandas UDF path cannot come back unnoticed."""
+    assert "pandas" in _import_closure("beats_spark.processors")
+    for module in ("beats_spark.dissect.spark", "beats_spark.pipeline"):
+        closure = _import_closure(module)
+        assert "pyspark" in closure and "pandas" not in closure, module
