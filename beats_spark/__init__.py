@@ -9,10 +9,12 @@ Reference semantics are cited per-module as ``file:line`` paths inside
 port: the reference is a per-event interpreted Go chain; here every
 operator is a ``DataFrame -> DataFrame`` transform built from
 ``pyspark.sql.functions`` columns. The shipped pipeline's parse is
-Catalyst expressions too (multiline as a regex split, dissect as one
-regex), so its plan has no Python node; vectorized pandas UDFs remain
-only in the ``dissect`` processor and the multiline parser, for the
-forms a regex does not cover. Lookup frames held in the driver are
+Catalyst expressions too (multiline as a regex split, dissect as the
+tokenizer's find loop in string functions), so its plan has no Python
+node; the ``dissect`` processor and a config's multiline parser run
+the same way, and of the parse functions only
+``functions.multiline.multiline_join_col``, which three catalog
+queries use, is still a vectorized pandas UDF. Lookup frames held in the driver are
 local relations (``lookup.local_frame``), read with no Python worker.
 """
 

@@ -13,11 +13,16 @@ The fallback reproduces the Iceberg mechanics the pipeline depends on:
   write itself; the recorded schema lets every read skip parquet schema
   inference (a Spark job per read). Manifest lines written before the
   schema field existed have none, and reads that touch them infer.
-- **incremental reads**: ``read_incremental(processed_ids)`` returns
-  only unprocessed snapshots — what Iceberg incremental scan /
-  ``VERSION AS OF`` increments give, and exactly the primitive the
-  north_rule's "resume without reprocessing, checkpointed per
-  snapshot" needs (consumed by ``beats_spark.checkpoint.Watermarks``).
+- **incremental reads**: ``pending(processed_ids)`` lists the
+  unprocessed snapshots from the manifest alone and
+  ``read_snapshots(ids)`` reads exactly those, as one frame — what
+  Iceberg incremental scan / ``VERSION AS OF`` increments give, and the
+  primitive the north_rule's "resume without reprocessing,
+  checkpointed per snapshot" needs: the incremental pipeline drains
+  what ``pending`` lists, minus the snapshots
+  ``beats_spark.checkpoint.Watermarks`` has recorded, and
+  ``snapshot_of`` tells it each row's snapshot from its file.
+  ``read_incremental`` combines the two reads.
 - **time travel**: ``read(as_of=snapshot_id)`` reads table state as of
   a snapshot (append-only union up to it; overwrite resets the chain).
 
@@ -42,7 +47,8 @@ import uuid
 from dataclasses import dataclass
 from typing import List, Optional, Sequence, Set, Tuple
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import (Column, DataFrame, Observation, SparkSession,
+                         functions as F)
 from pyspark.sql.types import StructType
 
 
@@ -219,6 +225,15 @@ class Table:
         """Rows of exactly these snapshots."""
         by_id = {s.snapshot_id: s for s in self.snapshots()}
         return self._read(spark, [by_id[i] for i in snapshot_ids])
+
+    @staticmethod
+    def snapshot_of(path: Column) -> Column:
+        """The id of the snapshot that holds the data file at ``path``
+        (a file URI, as ``input_file_name()`` gives it): the name of
+        the last ``snap-<id>`` directory on the path, below which only
+        ``column=value`` partition directories follow."""
+        return F.substring_index(F.substring_index(path, "/snap-", -1),
+                                 "/", 1)
 
     def read_incremental(
         self, spark: SparkSession, processed: Set[str],

@@ -49,6 +49,32 @@ _INFINITIES = ("inf", "+inf", "-inf", "infinity", "+infinity", "-infinity")
 _TRIMS = {"left": F.ltrim, "right": F.rtrim, "all": F.trim, "both": F.trim}
 
 
+def _ip_pattern() -> str:
+    """The addresses ``ipaddress.ip_address`` accepts, as a Java regex:
+    an IPv4 address of four decimal octets with no leading zero, or an
+    IPv6 address of eight hextets, or of at most seven around one
+    ``::``, where an IPv4 tail counts as two hextets; IPv6 may end in a
+    non-empty ``%scope`` (``IPv6Address._split_scope_id``)."""
+    octet = "(?:25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9][0-9]|[0-9])"
+    v4 = rf"{octet}(?:\.{octet}){{3}}"
+    h = "[0-9a-fA-F]{1,4}"
+
+    def tail(n: int) -> str:
+        """At most ``n`` hextets, an IPv4 tail counting two."""
+        forms = [rf"{h}(?::{h}){{0,{n - 1}}}"] if n else []
+        forms += [rf"(?:{h}:){{0,{n - 2}}}{v4}"] if n >= 2 else []
+        return f"(?:{'|'.join(forms)})?" if forms else ""
+
+    v6 = [rf"(?:{h}:){{6}}(?:{h}:{h}|{v4})"]
+    v6 += [(rf"{h}(?::{h}){{{k - 1}}}" if k else "") + "::" + tail(7 - k)
+           for k in range(8)]
+    # \z, not $: Java's $ also matches before a final line break
+    return rf"^(?:{v4}|(?:{'|'.join(v6)})(?:%[^%/]+)?)\z"
+
+
+_IP = _ip_pattern()
+
+
 def cast_for(data_type: str, col: Column) -> Column:
     """Catalyst cast matching dissect's |type conversion
     (``dissect/dissect.go:249-285``, ``tokenizer.convert_value``):
@@ -87,11 +113,7 @@ def cast_for(data_type: str, col: Column) -> Column:
             v.isin("0", "f", "F", "FALSE", "false", "False"), F.lit(False)
         ).otherwise(F.lit(None).cast("boolean"))
     if data_type == "ip":
-        return F.when(
-            v.rlike(r"^((25[0-5]|2[0-4]\d|1?\d?\d)\.){3}(25[0-5]|2[0-4]\d|1?\d?\d)$")
-            | v.contains(":"),
-            v,
-        ).otherwise(F.lit(None).cast("string"))
+        return F.when(v.rlike(_IP), v)
     return v.try_cast(_SPARK_TYPES.get(data_type, T.StringType()))
 
 

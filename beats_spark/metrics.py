@@ -8,8 +8,10 @@ per pipeline client (``libbeat/publisher/pipeline/monitoring.go:87-113``,
 Here counters ride the single write action via ``DataFrame.observe`` —
 zero extra scans at any scale. Per-sink acked counts are conditional
 sums over the routed ``sink`` column. These are the only counter names:
-batch runs, snapshot runs and streaming micro-batches all record them
-through ``beats_spark.pipeline.commit``.
+batch runs, snapshot sets and streaming micro-batches all record them
+through ``beats_spark.pipeline.commit``. A set of several snapshots
+observes each counter once per snapshot, over the ``SNAPSHOT`` column,
+so every snapshot gets its exact counters from the one write.
 
 The run's counter and lineage rows are a few dozen values the driver
 already holds, so the driver writes them itself: one parquet file per
@@ -25,7 +27,7 @@ from __future__ import annotations
 import functools
 import os
 import unicodedata
-from typing import List, Tuple
+from typing import Dict, List, Optional, Sequence, Tuple
 from urllib.parse import quote, unquote
 
 import pyarrow as pa
@@ -33,40 +35,73 @@ import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import Observation
 
-__all__ = ["attach_observation", "metrics_rows", "write_metrics",
-           "write_lineage"]
+__all__ = ["SNAPSHOT", "attach_observation", "metrics_rows",
+           "snapshot_metrics", "write_metrics", "write_lineage"]
+
+# the routed frame's column naming each row's snapshot, in a drain of
+# several snapshots; observed, never written
+SNAPSHOT = "__snapshot"
 
 
-def attach_observation(df: DataFrame, sinks: List[str]
+def attach_observation(df: DataFrame, sinks: List[str],
+                       snapshots: Sequence[str] = ()
                        ) -> Tuple[DataFrame, Observation]:
     """Attach Beats-named counters to the routed frame; read them after
-    the write action completes."""
+    the write action completes. With ``snapshots``, each counter is
+    observed once per snapshot, over the rows whose ``SNAPSHOT`` column
+    holds its id, and named ``<snapshot id>/<counter>``
+    (``snapshot_metrics`` reads them)."""
     obs = Observation("pipeline")
-    return df.observe(obs, *_counters(tuple(sinks),
-                                      "log_flags" in df.columns)), obs
+    key = (tuple(sinks), "log_flags" in df.columns)
+    if not snapshots:
+        return df.observe(obs, *_counters(*key)), obs
+    # built per call: a drain's snapshot ids are new every time
+    conditions = {"events.total": F.lit(True), **_conditions(*key)}
+    return df.observe(obs, *(
+        F.sum(F.when((F.col(SNAPSHOT) == sid) & c, 1).otherwise(0))
+        .alias(f"{sid}/{name}")
+        for sid in snapshots for name, c in conditions.items())), obs
+
+
+@functools.cache
+def _conditions(sinks: Tuple[str, ...], has_flags: bool) -> Dict[str, Column]:
+    """The row condition each counter after ``events.total`` counts,
+    built once per sink list."""
+    flags = (F.col("log_flags") if has_flags
+             else F.array().cast("array<string>"))
+    return {"events.failed": F.array_contains(flags, "dissect_parsing_error"),
+            **{f"output.{s}.events.acked": F.col("sink") == s
+               for s in sinks}}
 
 
 @functools.cache
 def _counters(sinks: Tuple[str, ...], has_flags: bool) -> Tuple[Column, ...]:
-    """The observed counter expressions, built once per sink list."""
-    flags = (F.col("log_flags") if has_flags
-             else F.array().cast("array<string>"))
-    return (
-        F.count(F.lit(1)).alias("events.total"),
-        F.sum(F.when(F.array_contains(flags, "dissect_parsing_error"), 1)
-               .otherwise(0))
-         .alias("events.failed"),
-        *(F.sum(F.when(F.col("sink") == s, 1).otherwise(0))
-           .alias(f"output.{s}.events.acked") for s in sinks))
+    """The frame's observed counter expressions, built once per sink
+    list."""
+    return (F.count(F.lit(1)).alias("events.total"),
+            *(F.sum(F.when(c, 1).otherwise(0)).alias(name)
+              for name, c in _conditions(sinks, has_flags).items()))
 
 
-def metrics_rows(obs: Observation) -> List[Tuple[str, int]]:
-    got = dict(obs.get)
+def _counts(got: Dict[str, Optional[int]]) -> Dict[str, int]:
     # events.published = total - dropped-by-filter happens upstream;
     # within the routed frame everything observed was published to a sink
     got["events.published"] = got.get("events.total", 0)
     # sum() over zero rows observes null — an empty input is 0 events
-    return sorted((k, int(v or 0)) for k, v in got.items())
+    return {k: int(v or 0) for k, v in sorted(got.items())}
+
+
+def metrics_rows(obs: Observation) -> List[Tuple[str, int]]:
+    return list(_counts(dict(obs.get)).items())
+
+
+def snapshot_metrics(obs: Observation, snapshots: Sequence[str]
+                     ) -> List[Dict[str, int]]:
+    """Each snapshot's counters, in ``snapshots`` order, from an
+    observation ``attach_observation`` made per snapshot."""
+    got = obs.get
+    return [_counts({k[len(sid) + 1:]: v for k, v in got.items()
+                     if k.startswith(sid + "/")}) for sid in snapshots]
 
 
 def write_metrics(spark: SparkSession, rows: List[Tuple[str, int]],

@@ -31,10 +31,13 @@ Stage → reference mapping:
    written in a single action with counters observed on it (vs. the
    reference's queue + per-output workers; Spark's shuffle-free dynamic
    partition write is the batch analog). That write is the only Spark
-   job: the driver writes the counters and the lineage (from the
-   committed files' parquet footers), and a batch run its watermark.
-   Batch runs, snapshot runs and streaming micro-batches all commit
-   through it, as every Beats input publishes through one output path.
+   job: the driver writes the counters, the lineage (from the committed
+   files' parquet footers) and a batch run's watermarks. Batch runs,
+   snapshot sets and streaming micro-batches all commit through it, as
+   every Beats input publishes through one output path; an incremental
+   drain commits its pending snapshots as one set, with each snapshot's
+   counters observed on the one write and acked on their own, as
+   ``input-logfile/publish.go:29-119`` acks each input.
 
 The expressions after the scan are built once — the parse and route
 stages once per process here, each enrich step once per lookup frame
@@ -53,7 +56,7 @@ from __future__ import annotations
 import functools
 import os
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional, Tuple
+from typing import Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType
@@ -62,8 +65,8 @@ from .checkpoint import Watermarks, new_run_id, snapshot_id_of
 from .dissect.spark import FLAG_PARSING_ERROR, dissect_columns
 from .dissect.tokenizer import Dissector
 from .lookup import FOLD_MAX_ROWS, enrich_columns
-from .metrics import (attach_observation, metrics_rows, write_lineage,
-                      write_metrics)
+from .metrics import (SNAPSHOT, attach_observation, metrics_rows,
+                      snapshot_metrics, write_lineage, write_metrics)
 from .routing import compile_selector
 
 __all__ = ["build_events", "build_routed", "commit", "run_pipeline", "SINKS",
@@ -167,8 +170,15 @@ def build_routed(pages: DataFrame, host_meta: DataFrame,
     literals in the plan; later plans reuse them without a Spark job. A
     larger lookup is a broadcast join between the selects. A caller who
     wants fresh lookup data passes a new frame."""
-    events = build_events(pages)
-    columns = _parse_stage()[2]
+    return _enrich_and_route(build_events(pages), _parse_stage()[2],
+                             host_meta, lang_meta)
+
+
+def _enrich_and_route(events: DataFrame, columns: Tuple[str, ...],
+                      host_meta: DataFrame, lang_meta: DataFrame
+                      ) -> DataFrame:
+    """The enrich and route stages over parsed ``events`` of
+    ``columns``."""
     for lookup, (on, fields, tag) in zip((host_meta, lang_meta), _LOOKUPS):
         # the parsed host and lang columns are strings
         events, columns = enrich_columns(events, columns, StringType(),
@@ -184,34 +194,84 @@ class PipelineRun:
     metrics: Dict[str, int] = field(default_factory=dict)
     skipped: bool = False
     snapshot_id: Optional[str] = None
-    # per_snapshot incremental mode: one PipelineRun per snapshot
+    # a snapshot set's or a drain's runs, one per snapshot
     sub_runs: Optional[list] = None
 
 
 def commit(routed: DataFrame, routed_path: str, out_dir: str, run_id: str,
-           lineage: bool = True) -> Dict[str, int]:
-    """Land a routed frame and return its counters: the one sink-commit
-    routine of batch runs, snapshot runs and streaming micro-batches.
+           lineage: bool = True, snapshots: Sequence[str] = ()
+           ) -> Dict[str, Dict[str, int]]:
+    """Land a routed frame and return its counters by run id: the one
+    sink-commit routine of batch runs, snapshot sets and streaming
+    micro-batches.
 
     One ``partitionBy(sink)`` overwrite of ``routed_path`` (rewriting
     the same path replaces it) with the counters observed on it; then
-    the driver writes them to ``out_dir/metrics/part-<run_id>.parquet``
+    the driver writes them to ``out_dir/metrics/part-<run id>.parquet``
     and, with ``lineage``, the committed files' row counts to
     ``out_dir/lineage/part-<run_id>.parquet``. The write is the only
     Spark job, and rerunning a ``run_id`` leaves one copy of each.
+
+    The counters are the frame's, under ``run_id``; with ``snapshots``,
+    each snapshot's, under ``<run_id>-<snapshot id>``, over the rows
+    whose ``SNAPSHOT`` column (observed, not written) holds its id.
 
     ``output.<sink>.events.acked`` covers the four ``SINKS``. Rows a
     ``sink_hint`` routes elsewhere are written, appear in lineage and
     in ``events.total``, but have no acked counter.
     """
-    routed, obs = attach_observation(routed, SINKS)
+    routed, obs = attach_observation(routed, SINKS, snapshots)
+    if snapshots:
+        routed = routed.drop(SNAPSHOT)
     routed.write.mode("overwrite").partitionBy("sink").parquet(routed_path)
-    rows = metrics_rows(obs)
-    write_metrics(routed.sparkSession, rows, os.path.join(out_dir, "metrics"),
-                  run_id)
+    if snapshots:
+        counts = {f"{run_id}-{sid}": m for sid, m in
+                  zip(snapshots, snapshot_metrics(obs, snapshots))}
+    else:
+        counts = {run_id: dict(metrics_rows(obs))}
+    for rid, m in counts.items():
+        write_metrics(routed.sparkSession, sorted(m.items()),
+                      os.path.join(out_dir, "metrics"), rid)
     if lineage:
         write_lineage(routed_path, os.path.join(out_dir, "lineage"), run_id)
-    return dict(rows)
+    return counts
+
+
+def _run_set(pages: DataFrame, snapshot_ids: List[str], table,
+             host_meta: DataFrame, lang_meta: DataFrame, out_dir: str,
+             run_id: str, lineage: bool = True) -> PipelineRun:
+    """Commit the snapshot set ``snapshot_ids``, whose rows ``pages``
+    holds, in one routed write to ``out_dir/runs/<run_id>/routed``, then
+    record each snapshot's watermark with its own counters.
+
+    A set of one is a batch run, its snapshot a literal. In a larger set
+    a row's snapshot comes from the file it was read from
+    (``table.snapshot_of``). Returns the run of a set of one; else the
+    set's run, with summed counters and its snapshots' runs in
+    ``sub_runs``."""
+    events, columns = build_events(pages), _parse_stage()[2]
+    tagged = snapshot_ids if len(snapshot_ids) > 1 else []
+    if tagged:
+        # tagged before the enrich: input_file_name() takes one file
+        # source below it, and a broadcast join with a lookup read from
+        # files would add a second
+        events = events.select("*", table.snapshot_of(
+            F.input_file_name()).alias(SNAPSHOT))
+        columns += (SNAPSHOT,)
+    counts = commit(_enrich_and_route(events, columns, host_meta, lang_meta),
+                    os.path.join(out_dir, "runs", run_id, "routed"), out_dir,
+                    run_id, lineage=lineage, snapshots=tagged)
+    wm = Watermarks(out_dir)
+    runs = []
+    for sid, (rid, metrics) in zip(snapshot_ids, counts.items()):
+        wm.record(sid, rid, metrics["events.total"])
+        runs.append(PipelineRun(run_id=rid, out_dir=out_dir, metrics=metrics,
+                                snapshot_id=sid))
+    if not tagged:
+        return runs[0]
+    return PipelineRun(run_id=run_id, out_dir=out_dir, sub_runs=runs,
+                       metrics={k: sum(r.metrics[k] for r in runs)
+                                for k in runs[0].metrics})
 
 
 def run_pipeline(
@@ -225,7 +285,9 @@ def run_pipeline(
     resume: bool = True,
     lineage: bool = True,
 ) -> PipelineRun:
-    """Execute end-to-end with watermark resume and lineage.
+    """Execute end-to-end with watermark resume and lineage: ``pages``
+    is a snapshot set of one, ``snapshot_id`` (by default a content id
+    of its files).
 
     Output layout::
 
@@ -243,20 +305,12 @@ def run_pipeline(
             snapshot_id = snapshot_id_of(pages)
         except Exception:
             snapshot_id = "adhoc-" + run_id
-
-    wm = Watermarks(out_dir)
-    result = PipelineRun(run_id=run_id, out_dir=out_dir,
-                         snapshot_id=snapshot_id)
-    if resume and snapshot_id and wm.is_processed(snapshot_id):
-        result.skipped = True
-        return result
-
-    result.metrics = commit(
-        build_routed(pages, host_meta, lang_meta),
-        os.path.join(out_dir, "runs", run_id, "routed"), out_dir, run_id,
-        lineage=lineage)
-    wm.record(snapshot_id, run_id, result.metrics.get("events.total", 0))
-    return result
+    if resume and snapshot_id and Watermarks(out_dir).is_processed(
+            snapshot_id):
+        return PipelineRun(run_id=run_id, out_dir=out_dir,
+                           snapshot_id=snapshot_id, skipped=True)
+    return _run_set(pages, [snapshot_id], None, host_meta, lang_meta,
+                    out_dir, run_id, lineage)
 
 
 def run_pipeline_incremental(
@@ -271,41 +325,20 @@ def run_pipeline_incremental(
     not yet watermarked (the north_rule's "checkpointed per Iceberg
     snapshot, resumes without reprocessing").
 
-    Default mode (``per_snapshot=False``): all unprocessed snapshots
-    are read and written as ONE combined run; their watermarks are all
-    recorded after that single routed write, so a crash mid-run
-    re-processes the whole unacked batch (output lands under a fresh
-    idempotent run prefix — no duplicate rows, coarser-than-per-snapshot
-    crash granularity). The combined ``events.total`` is recorded
-    against the FIRST snapshot id; trailing ids ack with count 0 so
-    per-snapshot counts are never inflated.
-
-    ``per_snapshot=True``: each unprocessed snapshot becomes its OWN
-    run + watermark, acked individually right after its routed write —
-    true per-snapshot crash granularity (a crash loses at most the one
-    in-flight snapshot) and accurate per-snapshot event counts, at the
-    cost of one write job per snapshot. Returns the last run, with the
-    per-run list in ``.sub_runs``."""
-    wm = Watermarks(out_dir)
-    todo_ids = pages_table.pending(set(wm.processed_snapshots()))
-    if not todo_ids:
+    The pending snapshots are committed as one snapshot set
+    (``_run_set``), or with ``per_snapshot`` as sets of one: a Spark
+    job per set, and a crash re-processes only the set in flight, under
+    a fresh run prefix. Returns the last set's run, with every
+    snapshot's run, oldest first, in ``sub_runs``; a snapshot of a
+    larger set has run id ``<set run_id>-<snapshot id>``, and its rows
+    are in the set's ``runs/<set run_id>/routed``."""
+    todo = pages_table.pending(set(Watermarks(out_dir).processed_snapshots()))
+    if not todo:
         return PipelineRun(run_id=new_run_id(), out_dir=out_dir, skipped=True)
-
-    if per_snapshot:
-        runs = []
-        for sid in todo_ids:
-            runs.append(run_pipeline(
-                spark, pages_table.read_snapshots(spark, [sid]), host_meta,
-                lang_meta, out_dir, snapshot_id=sid, resume=False))
-        result = runs[-1]
-        result.sub_runs = runs
-        return result
-
-    result = run_pipeline(
-        spark, pages_table.read_snapshots(spark, todo_ids), host_meta,
-        lang_meta, out_dir, snapshot_id=todo_ids[0], resume=False)
-    for sid in todo_ids[1:]:
-        # count 0: the combined batch total is already recorded against
-        # todo_ids[0]; repeating it per snapshot would inflate sums
-        wm.record(sid, f"{result.run_id}-{sid[:6]}", 0)
+    size = 1 if per_snapshot else len(todo)
+    sets = [_run_set(pages_table.read_snapshots(spark, ids), ids, pages_table,
+                     host_meta, lang_meta, out_dir, new_run_id())
+            for ids in (todo[i:i + size] for i in range(0, len(todo), size))]
+    result = sets[-1]
+    result.sub_runs = [r for s in sets for r in s.sub_runs or [s]]
     return result

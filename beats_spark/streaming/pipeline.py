@@ -17,7 +17,7 @@ The reference's streaming semantics map as:
 
 The same parse → enrich → route expression pipeline from
 ``beats_spark.pipeline`` is reused verbatim — the JVM-only parse
-(regex split + posexplode + regexp_extract), lookups folded into the
+(regex split + posexplode + the dissect find loop), lookups folded into the
 plan (or broadcast joins for large ones) and the when-chain router are
 all streaming-safe, and no micro-batch runs a Python worker — and each
 micro-batch lands through the batch run's ``commit``: one routed write

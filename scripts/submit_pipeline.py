@@ -12,8 +12,9 @@ Usage (the north_rule shipping shape)::
 
 With ``--incremental`` the pages dir is treated as a
 ``beats_spark.catalog`` table and only unprocessed snapshots run
-(watermarked resume); otherwise the whole directory is one batch with
-whole-input snapshot resume.
+(watermarked resume), as one snapshot set: one routed write, with each
+snapshot's counters under ``snapshots`` in the printed JSON; otherwise
+the whole directory is one batch with whole-input snapshot resume.
 
 Lookup tables: ``--host-meta`` / ``--lang-meta`` parquet paths; when
 omitted, deterministic demo lookups are derived from the input (so the
@@ -86,6 +87,8 @@ def main() -> int:
     print(json.dumps({
         "run_id": result.run_id, "skipped": result.skipped,
         "snapshot_id": result.snapshot_id, "metrics": result.metrics,
+        "snapshots": {r.snapshot_id: r.metrics
+                      for r in result.sub_runs or []},
     }))
     return 0
 

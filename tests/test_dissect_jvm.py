@@ -163,6 +163,51 @@ def test_typed_conversion_follows_the_reference(spark):
     assert convert_value("double", "1.5f") == "1.5f"
 
 
+IP_KEPT = ["::", "::ffff:1.2.3.4", "fe80::1%eth0", "1:2:3:4:5:6:7::",
+           "::2:3:4:5:6:7:8", "1:2:3:4:5:6:1.2.3.4", "0.0.0.0",
+           "10.0.0.1  "]
+IP_REJECTED = [":x", "01.2.3.4", "1::2::3", "256.1.1.1", ":::", "::1%",
+               "::1%a%b", "fe80::1%a/b", "1.2.3.4%eth0", "1.2.3.4\n",
+               "1::2:3:4:5:6:7:8", "1:2:3:4:5:6:7:1.2.3.4", "1.2.3"]
+
+
+def _ip_candidates(n=3000, seed=7):
+    """Strings near the address grammar: colon-joined hextets, octets
+    (some with a leading zero), empty parts and scope suffixes."""
+    import random
+    rng = random.Random(seed)
+    parts = ["", "0", "1", "ff", "FFFF", "12345", "g", "1.2.3.4",
+             "01.2.3.4", "255.255.255.255", "256.0.0.1"]
+    out = []
+    for _ in range(n):
+        s = ":".join(rng.choice(parts) for _ in range(rng.randint(1, 10)))
+        if rng.random() < 0.2:
+            s += "%" + rng.choice(["eth0", "", "a%b", "x:y", "a/b"])
+        out.append(s)
+    return out
+
+
+def test_ip_conversion_follows_the_reference(spark):
+    """``cast_for("ip")`` keeps exactly the addresses
+    ``ipaddress.ip_address`` accepts: no leading-zero octet, one ``::``
+    at most, eight hextets at most, an IPv6 scope only."""
+    values = IP_KEPT + IP_REJECTED + _ip_candidates()
+    df = local_frame(spark, [(v,) for v in values], "v string")
+    got = [r.c for r in df.select(cast_for("ip", F.col("v")).alias("c"))
+           .collect()]
+    want = [typed_reference("ip", v) for v in values]
+    assert [v.rstrip(" ") for v in IP_KEPT] == want[:len(IP_KEPT)]
+    assert want[len(IP_KEPT):len(IP_KEPT) + len(IP_REJECTED)] == \
+        [None] * len(IP_REJECTED)
+    assert [convert_value("ip", v) for v in IP_REJECTED] == IP_REJECTED
+    mismatched = [(v, g, w) for v, g, w in zip(values, got, want) if g != w]
+    assert not mismatched, mismatched[:10]
+    # and through a dissect of an |ip key
+    d = Dissector("%{addr|ip}|")
+    msgs = [v + "|" for v in IP_KEPT + IP_REJECTED if "|" not in v]
+    assert_catalyst_matches(spark, d, msgs)
+
+
 def _expression_classes(df):
     """The class names of every expression in ``df``'s executed plan."""
     classes = set()
