@@ -14,7 +14,8 @@ The fallback reproduces the Iceberg mechanics the pipeline depends on:
   inference (a Spark job per read). Manifest lines written before the
   schema field existed have none, and reads that touch them infer.
 - **incremental reads**: ``pending(processed_ids)`` lists the
-  unprocessed snapshots from the manifest alone and
+  unprocessed snapshots that added rows (a compaction or delete adds
+  none) from the manifest alone and
   ``read_snapshots(ids)`` reads exactly those, as one frame — what
   Iceberg incremental scan / ``VERSION AS OF`` increments give, and the
   primitive the north_rule's "resume without reprocessing,
@@ -65,6 +66,8 @@ class Snapshot:
 # operations whose snapshot materializes the FULL table state, so the
 # live chain restarts at them
 _RESET_OPS = {"overwrite", "compact", "delete"}
+# operations whose snapshot adds rows to the table
+_ROW_OPS = {"append", "overwrite"}
 
 
 class Table:
@@ -191,8 +194,9 @@ class Table:
         current live chain (Iceberg's ``expire_snapshots``) — the
         reclaim step after compaction/overwrite/delete. The manifest
         rows are kept as the audit trail, but time travel to an
-        expired snapshot now raises (its data is gone). Returns the
-        expired snapshot ids."""
+        expired snapshot now raises (its data is gone), and so does a
+        drain of an append that was still pending (:meth:`pending`):
+        drain before expiring. Returns the expired snapshot ids."""
         import shutil
         live = {s.snapshot_id for s in self._live_chain()}
         expired: List[str] = []
@@ -215,10 +219,21 @@ class Table:
         return self._read(spark, chain)
 
     def pending(self, processed: Set[str]) -> List[str]:
-        """Ids of the live snapshots not in ``processed``, oldest first:
-        what a resume still has to process. Reads only the manifest."""
-        return [s.snapshot_id for s in self._live_chain()
-                if s.snapshot_id not in processed]
+        """Ids of the snapshots that added rows (append, overwrite) since
+        the last overwrite and are not in ``processed``, oldest first:
+        what a resume still has to process. Reads only the manifest.
+
+        A compact or delete snapshot rewrites rows already in the table
+        and adds none, so it is never pending; an append it absorbed is
+        still pending until processed, and reads from its own directory
+        (so until :meth:`expire_snapshots` removes it)."""
+        todo: List[str] = []
+        for s in self.snapshots():
+            if s.operation == "overwrite":
+                todo = []
+            if s.operation in _ROW_OPS:
+                todo.append(s.snapshot_id)
+        return [i for i in todo if i not in processed]
 
     def read_snapshots(self, spark: SparkSession,
                        snapshot_ids: Sequence[str]) -> DataFrame:

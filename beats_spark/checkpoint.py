@@ -15,13 +15,14 @@ the reference's ACK-then-persist ordering
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
 import uuid
 from typing import List, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame
 
 __all__ = ["Watermarks", "new_run_id"]
 
@@ -64,10 +65,12 @@ class Watermarks:
         os.replace(tmp, final)  # the atomic "ACK"
 
 
-def snapshot_id_of(df: DataFrame) -> str:
+def snapshot_id_of(df: DataFrame) -> Optional[str]:
     """Content-addressed id for a parquet-backed input: the sorted file
     list (the moral equivalent of an Iceberg snapshot id: same files ⇒
-    same snapshot)."""
+    same snapshot). None for a frame without input files (an in-memory
+    frame): it has no identity to resume by."""
     files = sorted(df.inputFiles())
-    import hashlib
+    if not files:
+        return None
     return hashlib.sha256("\n".join(files).encode()).hexdigest()[:16]

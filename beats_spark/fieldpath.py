@@ -12,15 +12,9 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
-__all__ = ["get_field", "has_field", "field_type"]
-
-
-def get_field(df: DataFrame, path: str) -> Column:
-    """Column for a dot-path; works for top-level and nested struct fields."""
-    return F.col(path)
+__all__ = ["field_type"]
 
 
 def field_type(schema: T.StructType, path: str) -> Optional[T.DataType]:
@@ -33,10 +27,3 @@ def field_type(schema: T.StructType, path: str) -> Optional[T.DataType]:
         cur = cur[p].dataType
     return cur
 
-
-def has_field(df: DataFrame, path: str) -> bool:
-    """Schema-level existence check (conditions.has_fields resolves at
-    plan time — a declared schema either has the column or it doesn't,
-    unlike the per-event check in ``conditions/has_fields.go:31``;
-    per-row null-ness is a separate ``isNotNull`` predicate)."""
-    return field_type(df.schema, path) is not None

@@ -19,7 +19,7 @@ from typing import Optional
 
 from pyspark.sql import Column, functions as F
 
-__all__ = ["compile_fmtstr", "is_const_fmtstr"]
+__all__ = ["compile_fmtstr"]
 
 _TOKEN_RE = re.compile(r"%\{([^}]*)\}")
 _FIELD_RE = re.compile(r"^(\[[^\]]+\])+$")
@@ -99,10 +99,6 @@ def _joda_date_format(col: Column, pat: str) -> Column:
     if len(pieces) == 1:
         return pieces[0]
     return F.concat(*pieces)
-
-
-def is_const_fmtstr(template: str) -> bool:
-    return _TOKEN_RE.search(template) is None
 
 
 def compile_fmtstr(template: str, timestamp_field: str = "@timestamp",

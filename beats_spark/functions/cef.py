@@ -50,7 +50,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 __all__ = [
     "CEF_HEADER_FIELDS", "cef_header", "cef_header_fields",
-    "cef_header_from", "cef_pairs", "cef_pairs_raw",
+    "cef_header_from", "cef_pairs_raw",
     "cef_get", "cef_extensions", "decode_cef", "kv_get",
 ]
 
@@ -190,18 +190,6 @@ def cef_pairs_raw(line: Optional[Column],
         good,
         lambda p: F.struct(key(p).alias("key"),
                            rawv(p).alias("value")))
-
-
-def cef_pairs(line: Column) -> Column:
-    """``array<struct<key,value>>`` of well-formed extension pairs, in
-    message order, escapes decoded, malformed fields dropped (the
-    reference drops them and records an error; counters ride the
-    router's error path here). Duplicates are NOT resolved — see
-    :func:`cef_get` / :func:`cef_extensions` for last-wins."""
-    return F.transform(
-        cef_pairs_raw(line),
-        lambda p: F.struct(p["key"].alias("key"),
-                           _unescape(p["value"]).alias("value")))
 
 
 def cef_get(line: Optional[Column], key: str,

@@ -22,8 +22,9 @@ Spark mappings:
    linearly with partitions.
 2. :func:`multiline_over_rows` — rows are single lines (beats' actual
    shape): lag + running-sum segmentation over a window keyed by the
-   source file/url, fully JVM-side. Costs one shuffle on the partition
-   key, unavoidable for cross-row state.
+   source file/url, fully JVM-side (``_join_runs``, which the container
+   parser's partial-line join runs too). Costs one shuffle on the
+   partition key, unavoidable for cross-row state.
 
 The 5s flush ``timeout`` (``pattern.go:57``) is an arrival-time concept
 with no batch meaning; in streaming use a watermark instead.
@@ -32,7 +33,7 @@ with no batch meaning; in streaming use a watermark instead.
 from __future__ import annotations
 
 import re
-from typing import Iterator, List, Optional, Tuple
+from typing import Iterator, List, Optional, Sequence
 
 import pandas as pd
 
@@ -163,53 +164,73 @@ def multiline_over_rows(
     separator: str = "\n",
     message_col: str = "message",
 ) -> DataFrame:
-    """Line-per-row multiline join, JVM-side.
+    """Line-per-row multiline join, JVM-side (:func:`_join_runs` with
+    the pattern as the continuation test): one row per event with
+    ``partition_cols``, the first line's ``order_col`` and the joined
+    ``message_col``."""
+    matched = F.col(line_col).rlike(pattern)
+    return _join_runs(
+        df, line_col, partition_cols, order_col,
+        ~matched if negate else matched,
+        F.col(line_col).rlike(flush_pattern) if flush_pattern
+        else F.lit(False),
+        match=match, separator=separator, max_lines=max_lines,
+        message_col=message_col)
 
-    Segmentation: a new event starts where the pairwise predicate fails
-    (or after a flush-pattern line); segment id = running sum of starts.
-    One shuffle on ``partition_cols`` (the per-file ordering guarantee
-    the reference gets from its single-goroutine harvester,
+
+def _join_runs(
+    df: DataFrame,
+    line_col: str,
+    partition_cols: Sequence[str],
+    order_col: str,
+    continues: Column,
+    flushes: Column,
+    match: str = "after",
+    separator: str = "\n",
+    max_lines: Optional[int] = None,
+    carry: Sequence[str] = (),
+    message_col: Optional[str] = None,
+) -> DataFrame:
+    """The line joiner of every line-per-row reader: multiline, and the
+    container parser's partial lines (a partial line continues, a final
+    line flushes).
+
+    Segmentation over a window per ``partition_cols`` ordered by
+    ``order_col``: a line starts an event when it is the first line,
+    the line before it is null or flushed (``flushes``; the flush check
+    precedes the predicate, ``pattern.go:209-220``), or it neither
+    flushes nor continues. ``continues`` tests the line itself with
+    ``match: after`` and the line before it with ``match: before``;
+    null counts as false. Segment id = running sum of starts, then one
+    groupBy: one shuffle on ``partition_cols`` (the per-file ordering
+    guarantee the reference gets from its single-goroutine harvester,
     ``pipeline.go:47-49``).
+
+    Output: ``partition_cols``, the smallest ``order_col``, the first
+    ``max_lines`` lines joined by ``separator`` as ``message_col``
+    (default ``line_col``), then the first line's value of each
+    ``carry`` column.
     """
-    cur = F.col(line_col)
     w = Window.partitionBy(*partition_cols).orderBy(order_col)
-    prev = F.lag(cur).over(w)
-
-    tested = cur if match == "after" else prev
-    hit = tested.rlike(pattern)
-    if negate:
-        hit = ~hit
-    if flush_pattern:
-        # flush check precedes the predicate (pattern.go:209-220): a
-        # flush-matching line always joins the current event, and the
-        # NEXT line always starts a new one
-        hit = hit | cur.rlike(flush_pattern)
-    joins_prev = F.coalesce(hit, F.lit(False))
-
-    if flush_pattern:
-        prev_flushed = F.coalesce(F.lag(cur).over(w).rlike(flush_pattern),
-                                  F.lit(False))
-        joins_prev = joins_prev & ~prev_flushed
-
-    start = F.when(prev.isNull() | ~joins_prev, F.lit(1)).otherwise(F.lit(0))
-    df = df.withColumn("__start", start)
+    df = df.withColumns({"__cont": continues, "__flush": flushes})
+    tested = F.col("__cont") if match == "after" else F.lag("__cont").over(w)
+    joins = F.coalesce(tested | F.col("__flush"), F.lit(False))
+    start = (F.lag(line_col).over(w).isNull() | ~joins
+             | F.coalesce(F.lag("__flush").over(w), F.lit(False)))
+    df = df.withColumn("__start", start.cast("int"))
     df = df.withColumn(
         "__seg",
         F.sum("__start").over(w.rowsBetween(Window.unboundedPreceding, 0)))
 
-    ordered = F.array_sort(
-        F.collect_list(F.struct(F.col(order_col).alias("o"),
-                                cur.alias("l"))))
-    agg = (
-        df.groupBy(*partition_cols, "__seg")
-          .agg(ordered.alias("__lines"),
-               F.min(order_col).alias(order_col))
-          .withColumn(
-              message_col,
-              F.array_join(
-                  F.slice(F.transform("__lines", lambda s: s["l"]),
-                          1, max_lines),
-                  separator))
-          .drop("__lines", "__seg")
-    )
-    return agg
+    ordered = F.array_sort(F.collect_list(F.struct(
+        F.col(order_col).alias("__o"), F.col(line_col).alias("__l"),
+        *[F.col(c) for c in carry])))
+    lines = F.transform("__p", lambda p: p["__l"])
+    if max_lines is not None:
+        lines = F.slice(lines, 1, max_lines)
+    assigns = {message_col or line_col: F.array_join(lines, separator)}
+    assigns.update({c: F.col("__p")[0][c] for c in carry})
+    return (df.groupBy(*partition_cols, "__seg")
+              .agg(ordered.alias("__p"), F.min(order_col).alias(order_col))
+              .withColumns(assigns)
+              .drop("__p", "__seg"))

@@ -15,7 +15,7 @@ from typing import Any, Callable, List, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .multiline import multiline_over_rows
+from .multiline import _join_runs, multiline_over_rows
 from .syslog import parse_syslog, parse_syslog_rfc3164, parse_syslog_rfc5424
 from .readers import include_lines
 
@@ -27,7 +27,6 @@ def parse_ndjson(
     field: str = "message",
     target: str = "",
     schema: str = "",
-    keys_under_root: bool = False,
     add_error_key: bool = True,
     message_key: str = "",
 ) -> DataFrame:
@@ -111,8 +110,6 @@ def parse_container(
     contract of the streaming joiner
     (:func:`beats_spark.streaming.pipeline.stateful_container_partial`),
     which carries partial runs across micro-batches."""
-    from pyspark.sql import Window
-
     src = F.col(field)
     is_json = src.startswith("{")
     # PERMISSIVE from_json yields a struct of nulls for malformed
@@ -171,40 +168,21 @@ def parse_container(
             "keep_partial_flag requires combine_partials=False "
             "(the partial join consumes the flag)")
     if can_join:
-        w = Window.partitionBy(*partition_cols).orderBy(order_col)
-        prev_partial = F.lag("__partial").over(w)
-        start = F.when(prev_partial.isNull() | ~prev_partial,
-                       F.lit(1)).otherwise(F.lit(0))
-        out = out.withColumn("__start", start)
-        out = out.withColumn(
-            "__seg", F.sum("__start").over(
-                w.rowsBetween(Window.unboundedPreceding, 0)))
-        # carry EVERY non-grouping column through the struct so extra
-        # columns (offsets, host metadata, …) survive; the joined
-        # event keeps the first part's values for all of them, like
-        # the reference appending into the first message's struct
-        extra = [c for c in out.columns
-                 if c not in (*partition_cols, order_col, "__seg",
-                              "__partial", "__start")]
-        parts = F.array_sort(F.collect_list(
-            F.struct(F.col(order_col).alias("__o"),
-                     *[F.col(c).alias(c) for c in extra])))
-        assigns = {c: F.col("__p")[0][c] for c in extra}
-        assigns[field] = F.array_join(
-            F.transform("__p", lambda p: p[field]), "")
-        out = (out.groupBy(*partition_cols, "__seg")
-               .agg(parts.alias("__p"),
-                    F.min(order_col).alias(order_col))
-               .withColumns(assigns)
-               .drop("__p", "__seg")
+        # a partial line is a multiline continuation that ends at the
+        # next final line; every other column keeps the first part's
+        # value, like the reference appending into the first message's
+        # struct
+        carry = [c for c in out.columns
+                 if c not in (*partition_cols, order_col, field, "__partial")]
+        out = (_join_runs(out, field, partition_cols, order_col,
+                          F.lit(True), ~F.col("__partial"), separator="",
+                          carry=carry)
                # restore the caller's column order
-               .select(*df.columns, "container_stream",
-                       "container_time"))
-    if keep_partial_flag and not can_join:
+               .select(*df.columns, "container_stream", "container_time"))
+    elif keep_partial_flag:
         out = out.withColumnRenamed("__partial", "container_partial")
     else:
         out = out.drop("__partial")
-    out = out.drop("__start")
     if stream != "all":
         out = out.filter(F.col("container_stream") == stream)
     return out

@@ -58,7 +58,9 @@ import os
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional, Sequence, Tuple
 
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StringType
 
 from .checkpoint import Watermarks, new_run_id, snapshot_id_of
@@ -219,11 +221,19 @@ def commit(routed: DataFrame, routed_path: str, out_dir: str, run_id: str,
     ``output.<sink>.events.acked`` covers the four ``SINKS``. Rows a
     ``sink_hint`` routes elsewhere are written, appear in lineage and
     in ``events.total``, but have no acked counter.
+
+    A frame without rows writes no ``sink=`` directory, so the driver
+    adds one 0-row file with the routed schema under
+    ``sink=<SINKS[0]>``: every run's routed table reads, with the
+    same schema.
     """
     routed, obs = attach_observation(routed, SINKS, snapshots)
     if snapshots:
         routed = routed.drop(SNAPSHOT)
     routed.write.mode("overwrite").partitionBy("sink").parquet(routed_path)
+    if not any(p.startswith("sink=") for p in os.listdir(routed_path)):
+        _write_empty_part(routed.drop("sink").schema,
+                          os.path.join(routed_path, f"sink={SINKS[0]}"))
     if snapshots:
         counts = {f"{run_id}-{sid}": m for sid, m in
                   zip(snapshots, snapshot_metrics(obs, snapshots))}
@@ -235,6 +245,16 @@ def commit(routed: DataFrame, routed_path: str, out_dir: str, run_id: str,
     if lineage:
         write_lineage(routed_path, os.path.join(out_dir, "lineage"), run_id)
     return counts
+
+
+def _write_empty_part(schema, path: str) -> None:
+    """One 0-row parquet file of ``schema`` in directory ``path``; the
+    Spark schema rides in the footer, as in the files Spark writes."""
+    arrow = to_arrow_schema(schema).with_metadata(
+        {"org.apache.spark.sql.parquet.row.metadata": schema.json()})
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(arrow.empty_table(),
+                   os.path.join(path, "part-00000-empty.parquet"))
 
 
 def _run_set(pages: DataFrame, snapshot_ids: List[str], table,
@@ -280,14 +300,15 @@ def run_pipeline(
     host_meta: DataFrame,
     lang_meta: DataFrame,
     out_dir: str,
-    run_id: Optional[str] = None,
     snapshot_id: Optional[str] = None,
-    resume: bool = True,
     lineage: bool = True,
 ) -> PipelineRun:
     """Execute end-to-end with watermark resume and lineage: ``pages``
     is a snapshot set of one, ``snapshot_id`` (by default a content id
-    of its files).
+    of its files). A run of a snapshot already watermarked in
+    ``out_dir`` is skipped. A frame without input files has no content
+    id: its run gets the ad-hoc id ``adhoc-<run id>`` and is never
+    skipped.
 
     Output layout::
 
@@ -299,14 +320,10 @@ def run_pipeline(
     The routed write is the run's only Spark job; the counters, lineage
     and watermark are written by the driver after it.
     """
-    run_id = run_id or new_run_id()
-    if snapshot_id is None:
-        try:
-            snapshot_id = snapshot_id_of(pages)
-        except Exception:
-            snapshot_id = "adhoc-" + run_id
-    if resume and snapshot_id and Watermarks(out_dir).is_processed(
-            snapshot_id):
+    run_id = new_run_id()
+    snapshot_id = (snapshot_id or snapshot_id_of(pages)
+                   or "adhoc-" + run_id)
+    if Watermarks(out_dir).is_processed(snapshot_id):
         return PipelineRun(run_id=run_id, out_dir=out_dir,
                            snapshot_id=snapshot_id, skipped=True)
     return _run_set(pages, [snapshot_id], None, host_meta, lang_meta,

@@ -19,12 +19,7 @@ from ..lookup import broadcast_enrich, enrich, enrich_assigns
 from . import ProcResult, register
 
 __all__ = ["broadcast_enrich", "cidr_enrich", "enrich_assigns",
-           "registered_domain_col", "url_host"]
-
-
-def url_host(col: Column) -> Column:
-    """Host part of a URL, JVM-side (``parse_url``)."""
-    return F.parse_url(col, F.lit("HOST"))
+           "registered_domain_col"]
 
 
 @register("dns")

@@ -30,7 +30,7 @@ processor chain and output path under every input.
 from __future__ import annotations
 
 import os
-from typing import Iterator, Optional, Tuple
+from typing import Callable, Iterator, List, Optional, Sequence, Tuple
 
 import pandas as pd
 
@@ -232,109 +232,35 @@ def stateful_multiline(
     (``multiline/pattern.go:52-58``: ``timeout: 5s``; flush on
     ``flush_pattern``; cap at ``max_lines``).
 
-    ``applyInPandasWithState`` keyed by ``file_col``: an in-progress
-    event (its joined text, first line number and line count) is
-    carried across micro-batches, so a continuation line arriving in a
-    later batch — or after a query restart from the same checkpoint —
-    still joins its event. A processing-time timeout flushes the
-    dangling event when the file goes quiet, exactly like the
-    reference's harvester timeout; Spark persists the state + timeout
-    clock in the checkpoint.
+    Runs :func:`_stateful_join` keyed by ``file_col``, so a
+    continuation line arriving in a later batch — or after a query
+    restart from the same checkpoint — still joins its event, and a
+    processing-time timeout flushes the dangling event when the file
+    goes quiet, exactly like the reference's harvester timeout.
 
     Semantics match the batch joiner: with ``match: after`` a line
     where ``rlike(pattern) != negate`` continues the previous event;
     with ``match: before`` the PREVIOUS line's match decides (its
     result is part of the carried state, so before-mode also works
-    across batch boundaries). Anything else starts a new event. Rows
-    inside a batch are ordered by ``order_col`` (the file source
-    delivers per-file batches in order). Output: one row per completed
-    event with the FIRST line's ``order_col``.
+    across batch boundaries). Anything else starts a new event.
+    Output: one row per completed event with the FIRST line's
+    ``order_col``.
     """
     import re as _re
 
     if match not in ("after", "before"):
         raise ValueError(f"match must be 'after' or 'before': {match!r}")
-    out_schema = (f"{file_col} string, {order_col} long, "
-                  f"{line_col} string, n_lines long")
-    # cont_next: for before-mode, whether the LAST consumed line's
-    # match says the next line continues the event
-    state_schema = "first_no long, buf string, n long, cont_next boolean"
     rx = _re.compile(pattern)
     frx = _re.compile(flush_pattern) if flush_pattern else None
-    before = match == "before"
 
-    def fn(key: Tuple, batches: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        path = key[0]
-        if state.hasTimedOut:
-            # file went quiet: flush the dangling event (the
-            # reference's timeout flush, pattern.go:57)
-            if state.exists:
-                first_no, buf, n, _ = state.get
-                state.remove()
-                yield pd.DataFrame(
-                    [(path, first_no, buf, n)],
-                    columns=[file_col, order_col, line_col, "n_lines"])
-            return
-        if state.exists:
-            first_no, buf, n, cont_next = state.get
-        else:
-            first_no, buf, n, cont_next = None, None, 0, False
-        done = []
-        chunks = [pdf for pdf in batches]
-        if chunks:
-            # concat before sorting: one group's rows may span several
-            # Arrow chunks in fetch order, and state is sequential
-            pdf = _concat_chunks(chunks)
-            # a NULL order value is a corrupt source row: drop it
-            # (int(NaN) would otherwise kill the whole query)
-            pdf = pdf[pdf[order_col].notna()].sort_values(order_col)
-            for no, line in zip(pdf[order_col].values,
-                                pdf[line_col].values):
-                line = "" if line is None else str(line)
-                # flush check runs BEFORE the continuation predicate
-                # (pattern.go:209-220): the matching line joins the
-                # CURRENT event, which emits immediately
-                matched = bool(rx.search(line)) != negate
-                if frx is not None and frx.search(line):
-                    if buf is not None:
-                        if n < max_lines:
-                            buf += "\n" + line
-                            n += 1
-                    else:
-                        first_no, buf, n = int(no), line, 1
-                    done.append((path, int(first_no), buf, n))
-                    first_no, buf, n = None, None, 0
-                    cont_next = False
-                    continue
-                cont = cont_next if before else matched
-                cont_next = matched
-                if buf is not None and cont:
-                    # past max_lines the line is CONSUMED but dropped
-                    # (message_buffer.go addLine: content and numLines
-                    # freeze at the cap) — same as the batch joiner's
-                    # buf[:max_lines] truncation, never a split
-                    if n < max_lines:
-                        buf += "\n" + line
-                        n += 1
-                else:
-                    if buf is not None:
-                        done.append((path, int(first_no), buf, n))
-                    first_no, buf, n = int(no), line, 1
-        if buf is not None:
-            state.update((int(first_no), buf, int(n), bool(cont_next)))
-            if timeout_ms is not None:
-                state.setTimeoutDuration(int(timeout_ms))
-        elif state.exists:
-            state.remove()
-        if done:
-            yield pd.DataFrame(
-                done, columns=[file_col, order_col, line_col, "n_lines"])
+    def marks(pdf, texts):
+        return [(bool(rx.search(t)) != negate,
+                 frx is not None and frx.search(t) is not None)
+                for t in texts]
 
-    timeout = (GroupStateTimeout.ProcessingTimeTimeout
-               if timeout_ms is not None else GroupStateTimeout.NoTimeout)
-    return (lines.groupBy(file_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", timeout))
+    return _stateful_join(lines, file_col, order_col, line_col, marks,
+                          match=match, max_lines=max_lines,
+                          timeout_ms=timeout_ms)
 
 
 def stateful_container_partial(
@@ -348,7 +274,8 @@ def stateful_container_partial(
     (``docker_json.go`` Next loop): a partial run that straddles a
     micro-batch boundary — the CRI ``P`` line lands in one batch, its
     final line in the next — still joins, because the open run rides
-    ``applyInPandasWithState`` keyed by file. A processing-time
+    :func:`_stateful_join` keyed by file, with every line a
+    continuation and each final line a flush line. A processing-time
     timeout flushes a run whose final line never arrives (the batch
     operator emits dangling runs at end-of-input; a stream has no end,
     so the timeout is the equivalent).
@@ -360,74 +287,116 @@ def stateful_container_partial(
     The joined event keeps the FIRST part's stream/timestamp, exactly
     like the batch join and the reference.
     """
-    out_schema = (f"{file_col} string, {order_col} long, "
-                  f"{line_col} string, container_stream string, "
-                  f"container_time timestamp, n_lines long")
-    state_schema = ("first_no long, buf string, stream string, "
-                    "ts_us long, n long")
+    def marks(pdf, texts):
+        return [(True, not p) for p in pdf["container_partial"].values]
+
+    return _stateful_join(parsed, file_col, order_col, line_col, marks,
+                          separator="", max_lines=None,
+                          carry=("container_stream", "container_time"),
+                          timeout_ms=timeout_ms)
+
+
+def _stateful_join(
+    lines: DataFrame,
+    file_col: str,
+    order_col: str,
+    line_col: str,
+    marks: Callable[[pd.DataFrame, List[str]], List[Tuple[bool, bool]]],
+    match: str = "after",
+    separator: str = "\n",
+    max_lines: Optional[int] = None,
+    carry: Sequence[str] = (),
+    timeout_ms: Optional[int] = None,
+) -> DataFrame:
+    """The streaming line joiner, the state-machine form of the batch
+    ``functions.multiline._join_runs``: ``applyInPandasWithState``
+    keyed by ``file_col`` carries an in-progress event (first line
+    number, joined text, line count, the before-mode continuation
+    flag, and the first line's ``carry`` values) across micro-batches;
+    Spark persists the state and the timeout clock in the checkpoint.
+
+    ``marks(rows, texts)`` gives each line's ``(continues, flushes)``
+    in order. A line joins the open event when it flushes or when it
+    continues (with ``match: before``, when the line before it
+    continued); a flush line then closes the event (the flush check
+    precedes the predicate, ``pattern.go:209-220``). Past ``max_lines``
+    a line is consumed but dropped (``message_buffer.go`` addLine).
+    Rows are ordered by ``order_col`` within a batch; a row with a NULL
+    order value is a corrupt source row and is dropped.
+
+    Output: ``file_col``, the first line's ``order_col``, the text as
+    ``line_col``, the ``carry`` columns, ``n_lines``.
+    """
+    types = {c: lines.schema[c].dataType.simpleString() for c in carry}
+    columns = [file_col, order_col, line_col, *carry, "n_lines"]
+    out_schema = ", ".join([f"{file_col} string", f"{order_col} long",
+                            f"{line_col} string",
+                            *(f"{c} {t}" for c, t in types.items()),
+                            "n_lines long"])
+    # cont_next: for before-mode, whether the LAST consumed line's
+    # match says the next line continues the event. A carried
+    # timestamp is kept as timestamp_ntz: its naive pandas value then
+    # round-trips through the state without the worker's time zone
+    state_schema = ", ".join([
+        "first_no long, buf string, n long, cont_next boolean",
+        *(f"{c} {'timestamp_ntz' if t == 'timestamp' else t}"
+          for c, t in types.items())])
+    before = match == "before"
 
     def fn(key: Tuple, batches: Iterator[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
         path = key[0]
-
-        def row(first_no, buf, stream, ts_us, n):
-            ts = (pd.Timestamp(ts_us, unit="us") if ts_us is not None
-                  and ts_us >= 0 else pd.NaT)
-            return (path, first_no, buf, stream, ts, n)
-
         if state.hasTimedOut:
+            # file went quiet: flush the dangling event (the
+            # reference's timeout flush, pattern.go:57)
             if state.exists:
-                first_no, buf, stream, ts_us, n = state.get
+                first_no, buf, n, _, *first = state.get
                 state.remove()
-                yield pd.DataFrame(
-                    [row(first_no, buf, stream, ts_us, n)],
-                    columns=[file_col, order_col, line_col,
-                             "container_stream", "container_time",
-                             "n_lines"])
+                yield pd.DataFrame([(path, first_no, buf, *first, n)],
+                                   columns=columns)
             return
         if state.exists:
-            first_no, buf, stream, ts_us, n = state.get
+            first_no, buf, n, cont_next, *first = state.get
         else:
-            first_no, buf, stream, ts_us, n = None, None, None, None, 0
+            first_no, buf, n, cont_next = None, None, 0, False
+            first = [None] * len(carry)
         done = []
         chunks = [pdf for pdf in batches]
         if chunks:
-            # concat before sorting — see stateful_multiline; NULL
-            # order rows are corrupt source rows (int(NaN) raises)
+            # concat before sorting: one group's rows may span several
+            # Arrow chunks in fetch order, and state is sequential;
+            # int(NaN) of a NULL order value would kill the query
             pdf = _concat_chunks(chunks)
             pdf = pdf[pdf[order_col].notna()].sort_values(order_col)
-            ts_vals = (pdf["container_time"].values
-                       .astype("datetime64[ns]").astype("int64") // 1000)
-            null_ts = pdf["container_time"].isna().values
-            for no, msg, st, t_us, t_null, part in zip(
-                    pdf[order_col].values, pdf[line_col].values,
-                    pdf["container_stream"].values, ts_vals, null_ts,
-                    pdf["container_partial"].values):
-                msg = "" if msg is None else str(msg)
-                if buf is None:
-                    first_no, buf, stream, n = int(no), msg, st, 1
-                    ts_us = None if t_null else int(t_us)
+            texts = ["" if t is None else str(t)
+                     for t in pdf[line_col].values]
+            carried = [pdf[c].astype(object).values for c in carry]
+            for i, (no, line, (cont, flush)) in enumerate(zip(
+                    pdf[order_col].values, texts, marks(pdf, texts))):
+                cont, cont_next = (cont_next if before else cont), cont
+                if buf is not None and (cont or flush):
+                    if max_lines is None or n < max_lines:
+                        buf += separator + line
+                        n += 1
                 else:
-                    buf += msg
-                    n += 1
-                if not part:
-                    done.append(row(first_no, buf, stream, ts_us, n))
-                    first_no, buf, stream, ts_us, n = (None, None, None,
-                                                       None, 0)
+                    if buf is not None:
+                        done.append((path, first_no, buf, *first, n))
+                    first_no, buf, n = int(no), line, 1
+                    first = [None if pd.isna(v[i]) is True else v[i]
+                             for v in carried]
+                if flush:
+                    done.append((path, first_no, buf, *first, n))
+                    first_no, buf, n, cont_next = None, None, 0, False
         if buf is not None:
-            state.update((int(first_no), buf, stream,
-                          -1 if ts_us is None else int(ts_us), int(n)))
+            state.update((first_no, buf, n, cont_next, *first))
             if timeout_ms is not None:
                 state.setTimeoutDuration(int(timeout_ms))
         elif state.exists:
             state.remove()
         if done:
-            yield pd.DataFrame(
-                done, columns=[file_col, order_col, line_col,
-                               "container_stream", "container_time",
-                               "n_lines"])
+            yield pd.DataFrame(done, columns=columns)
 
     timeout = (GroupStateTimeout.ProcessingTimeTimeout
                if timeout_ms is not None else GroupStateTimeout.NoTimeout)
-    return (parsed.groupBy(file_col).applyInPandasWithState(
+    return (lines.groupBy(file_col).applyInPandasWithState(
         fn, out_schema, state_schema, "append", timeout))

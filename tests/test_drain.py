@@ -32,11 +32,9 @@ def _watermarks(out):
 
 
 def _routed(spark, out):
-    """The rows every run of ``out`` committed; the run of an empty
-    snapshot writes no file."""
+    """The rows every run of ``out`` committed."""
     parts = [spark.read.parquet(p)
-             for p in glob.glob(os.path.join(out, "runs", "*", "routed"))
-             if glob.glob(os.path.join(p, "sink=*"))]
+             for p in glob.glob(os.path.join(out, "runs", "*", "routed"))]
     return functools.reduce(lambda a, b: a.unionByName(b), parts)
 
 
