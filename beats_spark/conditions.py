@@ -21,7 +21,12 @@ Semantics parity:
 - ``has_fields`` — all listed keys exist (``has_fields.go:31``); with a
   declared schema this is plan-time truth + per-row ``isNotNull``.
 - ``network`` — IP-in-CIDR / named networks; values are OR'd within a
-  field, fields are AND'd (``conditions/network.go:44-139``).
+  field, fields are AND'd (``conditions/network.go:44-139``). The
+  address is read by one Catalyst parse with Go's ``net.ParseIP``
+  rules (:func:`_ip_words`) and tested against a literal table of
+  networks; no Python runs.
+- ``contains``, ``regexp``, ``range`` and ``network`` are false on a
+  null field, as Go's are on a missing one.
 - ``and`` / ``or`` / ``not`` — composition (``and.go``, ``or.go``,
   ``not.go``).
 """
@@ -29,12 +34,12 @@ Semantics parity:
 from __future__ import annotations
 
 import ipaddress
-from typing import Any, Dict, Iterator, List, Mapping, Sequence
+from typing import Any, List, Mapping, Sequence
 
 from pyspark.sql import Column, functions as F
 from pyspark.sql import types as T
 
-__all__ = ["compile_condition", "ip_to_long", "cidr_match"]
+__all__ = ["compile_condition", "ip_to_long"]
 
 
 # ---------------------------------------------------------------- network
@@ -50,253 +55,158 @@ def ip_to_long(col: Column) -> Column:
     )
 
 
-_IPV4_RE = r"^((25[0-5]|2[0-4]\d|1?\d?\d)\.){3}(25[0-5]|2[0-4]\d|1?\d?\d)$"
-
-# Strict IPv6 textual form, mirroring Go net.ParseIP (no zone ids):
-# full 8-group, '::'-compressed with correct group counts, and the
-# embedded-IPv4 tails (full 6-group+v4 and compressed variants). The
-# grok IPV6 class is deliberately looser (log-scraping); validation
-# paths (convert type=ip, add_network_direction) use THIS one — the
-# loose class accepts strings like '1:2:3' that ParseIP rejects.
+# The address forms Go's net.ParseIP (Go >= 1.17) accepts: a dotted
+# quad without leading zeros, or an IPv6 form without a zone. The IPv6
+# class: full 8-group, '::'-compressed with correct group counts, and
+# the embedded-IPv4 tails (full 6-group+v4 and compressed variants).
+# The grok IPV6 class is deliberately looser (log-scraping) and accepts
+# strings like '1:2:3' that ParseIP rejects. `\z`, not `$`: Java's `$`
+# also matches before a final line terminator.
+_OCTET = r"(25[0-5]|2[0-4]\d|1\d\d|[1-9]?\d)"
+_V4 = rf"({_OCTET}\.){{3}}{_OCTET}"
 _H = "[0-9A-Fa-f]{1,4}"
-_V4 = r"((25[0-5]|2[0-4]\d|1?\d?\d)\.){3}(25[0-5]|2[0-4]\d|1?\d?\d)"
-_IPV6_RE = ("^("
-            f"({_H}:){{7}}{_H}"
-            f"|({_H}:){{1,7}}:"
-            f"|({_H}:){{1,6}}:{_H}"
-            f"|({_H}:){{1,5}}(:{_H}){{2}}"
-            f"|({_H}:){{1,4}}(:{_H}){{3}}"
-            f"|({_H}:){{1,3}}(:{_H}){{4}}"
-            f"|({_H}:){{1,2}}(:{_H}){{5}}"
-            f"|{_H}:(:{_H}){{6}}"
-            f"|:((:{_H}){{1,7}}|:)"
-            # embedded IPv4 tail: full 6-group form, then '::' forms
-            # with m prefix groups and k infix groups, m+k <= 5 exact
-            f"|({_H}:){{6}}{_V4}"
-            f"|::({_H}:){{0,5}}{_V4}"
-            f"|({_H}:){{1}}:({_H}:){{0,4}}{_V4}"
-            f"|({_H}:){{2}}:({_H}:){{0,3}}{_V4}"
-            f"|({_H}:){{3}}:({_H}:){{0,2}}{_V4}"
-            f"|({_H}:){{4}}:({_H}:){{0,1}}{_V4}"
-            f"|({_H}:){{5}}:{_V4}"
-            ")$")
+_V6 = ("("
+       f"({_H}:){{7}}{_H}"
+       f"|({_H}:){{1,7}}:"
+       f"|({_H}:){{1,6}}:{_H}"
+       f"|({_H}:){{1,5}}(:{_H}){{2}}"
+       f"|({_H}:){{1,4}}(:{_H}){{3}}"
+       f"|({_H}:){{1,3}}(:{_H}){{4}}"
+       f"|({_H}:){{1,2}}(:{_H}){{5}}"
+       f"|{_H}:(:{_H}){{6}}"
+       f"|:((:{_H}){{1,7}}|:)"
+       # embedded IPv4 tail: full 6-group form, then '::' forms
+       # with m prefix groups and k infix groups, m+k <= 5 exact
+       f"|({_H}:){{6}}{_V4}"
+       f"|::({_H}:){{0,5}}{_V4}"
+       f"|({_H}:){{1}}:({_H}:){{0,4}}{_V4}"
+       f"|({_H}:){{2}}:({_H}:){{0,3}}{_V4}"
+       f"|({_H}:){{3}}:({_H}:){{0,2}}{_V4}"
+       f"|({_H}:){{4}}:({_H}:){{0,1}}{_V4}"
+       f"|({_H}:){{5}}:{_V4}"
+       ")")
+_IPV6_RE = rf"^{_V6}\z"
+_IP_RE = rf"^({_V4}|{_V6})\z"
 
-# named networks (conditions/network.go:44-55), the IPv4 half expressed
-# as CIDR lists so the hot path stays pure mask arithmetic. Go's
-# IsInterfaceLocalMulticast is IPv6-only (returns false for every v4
-# address), hence the empty list.
-_NAMED_V4 = {
-    "loopback": ["127.0.0.0/8"],
-    "private": ["10.0.0.0/8", "172.16.0.0/12", "192.168.0.0/16"],
-    "multicast": ["224.0.0.0/4"],
-    "interface_local_multicast": [],
-    "link_local_unicast": ["169.254.0.0/16"],
-    "link_local_multicast": ["224.0.0.0/24"],
-    "unspecified": ["0.0.0.0/32"],
+
+def _let(value: Column, body) -> Column:
+    """``body`` over ``value`` evaluated once per row: a lambda
+    variable is bound to it, where a Python reference would copy the
+    expression into every place ``body`` uses it."""
+    return F.transform(F.array(value), body)[0]
+
+
+def _hextets(half: Column) -> Column:
+    """The hex digits of one side of a ``::``: each group padded to 4
+    digits, a dotted tail read as two groups."""
+    return F.concat_ws("", F.transform(
+        F.array_remove(F.split(half, ":"), ""),
+        lambda g: F.when(g.contains("."), F.concat_ws("", F.transform(
+            F.split(g, r"\."), lambda o: F.lpad(F.conv(o, 10, 16), 2, "0"))))
+        .otherwise(F.lpad(g, 4, "0"))))
+
+
+def _is_ip(col: Column) -> Column:
+    """Whether ``net.ParseIP`` reads ``col`` as an address: where
+    :func:`_ip_words` is not null, without building the words."""
+    return col.cast("string").rlike(_IP_RE)
+
+
+def _ip_words(col: Column) -> Column:
+    """The address in ``col`` as Go's ``net.ParseIP`` reads it: four
+    32-bit words, a dotted quad held as ``::ffff:a.b.c.d``; null for
+    anything that is not an address."""
+    s = col.cast("string")
+    v6 = F.when(_is_ip(s), F.when(s.contains(":"), s)
+                .otherwise(F.concat(F.lit("::ffff:"), s)))
+    # the digits right of '::' right-aligned in 32, the left ones
+    # written over their start: '::' expands to the zeros between
+    hex32 = _let(v6, lambda t: F.when(t.isNotNull(), F.overlay(
+        F.lpad(_hextets(F.substring_index(t, "::", -1)), 32, "0"),
+        _hextets(F.substring_index(t, "::", 1)), 1)))
+    return _let(hex32, lambda h: F.when(h.isNotNull(), F.array(*[
+        F.conv(F.substring(h, 8 * i + 1, 8), 16, 10).cast("long")
+        for i in range(4)])))
+
+
+def _is4(w: Column) -> Column:
+    """Go's ``To4`` gives these words 4 bytes: ``::ffff:a.b.c.d``."""
+    return (w[0] == 0) & (w[1] == 0) & (w[2] == 0xFFFF)
+
+
+# named networks (conditions/network.go:44-55): the addresses Go's
+# net.IP predicates hold, as CIDRs; the scope-nibble multicast classes
+# are (value, mask) pairs
+_NAMED = {
+    "loopback": ["127.0.0.0/8", "::1/128"],
+    "unspecified": ["0.0.0.0/32", "::/128"],
+    "link_local_unicast": ["169.254.0.0/16", "fe80::/10"],
+    "link_local_multicast": ["224.0.0.0/24", ("ff02::", "ff0f::")],
+    "interface_local_multicast": [("ff01::", "ff0f::")],
+    "multicast": ["224.0.0.0/4", "ff00::/8"],
+    "private": ["10.0.0.0/8", "172.16.0.0/12", "192.168.0.0/16",
+                "fd00::/8"],
 }
+# named networks holding every address outside these: IsGlobalUnicast,
+# and public = !isLocalOrPrivate (network.go:237-245)
+_OUTSIDE = {
+    "unicast": ["255.255.255.255/32", "unspecified", "loopback",
+                "multicast", "link_local_unicast"],
+    "public": ["255.255.255.255/32", "private", "loopback",
+               "unspecified", "link_local_unicast",
+               "link_local_multicast", "interface_local_multicast"],
+}
+_OUTSIDE["global_unicast"] = _OUTSIDE["unicast"]
 
 
-# --- Go net.IP predicate mirror (used for the non-dotted-quad rows) ---
+def _net_row(spec) -> tuple:
+    """One network → ``(v4, mask words, value words)``. Go's
+    ``IPNet.Contains`` family rule: a network whose number ``To4``
+    reads as IPv4 holds exactly the addresses it reads so, by their
+    last word; any other holds only the rest."""
+    if isinstance(spec, tuple):
+        value, mask = (int(ipaddress.IPv6Address(a)) for a in spec)
+    else:
+        net = ipaddress.ip_network(spec, strict=False)
+        if net.version == 4:
+            net = ipaddress.IPv6Network(
+                f"::ffff:{net.network_address}/{96 + net.prefixlen}")
+        value, mask = int(net.network_address), int(net.netmask)
+    v4 = value >> 32 == 0xFFFF
+    if v4:
+        value, mask = value & 0xFFFFFFFF, mask & 0xFFFFFFFF
 
-def _go_ip_parse(v):
-    """Parse like ``net.ParseIP``: IPv4-mapped IPv6 collapses to the
-    IPv4 address (Go's To4 alignment); zones/garbage → None."""
-    try:
-        ip = ipaddress.ip_address(v)
-    except (ValueError, TypeError):
-        return None
-    if ip.version == 6 and ip.ipv4_mapped is not None:
-        return ip.ipv4_mapped
-    return ip
-
-
-def _go_named_pred(spec: str):
-    """The ``namedNetworks`` predicate table (network.go:44-55) over a
-    parsed ipaddress object, byte-faithful to the Go net.IP methods
-    (e.g. link_local_multicast v6 = ff?2::/16 on the scope nibble,
-    private v6 = fd00::/8 from the reference's ff00-masked constant)."""
-    v4bcast = ipaddress.ip_address("255.255.255.255")
-
-    def is_loopback(ip):
-        return ip.is_loopback
-
-    def is_unspecified(ip):
-        return int(ip) == 0
-
-    def is_ll_unicast(ip):
-        if ip.version == 4:
-            return ip in ipaddress.ip_network("169.254.0.0/16")
-        return ip in ipaddress.ip_network("fe80::/10")
-
-    def is_ll_multicast(ip):
-        if ip.version == 4:
-            return ip in ipaddress.ip_network("224.0.0.0/24")
-        b = ip.packed
-        return b[0] == 0xFF and (b[1] & 0x0F) == 0x02
-
-    def is_iface_multicast(ip):
-        if ip.version == 4:
-            return False
-        b = ip.packed
-        return b[0] == 0xFF and (b[1] & 0x0F) == 0x01
-
-    def is_multicast(ip):
-        return ip.is_multicast
-
-    def is_private(ip):
-        if ip.version == 4:
-            return any(ip in ipaddress.ip_network(c) for c in
-                       ("10.0.0.0/8", "172.16.0.0/12", "192.168.0.0/16"))
-        return ip.packed[0] == 0xFD  # privateIPv6: fd00::/8
-
-    def is_global_unicast(ip):
-        return not (ip == v4bcast or is_unspecified(ip)
-                    or is_loopback(ip) or is_multicast(ip)
-                    or is_ll_unicast(ip))
-
-    def is_public(ip):  # !isLocalOrPrivate (network.go:237-245)
-        return not (is_private(ip) or is_loopback(ip)
-                    or is_unspecified(ip) or ip == v4bcast
-                    or is_ll_unicast(ip) or is_ll_multicast(ip)
-                    or is_iface_multicast(ip))
-
-    table = {
-        "loopback": is_loopback,
-        "unspecified": is_unspecified,
-        "link_local_unicast": is_ll_unicast,
-        "link_local_multicast": is_ll_multicast,
-        "interface_local_multicast": is_iface_multicast,
-        "multicast": is_multicast,
-        "private": is_private,
-        "unicast": is_global_unicast,
-        "global_unicast": is_global_unicast,
-        "public": is_public,
-    }
-    return table[spec]
+    def words(n: int) -> List[int]:
+        return [(n >> s) & 0xFFFFFFFF for s in (96, 64, 32, 0)]
+    return v4, words(mask), words(value)
 
 
-def _ip_pred_udf(pred):
-    """Arrow-batched boolean UDF over an IP string column; unparseable
-    values are false (Go: ParseIP nil → no match). pandas is loaded
-    only when a plan needs this kernel."""
-    import pandas as pd
-
-    def _m(it):
-        def one(v):
-            ip = _go_ip_parse(v)
-            return bool(pred(ip)) if ip is not None else False
-        for s in it:
-            yield s.map(one)
-    # pandas_udf reads its kind from the hints; written in the
-    # signature they would be strings naming a module-level ``pd``
-    _m.__annotations__ = {"it": Iterator[pd.Series],
-                          "return": Iterator[pd.Series]}
-    return F.pandas_udf(_m, "boolean")
+def _in_table(w: Column, specs) -> Column:
+    """Words ``w`` in any network of ``specs`` (CIDRs, names of
+    ``_NAMED``): one ``exists`` over a literal table."""
+    rows = [_net_row(n) for s in specs for n in _NAMED.get(s, [s])]
+    table = F.array(*[
+        F.struct(F.lit(v4).alias("v4"),
+                 F.array(*map(F.lit, m)).cast("array<bigint>").alias("m"),
+                 F.array(*map(F.lit, v)).cast("array<bigint>").alias("v"))
+        for v4, m, v in rows])
+    is4 = _is4(w)
+    return F.exists(table, lambda r: (r["v4"] == is4) & _all([
+        w[i].bitwiseAND(r["m"][i]) == r["v"][i] for i in range(4)]))
 
 
-def cidr_match(col: Column, cidr: str) -> Column:
-    """True when the IP string in ``col`` is inside ``cidr``.
+def _network_test(specs):
+    """A network list → a test of :func:`_ip_words`: true when the
+    address is in any of them (``unicast``, ``global_unicast`` and
+    ``public`` hold what is outside their table), false on null."""
+    inside = [s for s in specs if s not in _OUTSIDE]
+    outside = sorted({tuple(_OUTSIDE[s]) for s in specs if s in _OUTSIDE})
 
-    IPv4 CIDR: compile-time mask arithmetic — one AND + EQ per row,
-    pure JVM, so the filter stays pushdown-eligible with zero Python
-    in the plan (the hot-path property; known divergence: Go's ParseIP
-    folds ``::ffff:a.b.c.d`` spellings into v4, which this fast path
-    does not see — the *named* network specs do handle them via the
-    Go-predicate kernel). IPv6 CIDR: Arrow kernel membership (``::``
-    expansion and v6 group math don't reduce to column arithmetic)."""
-    net = ipaddress.ip_network(cidr, strict=False)
-    if net.version == 4:
-        return _v4_cidr_col(col, net)
-
-    def in_net6(ip, _n=net):
-        return ip.version == 6 and ip in _n
-    return _ip_pred_udf(in_net6)(col)
-
-
-def _v4_cidr_col(col: Column, net) -> Column:
-    """Shared v4-CIDR membership: rlike validity + compile-time
-    mask/base arithmetic (used by cidr_match AND the network_any
-    parts, so v4 semantics can't drift between them)."""
-    mask = int(net.netmask)
-    base = int(net.network_address)
-    valid = col.rlike(_IPV4_RE)
-    return valid & (ip_to_long(col).bitwiseAND(F.lit(mask))
-                    == F.lit(base))
-
-
-def _network_one_parts(col: Column, spec: str):
-    """One network spec → ``(jvm_part, python_pred)``.
-
-    ``jvm_part`` (or None) is the pure-JVM membership column for
-    dotted-quad rows; ``python_pred`` (or None) is the Go-semantics
-    predicate for everything else (IPv6, v4-mapped spellings). Callers
-    combine: ``jvm | (~valid4 & kernel(pred))`` — and
-    :func:`network_any` merges the predicates of MANY specs into ONE
-    Arrow kernel so an N-network processor costs one Python node per
-    column, not N."""
-    if spec in _NAMED_V4 or spec in ("unicast", "global_unicast",
-                                     "public"):
-        pred = _go_named_pred(spec)
-        valid4 = col.rlike(_IPV4_RE)
-        if spec in _NAMED_V4:
-            jvm = None
-            for c in _NAMED_V4[spec]:
-                n = ipaddress.ip_network(c)
-                mm = (ip_to_long(col).bitwiseAND(F.lit(int(n.netmask)))
-                      == F.lit(int(n.network_address)))
-                jvm = mm if jvm is None else (jvm | mm)
-            jvm = (valid4 & jvm) if jvm is not None else F.lit(False)
-        elif spec in ("unicast", "global_unicast"):
-            bad = None
-            for name in ("unspecified", "loopback", "multicast",
-                         "link_local_unicast"):
-                for c in _NAMED_V4[name]:
-                    n = ipaddress.ip_network(c)
-                    mm = (ip_to_long(col)
-                          .bitwiseAND(F.lit(int(n.netmask)))
-                          == F.lit(int(n.network_address)))
-                    bad = mm if bad is None else (bad | mm)
-            bad = bad | (col == "255.255.255.255")
-            jvm = valid4 & ~bad
-        else:  # public = !isLocalOrPrivate (network.go:237-245)
-            bad = None
-            for name in ("private", "loopback", "link_local_unicast",
-                         "link_local_multicast", "unspecified"):
-                for c in _NAMED_V4[name]:
-                    n = ipaddress.ip_network(c)
-                    mm = (ip_to_long(col)
-                          .bitwiseAND(F.lit(int(n.netmask)))
-                          == F.lit(int(n.network_address)))
-                    bad = mm if bad is None else (bad | mm)
-            bad = bad | (col == "255.255.255.255")
-            jvm = valid4 & ~bad
-        return jvm, pred
-    net = ipaddress.ip_network(spec, strict=False)
-    if net.version == 4:
-        return _v4_cidr_col(col, net), None
-
-    def in_net6(ip, _n=net):
-        return ip.version == 6 and ip in _n
-    return None, in_net6
-
-
-def network_any(col: Column, specs) -> Column:
-    """Membership in ANY of the given networks/named classes, with at
-    most ONE Arrow kernel regardless of how many specs need the Go
-    predicate — dotted-quad rows stay pure JVM throughout."""
-    parts = [_network_one_parts(col, s) for s in specs]
-    jvm = [j for j, _ in parts if j is not None]
-    preds = [p for _, p in parts if p is not None]
-    out = _any(jvm) if jvm else F.lit(False)
-    if preds:
-        def combined(ip, _ps=tuple(preds)):
-            return any(p(ip) for p in _ps)
-        valid4 = col.rlike(_IPV4_RE)
-        # non-dotted-quad rows (IPv6, v4-mapped, garbage) go through
-        # the Go-predicate kernel; dotted-quad rows stay pure JVM
-        out = out | (~valid4.eqNullSafe(True)
-                     & _ip_pred_udf(combined)(col))
-    return out
+    def test(w: Column) -> Column:
+        hits = [_in_table(w, inside)] if inside else []
+        hits += [~_in_table(w, o) for o in outside]
+        return w.isNotNull() & _any(hits) if hits else F.lit(False)
+    return test
 
 
 # ---------------------------------------------------------------- helpers
@@ -318,6 +228,13 @@ def _flatten_field_paths(body: Mapping, stop=None) -> dict:
         else:
             out[k] = v
     return out
+
+
+def _present(c: Column, test: Column) -> Column:
+    """``test``, false where the field is null: Go's ``GetValue`` fails
+    on a missing key and the condition is false, so ``not`` of it is
+    true (``contains``, ``regexp``, ``range``, ``network``)."""
+    return c.isNotNull() & test
 
 
 def _all(cols: Sequence[Column]) -> Column:
@@ -392,13 +309,15 @@ def compile_condition(cfg: Mapping[str, Any],
                 # closure factory keeps the lambda unary for Catalyst
                 def _elem_contains(needle):
                     return lambda x: x.contains(needle)
-                cols.append(F.exists(c, _elem_contains(str(v))))
+                test = F.exists(c, _elem_contains(str(v)))
             else:
-                cols.append(c.contains(str(v)))
+                test = c.contains(str(v))
+            cols.append(_present(c, test))
         return _all(cols)
 
     if kind == "regexp":
-        return _all([F.col(f).rlike(str(p)) for f, p in body.items()])
+        return _all([_present(F.col(f), F.col(f).rlike(str(p)))
+                     for f, p in body.items()])
 
     if kind == "range":
         ops = {"gte": "__ge__", "gt": "__gt__", "lte": "__le__", "lt": "__lt__"}
@@ -411,7 +330,8 @@ def compile_condition(cfg: Mapping[str, Any],
             for op, v in spec.items():
                 if op not in ops:
                     raise ValueError(f"unknown range op {op!r}")
-                cols.append(getattr(F.col(f), ops[op])(F.lit(float(v))))
+                cols.append(_present(F.col(f), getattr(
+                    F.col(f), ops[op])(F.lit(float(v)))))
         return _all(cols)
 
     if kind == "has_fields":
@@ -427,11 +347,8 @@ def compile_condition(cfg: Mapping[str, Any],
         return _all(cols)
 
     if kind == "network":
-        # ONE Arrow kernel per field covering every named/v6 spec —
-        # not one per spec (see network_any)
-        cols = []
-        for f, specs in body.items():
-            cols.append(network_any(F.col(f), _as_list(specs)))
-        return _all(cols)
+        # one address parse per field, whatever the number of specs
+        return _all([_let(_ip_words(F.col(f)), _network_test(_as_list(s)))
+                     for f, s in body.items()])
 
     raise ValueError(f"unknown condition kind {kind!r}")

@@ -111,12 +111,9 @@ V5_FORMAT = ("version account-id interface-id srcaddr dstaddr "
              "srcport dstport protocol packets bytes start end "
              "action log-status")
 
-# reuse the strict anchored IP shapes from the conditions module
-# (documented there as mirroring Go net.ParseIP — the reference's
-# types.go validates with exactly that); a home-rolled loose regex
-# here accepted 999.999.999.999 and bare ':'
-from ..conditions import _IPV4_RE as _IPV4           # noqa: E402
-from ..conditions import _IPV6_RE as _IPV6           # noqa: E402
+# an address field is valid where the conditions module's address
+# parse reads it (net.ParseIP, which the reference's types.go uses)
+from ..conditions import _is_ip                      # noqa: E402
 
 
 def parse_vpc_format(format_str: str) -> List[Tuple[str, str]]:
@@ -147,7 +144,7 @@ def _typed(raw: Column, dtype: str) -> Column:
     elif dtype == "timestamp":
         v = F.timestamp_seconds(raw.try_cast("long"))
     elif dtype == "ip":
-        v = F.when(raw.rlike(_IPV4) | raw.rlike(_IPV6), raw)
+        v = F.when(_is_ip(raw), raw)
     else:
         v = raw
     return F.when(~miss, v)
@@ -159,7 +156,7 @@ def _ok(raw: Column, dtype: str) -> Column:
     if dtype in ("int", "long", "timestamp"):
         good = raw.try_cast("long").isNotNull()
     elif dtype == "ip":
-        good = raw.rlike(_IPV4) | raw.rlike(_IPV6)
+        good = _is_ip(raw)
     else:
         good = F.lit(True)
     return miss | good

@@ -232,16 +232,15 @@ def convert(cfg: Mapping[str, Any]):
     ``fail_on_error`` the reference rolls back — here nulls + tag.
     ``ip`` VALIDATES like the reference's ``net.ParseIP`` (convert.go
     "value is not a valid IP address"): non-IP input nulls out instead
-    of passing through — v4 by mask regex, v6 by the STRICT textual
-    class mirroring net.ParseIP (the grok IPV6 class is looser and
-    accepts e.g. '1:2:3'); JVM-side, no UDF."""
+    of passing through, by the rules of the address parse every
+    network test runs (``conditions._is_ip``); JVM-side, no UDF."""
     fields = cfg.get("fields", [])
     mode = cfg.get("mode", "copy")
     _types = {"integer": "int", "long": "bigint", "float": "float",
               "double": "double", "string": "string", "boolean": "boolean"}
 
     def make(df: DataFrame) -> ProcResult:
-        from ..conditions import _IPV4_RE, _IPV6_RE
+        from ..conditions import _is_ip
         assigns, drops = {}, []
         for spec in fields:
             src = spec["from"]
@@ -251,8 +250,7 @@ def convert(cfg: Mapping[str, Any]):
                 continue
             if typ == "ip":
                 col = F.col(src).cast("string")
-                valid = col.rlike(_IPV4_RE) | col.rlike(_IPV6_RE)
-                assigns[dst] = F.when(valid, col)
+                assigns[dst] = F.when(_is_ip(col), col)
             else:
                 assigns[dst] = F.col(src).try_cast(_types[typ])
             if mode == "rename" and dst != src:

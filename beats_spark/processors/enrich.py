@@ -259,12 +259,14 @@ def cidr_enrich(
     """Longest-prefix-match CIDR enrichment — attach ASN / network /
     geo attributes to every event by its IPv4 address, the engine
     form of the geoip-style lookups Beats defers to the backend
-    (``add_fields``/geoip enrich family; the v4 mask arithmetic is
-    shared with ``conditions._v4_cidr_col`` so membership semantics
-    cannot drift). ``prefixes`` is a small dim table with a
-    ``cidr_col`` like ``10.0.0.0/8`` plus attribute columns; rows
-    whose IP matches several prefixes get the LONGEST one (routing
-    semantics). Non-IPv4 / unmatched rows keep NULL attributes.
+    (``add_fields``/geoip enrich family). The event's address is read
+    by the parse every network test runs (``conditions._ip_words``):
+    ``::ffff:a.b.c.d`` is the IPv4 address Go's ``To4`` gives, and a
+    string ``net.ParseIP`` rejects has no key. ``prefixes`` is a
+    small dim table with a ``cidr_col`` like ``10.0.0.0/8`` plus
+    attribute columns; rows whose IP matches several prefixes get the
+    LONGEST one (routing semantics). Non-IPv4 / unmatched rows keep
+    NULL attributes.
 
     Scale shape — the routing-table trick, not a range join: group
     the dim by masklen; for each masklen present (≤ 33 of them),
@@ -287,7 +289,7 @@ def cidr_enrich(
     dim short-circuits to NULL attach columns (``coalesce`` over an
     empty list is ill-defined).
     """
-    from ..conditions import _IPV4_RE, ip_to_long
+    from ..conditions import _ip_words, _is4, _let, ip_to_long
 
     attach = list(attach) if attach is not None else [
         c for c in prefixes.columns if c != cidr_col]
@@ -336,10 +338,8 @@ def cidr_enrich(
     def _mask(m):
         return ((0xFFFFFFFF << (32 - m)) & 0xFFFFFFFF) if m else 0
 
-    ip = F.col(ip_col)
-    valid = ip.rlike(_IPV4_RE)
-    out = df.withColumn("__ipl",
-                        F.when(valid, ip_to_long(ip)))
+    out = df.withColumn("__ipl", _let(_ip_words(F.col(ip_col)),
+                                      lambda w: F.when(_is4(w), w[3])))
     joined = out
     for m in mlens:
         mask = _mask(m)

@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
 from . import ProcResult, register
-from ..conditions import cidr_match, ip_to_long
+from ..conditions import ip_to_long
 
 __all__ = ["community_id_col", "community_id_md5_col", "be_bytes"]
 
@@ -121,33 +121,33 @@ def add_network_direction(cfg: Mapping[str, Any]):
     ``internal_networks`` accepts CIDRs AND named networks ("private",
     "loopback", …) like the reference; an unparseable or empty IP on
     either side yields NO direction (the reference's early return),
-    not "external"."""
-    from ..conditions import _IPV4_RE, _IPV6_RE, network_any
+    not "external". Each side's address is parsed once
+    (``conditions._ip_words``)."""
+    from ..conditions import _ip_words, _let, _network_test
     src = cfg.get("source", "source_ip")
     dst = cfg.get("destination", "destination_ip")
     target = cfg.get("target", "network_direction")
-    nets = list(cfg.get("internal_networks", []))
-    _v6_re = _IPV6_RE
+    internal = _network_test(cfg.get("internal_networks", []))
+
+    def inside(name: str) -> Column:
+        # null where the address does not parse. Each side is tested
+        # in its own lambda: Catalyst takes two same-shaped lambdas
+        # that differ only in an outer lambda variable for one
+        # expression, and drops the second from an AND.
+        return _let(_ip_words(F.col(name)),
+                    lambda w: F.when(w.isNotNull(), internal(w)))
+
+    def direction(s: Column, d: Column) -> Column:
+        return (F.when(s.isNull() | d.isNull(), F.lit(None))
+                 .when(s & d, "internal")
+                 .when(s, "outbound")
+                 .when(d, "inbound")
+                 .otherwise("external"))
 
     def make(df: DataFrame) -> ProcResult:
-        def member(col: Column) -> Column:
-            # ONE Arrow kernel per side covering every named/v6 spec
-            # (N specs used to plan N Python nodes per column)
-            if not nets:
-                return F.lit(False)
-            return F.coalesce(network_any(col, nets), F.lit(False))
-
-        def valid(col: Column) -> Column:
-            return F.coalesce(col.rlike(_IPV4_RE) | col.rlike(_v6_re),
-                              F.lit(False))
-        s, d = F.col(src), F.col(dst)
-        s_in, d_in = member(s), member(d)
-        col = (F.when(~valid(s) | ~valid(d), F.lit(None))
-                .when(s_in & d_in, "internal")
-                .when(s_in, "outbound")
-                .when(d_in, "inbound")
-                .otherwise("external"))
-        return ProcResult(assigns={target: col})
+        return ProcResult(assigns={target: _let(
+            inside(src),
+            lambda s: _let(inside(dst), lambda d: direction(s, d)))})
     return make
 
 

@@ -723,11 +723,11 @@ FROM ips GROUP BY bucket
 """)
 def network_condition(spark, sf_dir):
     """network condition: IP-in-CIDR / named-network membership —
-    dotted-quad rows via compile-time mask arithmetic, IPv6 rows
-    (fd00::/8 private per the reference's privateIPv6 constant) via
-    the Go-predicate Arrow kernel (conditions/network.go:30-55).
-    The decimal suffix is a valid hex group, so every generated v6
-    string parses."""
+    every row, v4 or v6, read by the one Catalyst address parse and
+    tested against the named networks' literal table (fd00::/8
+    private per the reference's privateIPv6 constant;
+    conditions/network.go:30-55). The decimal suffix is a valid hex
+    group, so every generated v6 string parses."""
     ev = _t(spark, sf_dir, "events")
     b = (F.col("user_id") % 6).cast("int")
     oct4 = (F.col("event_id") % 200).cast("string")
